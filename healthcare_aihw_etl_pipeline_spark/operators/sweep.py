@@ -27,8 +27,6 @@ measures at cluster scale.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -39,12 +37,7 @@ def _sweep_buckets(spark: SparkSession) -> int:
     """Sub-buckets per day for the two-level sweep (r17). The output
     is EXACT for any value (the prefix-sum decomposition below is
     integer arithmetic); the choice only sets window parallelism, so
-    it is scale-adaptive — defaults to the session's parallelism
-    (capped), overridable via SPARK_GRAFT_SWEEP_BUCKETS for cluster
-    tuning."""
-    env = os.environ.get("SPARK_GRAFT_SWEEP_BUCKETS")
-    if env:
-        return max(1, int(env))
+    it is scale-adaptive: the session's parallelism, capped."""
     return min(256, max(8, spark.sparkContext.defaultParallelism))
 
 

@@ -1,19 +1,11 @@
-"""Named query surface. Importing this package registers all queries.
-
-Registration order is curated: the driver's correctness harness samples a
-bounded window of the registry (first ~50 entries). Each round the window
-is rotated — new or newly-oracled queries lead, followed by whichever
-verified cohort is due a regression sweep (round 15 pins the three new
-queries — the served t-closeness twin and the VERIFIED MinHash pair —
-then every plan or shared expression changed this round — graph-ANN
-edge symmetrization, assoc_rules apriori prune + checkpoint + decimal
-lift, the markov sentinel guard, rdd/bh_fdr NULLIF denominators, the
-conditional ensure_min_splits — then the round-7 and round-8 cohorts,
-the oldest window evidence since CORRECTNESS_r07/r08); everything else
-sits behind the window with its cumulative driver-side record standing.
-The full registry is additionally swept in-round by scripts/driver_sim.py
-and committed as CORRECTNESS_FULL_r{N}.json.
+"""Named query surface: importing this package registers every query,
+and ``ORDER`` fixes the order of ``REGISTRY``. Put a new or re-planned
+query near the front of ``ORDER``, because the driver's correctness
+harness grades only the first ~50 entries, while scripts/driver_sim.py
+sweeps the whole registry.
 """
+
+from collections import Counter
 
 from healthcare_aihw_etl_pipeline_spark.plans.registry import REGISTRY, Query, register
 
@@ -36,60 +28,76 @@ from healthcare_aihw_etl_pipeline_spark.plans import round14_queries  # noqa: F4
 from healthcare_aihw_etl_pipeline_spark.plans import round14b_queries  # noqa: F401,E402
 from healthcare_aihw_etl_pipeline_spark.plans import round15_queries  # noqa: F401,E402
 
-# Names already green in a driver-side CORRECTNESS report. Everything
-# NOT in this list is promoted ahead of it so the driver's window reaches the
-# yet-unverified families first. Keep this list in sync when a round's
-# CORRECTNESS report lands.
-#
-# Rounds 1–3 verified the first 50 registrations (reference_queries);
-# round 4's rotated window (CORRECTNESS_r04.json, 50/50 green) verified
-# the LLM-pipeline family, the round-3 TPC-H shapes, events_typed_agg and
-# ingest_clean_admissions.
-_DRIVER_GREEN_R3 = [
+# The first 50 names are the driver's graded window: the queries whose
+# plans or shared expressions changed most recently, then the cohorts
+# with the oldest window evidence. The rest stand on the full-registry
+# sweep. The sampled cost guard in tests/test_bench_guard.py takes every
+# 6th name, so reordering also changes what it samples.
+ORDER: tuple[str, ...] = (
+    # graded window
+    "t_closeness_audit_served", "minhash_verified_dup_clusters_portable",
+    "minhash_verified_dup_clusters", "graph_ann_top10", "assoc_rules_top20",
+    "markov_attribution", "rdd_order_value", "bh_fdr_nation_tests",
+    "dup_span_stats", "simhash_wide_dup_clusters", "hll_rollup_distinct_users",
+    "theta_sketch_audience_overlap", "theta_retention_day7",
+    "json_props_regexp_agg", "minhash_dup_clusters_portable",
+    "simhash_dup_clusters_portable", "ann_qlsh_top10_portable",
+    "k_anonymity_audit", "cms_token_heavy_hitters", "token_shard_plan",
+    "daily_value_interpolated", "copurchase_2hop_reach", "value_drift_psi",
+    "priority_status_mutual_info", "benford_first_digit_audit",
+    "ivm_join_snapshot", "daily_revenue_autocorr", "dow_revenue_seasonality",
+    "last_touch_attribution", "embedding_cluster_keep_best",
+    "cluster_aware_split", "session_pattern_match", "revenue_changepoint",
+    "linear_decay_attribution", "ab_value_t_statistic", "quality_decile_lift",
+    "priority_status_chi2", "bm25_search_top10", "inverted_index_top20",
+    "phrase_search_top10", "weighted_sample_orders", "scd2_user_tier_history",
+    "scd2_temporal_join", "data_quality_audit", "quantile_sketch_prices",
+    "doc_bigram_nll_top20", "supplier_balance_distribution",
+    "copurchase_triangle_count", "pivot_dynamic_priority",
+    "bm25_eval_screen_top3",
+    # rows-only, not yet in a window
+    "winnow_shared_fingerprints_fast",
+    # verified in earlier windows, in registration order
     "revenue_by_nation", "top_nation", "pricing_summary", "filter_in_agg",
     "distinct_event_types", "count_distinct_years", "top10_brands_by_revenue",
     "pivot_priority_status", "unpivot_lineitem_measures", "union_parties",
     "pct_change_trend", "yearly_revenue_window", "top3_orders_per_priority",
     "customers_without_orders", "customer_order_stats", "json_props_agg",
-    "events_hourly_window", "scalar_clean_norm", "range_join_ship_lag",
-    "rollup_returnflag_status", "cube_year_status", "customers_with_orders_semi",
-    "events_sliding_window", "monthly_revenue", "distinct_status_priority",
-    "value_percentiles", "lineitem_stats", "string_features",
-    "funnel_signup_view_purchase", "retention_cohorts", "grouping_sets_revenue",
-    "customer_balance_quartiles", "rolling_7day_revenue", "exact_value_variance",
+    "events_typed_agg", "events_hourly_window", "scalar_clean_norm",
+    "range_join_ship_lag", "rollup_returnflag_status", "cube_year_status",
+    "customers_with_orders_semi", "events_sliding_window", "monthly_revenue",
+    "ewma_daily_revenue", "distinct_status_priority", "value_percentiles",
+    "lineitem_stats", "string_features", "funnel_signup_view_purchase",
+    "retention_cohorts", "grouping_sets_revenue", "customer_balance_quartiles",
+    "rolling_7day_revenue", "exact_value_variance",
     "customers_above_avg_balance", "daily_revenue_gap_filled",
-    "small_quantity_part_revenue", "orders_fully_shipped", "promo_revenue_share",
-    "sole_problem_supplier", "status_listagg_by_priority",
-    "customer_order_histogram", "top_volume_orders", "cheapest_supplier_per_part",
-    "idle_rich_customers", "important_parts_by_share", "shipping_priority_top10",
+    "small_quantity_part_revenue", "orders_fully_shipped",
+    "promo_revenue_share", "sole_problem_supplier",
+    "status_listagg_by_priority", "customer_order_histogram",
+    "top_volume_orders", "cheapest_supplier_per_part", "idle_rich_customers",
+    "important_parts_by_share", "shipping_priority_top10",
     "cross_nation_shipping", "returned_item_top_customers",
-    "disjunctive_brand_revenue",
-    # CORRECTNESS_r04.json — rotated window, 50/50 green.
-    "forecast_discount_revenue", "order_priority_check",
-    "local_supplier_volume", "nation_market_share", "product_type_profit",
-    "late_shipment_priority_mix", "top_revenue_suppliers",
-    "supplier_variety_by_part_class", "concentrated_recent_suppliers",
-    "zorder_layout_stats", "events_typed_agg",
-    "dedup_exact_stats", "dedup_prefix_keepers", "text_token_stats",
-    "embedding_norms", "ann_cosine_top10", "embedding_near_dup_top20",
+    "disjunctive_brand_revenue", "forecast_discount_revenue",
+    "order_priority_check", "local_supplier_volume", "nation_market_share",
+    "product_type_profit", "late_shipment_priority_mix",
+    "top_revenue_suppliers", "supplier_variety_by_part_class",
+    "concentrated_recent_suppliers", "zorder_layout_stats",
+    "mode_ship_priority", "dedup_exact_stats", "dedup_prefix_keepers",
+    "text_token_stats", "embedding_norms", "ann_cosine_top10", "ann_lsh_top10",
+    "embedding_near_dup_top20", "minhash_dup_clusters", "simhash_dup_clusters",
     "bpe_token_totals", "text_quality_profile", "fingerprint_dup_groups",
     "events_session_window", "dedup_transitive_clusters", "asof_purchase_lag",
     "purchase_click_window", "split_contamination", "doc_chunks",
-    "hash_split_assign", "top_tokens", "returning_users",
+    "hash_split_assign", "top_tokens", "returning_users", "ivf_cosine_top10",
     "stratified_sample_stats", "bigram_top20", "tfidf_top20",
-    "long_token_profile", "churned_users", "pii_redaction_stats",
-    "token_position_profile", "source_token_entropy", "gopher_quality_flags",
-    "repetition_profile", "corpus_curation_funnel", "dedup_keep_best",
-    "oov_rate_by_source", "sequence_packing", "domain_quota_sample",
-    "multimodal_byte_profile", "chunk_dedup_reassembly", "incremental_dedup",
-    "mixture_weights", "embedding_centroid_per_label",
-    "ingest_clean_admissions",
-    # CORRECTNESS_r05.json — rotated window, 45/45 oracle queries hash-green;
-    # the five hash-seeded approximate ops recorded their rows-only check.
-    "ewma_daily_revenue", "mode_ship_priority", "char_diversity_profile",
-    "levenshtein_blocked_pairs", "bipartite_pagerank_top20",
-    "ann_lsh_top10", "minhash_dup_clusters", "simhash_dup_clusters",
-    "ivf_cosine_top10", "approx_event_profile",
+    "approx_event_profile", "long_token_profile", "churned_users",
+    "pii_redaction_stats", "token_position_profile", "source_token_entropy",
+    "gopher_quality_flags", "repetition_profile", "corpus_curation_funnel",
+    "dedup_keep_best", "oov_rate_by_source", "sequence_packing",
+    "domain_quota_sample", "multimodal_byte_profile", "chunk_dedup_reassembly",
+    "incremental_dedup", "mixture_weights", "embedding_centroid_per_label",
+    "char_diversity_profile", "levenshtein_blocked_pairs",
+    "bipartite_pagerank_top20", "ingest_clean_admissions",
     "duplicate_ngram_top20", "jaccard_pair_similarity",
     "part_pair_cooccurrence", "top_session_paths", "value_histogram",
     "event_volume_zscore", "customer_segment_setops",
@@ -98,136 +106,22 @@ _DRIVER_GREEN_R3 = [
     "time_rollup_revenue", "event_type_transitions", "customer_revenue_gini",
     "salted_event_type_totals", "doc_length_quartiles_by_source",
     "events_in_prior_hour", "event_type_reconciliation",
-]
-
-
-# CORRECTNESS_r06.json: the round-6 window, 47/50 hash-green; the three
-# sketch queries recorded `no_oracle` there and have since been made
-# hash-checkable (portable md5 sketches), so they are NOT folded into
-# the green list — they re-verify in the r7 window below.
-_DRIVER_GREEN_R6 = [
     "numeric_profile_lineitem", "frequent_values_orders",
     "lineitem_correlation_matrix", "orders_date_islands",
     "customer_acquisition_curve", "nation_revenue_share",
     "order_value_percentiles_by_status", "order_value_deciles",
-    "customers_above_own_avg", "first_last_order_shift",
-    "event_session_stats", "lapsed_part_suppliers",
-    "revenue_drawdown_by_year", "embedding_quantization_error",
-    "vocab_growth_curve", "txlog_delete_update_snapshot",
-    "lang_id_distribution", "rolling_7day_distinct_users",
-    "top_orders_with_ties", "order_vs_peers_leave_one_out",
-    "brand_price_tiers", "user_event_type_map_json",
-    "quantity_price_covariance", "weighted_median_price",
-    "mad_outlier_orders", "event_type_run_lengths",
-]
-_DRIVER_GREEN_R3 = _DRIVER_GREEN_R3 + _DRIVER_GREEN_R6
-
-# CORRECTNESS_r07.json: the round-7 window, 50/50 hash-green — the 7
-# newly-portable sketch/ANN/JSON queries plus the first 43 of the
-# rounds-1–3 regression sweep. The 7 round-1–3 names the window didn't
-# reach (cheapest_supplier_per_part .. disjunctive_brand_revenue) are
-# re-pinned in the r8 window below.
-_DRIVER_GREEN_R7 = [
-    "hll_rollup_distinct_users", "theta_sketch_audience_overlap",
-    "theta_retention_day7", "json_props_regexp_agg",
-    "minhash_dup_clusters_portable", "simhash_dup_clusters_portable",
-    "ann_qlsh_top10_portable",
-]
-_DRIVER_GREEN_R3 = _DRIVER_GREEN_R3 + _DRIVER_GREEN_R7
-
-# CORRECTNESS_r08.json: the round-8 window, 50/50 green on all three
-# checks (rows + schema + hash) — the 33 round-8 queries, the seven
-# rounds-1–3 tail names, and the first ten of the round-4 cohort.
-_DRIVER_GREEN_R8 = [
-    "k_anonymity_audit", "cms_token_heavy_hitters", "token_shard_plan",
-    "daily_value_interpolated", "copurchase_2hop_reach",
-    "value_drift_psi", "priority_status_mutual_info",
-    "benford_first_digit_audit", "ivm_join_snapshot",
-    "daily_revenue_autocorr", "dow_revenue_seasonality",
-    "last_touch_attribution", "embedding_cluster_keep_best",
-    "cluster_aware_split", "session_pattern_match", "revenue_changepoint",
-    "linear_decay_attribution", "ab_value_t_statistic",
-    "quality_decile_lift", "priority_status_chi2",
-    "bm25_search_top10", "inverted_index_top20", "phrase_search_top10",
-    "weighted_sample_orders",
-    "scd2_user_tier_history", "scd2_temporal_join", "data_quality_audit",
-    "quantile_sketch_prices", "doc_bigram_nll_top20",
-    "supplier_balance_distribution", "copurchase_triangle_count",
-    "pivot_dynamic_priority", "bm25_eval_screen_top3",
-]
-_DRIVER_GREEN_R3 = _DRIVER_GREEN_R3 + _DRIVER_GREEN_R8
-
-# CORRECTNESS_r09.json: the round-9 window, 50/50 green on all three
-# checks — the six round-9 queries plus the round-4 cohort tail from
-# events_typed_agg through ingest_clean_admissions and the first five
-# round-5 names (the rest of the round-5 cohort rolled forward to r10).
-_DRIVER_GREEN_R9 = [
+    "customers_above_own_avg", "first_last_order_shift", "event_session_stats",
+    "lapsed_part_suppliers", "revenue_drawdown_by_year",
+    "embedding_quantization_error", "vocab_growth_curve",
+    "txlog_delete_update_snapshot", "lang_id_distribution",
+    "rolling_7day_distinct_users", "top_orders_with_ties",
+    "order_vs_peers_leave_one_out", "brand_price_tiers",
+    "user_event_type_map_json", "quantity_price_covariance",
+    "weighted_median_price", "mad_outlier_orders", "event_type_run_lengths",
     "kaplan_meier_conversion", "bloom_prune_orders",
-    "dp_noised_priority_counts", "ann_sq4_adc_top10",
-    "u_shaped_attribution", "dow_adjusted_anomalies",
-]
-_DRIVER_GREEN_R3 = _DRIVER_GREEN_R3 + _DRIVER_GREEN_R9
-
-# Queries the current round's correctness window MUST sample ahead of
-# everything else. Round 10 rotates per the r9 verdict: new round-10
-# queries lead, then the round-5 cohort tail the r9 window did not
-# reach (rolled forward), then the round-6 cohort — the oldest driver
-# evidence after the r9 sweep (DML/time-travel snapshot, sliding
-# distinct, language-ID, the round-6 TPC-H completions) — then the
-# sketch stores (HLL/theta/quantile), last driver-verified r7/r8.
-_MUST_VERIFY_R10: list[str] = [
-    # new this round
-    "audio_pcm_features", "ivm_full_outer_snapshot", "video_avi_features",
-    "hashed_feature_profile", "json_props_variant_agg",
-    # round-5 cohort tail — rolled forward from the r9 window
-    "bipartite_pagerank_top20",
-    "duplicate_ngram_top20", "jaccard_pair_similarity",
-    "part_pair_cooccurrence", "top_session_paths", "value_histogram",
-    "event_volume_zscore", "customer_segment_setops",
-    "price_quantity_regression", "lsh_bucket_histogram",
-    "supplier_balance_position", "regression_by_returnflag",
-    "time_rollup_revenue", "event_type_transitions", "customer_revenue_gini",
-    "salted_event_type_totals", "doc_length_quartiles_by_source",
-    "events_in_prior_hour", "event_type_reconciliation",
-    # sketch stores — placed INSIDE the ~50-entry driver window (the
-    # r9 verdict names them explicitly; with 54 pinned entries they
-    # must not sit at the tail)
-    "hll_rollup_distinct_users", "theta_sketch_audience_overlap",
-    "theta_retention_day7", "quantile_sketch_prices",
-    # round-6 cohort — oldest evidence, regression sweep
-    "numeric_profile_lineitem", "frequent_values_orders",
-    "lineitem_correlation_matrix", "orders_date_islands",
-    "customer_acquisition_curve", "nation_revenue_share",
-    "order_value_percentiles_by_status", "order_value_deciles",
-    "customers_above_own_avg", "first_last_order_shift",
-    "event_session_stats", "lapsed_part_suppliers",
-    "revenue_drawdown_by_year", "embedding_quantization_error",
-    "vocab_growth_curve", "txlog_delete_update_snapshot",
-    "lang_id_distribution", "rolling_7day_distinct_users",
-    "top_orders_with_ties", "order_vs_peers_leave_one_out",
-    "brand_price_tiers", "user_event_type_map_json",
-    # tail (may fall outside an exactly-50 window; re-verified by the
-    # committed full-registry sweep either way)
-    "quantity_price_covariance", "weighted_median_price",
-    "mad_outlier_orders", "event_type_run_lengths",
-]
-
-# CORRECTNESS_FULL_r10.json: the committed round-10 full-registry sweep
-# (205 queries, 200 hash-green, 0 failures) covered every name in the
-# r10 window above; treat them as green for the r11 rotation.
-_DRIVER_GREEN_R10 = list(_MUST_VERIFY_R10)
-_DRIVER_GREEN_R3 = _DRIVER_GREEN_R3 + _DRIVER_GREEN_R10
-
-# Round 11 rotated per the standing policy (new queries lead, then the
-# oldest driver evidence): the 24 new round-11/11b queries, then every
-# connected_components caller (embedding_cluster_keep_best,
-# cluster_aware_split, dedup_transitive_clusters — the shared operator
-# gained a bounded driver fast path that round), then the round-8
-# cohort — last driver-verified in CORRECTNESS_r08 and then the oldest
-# window evidence — then the round-7 portable-sketch family, then
-# r1-3 stalwarts to fill ~50.
-_MUST_VERIFY_R11: list[str] = [
-    # new this round
+    "dp_noised_priority_counts", "ann_sq4_adc_top10", "u_shaped_attribution",
+    "dow_adjusted_anomalies", "audio_pcm_features", "ivm_full_outer_snapshot",
+    "video_avi_features", "hashed_feature_profile", "json_props_variant_agg",
     "skyline_orders", "max_concurrent_sessions",
     "largest_remainder_allocation", "poisson_bootstrap_order_value",
     "kmeans_refine_clusters", "golden_record_customers", "twap_event_value",
@@ -239,279 +133,44 @@ _MUST_VERIFY_R11: list[str] = [
     "segmented_trend_changepoint", "wasserstein_daily_revenue",
     "gini_customer_revenue", "consistent_hash_resharding",
     "greedy_source_coverage", "stratified_att_matching",
-    "mann_whitney_order_values",
-    # connected_components changed this round — re-verify all callers
-    "embedding_cluster_keep_best", "cluster_aware_split",
-    "dedup_transitive_clusters",
-    # round-8 cohort (oldest window evidence)
-    "k_anonymity_audit", "cms_token_heavy_hitters", "token_shard_plan",
-    "daily_value_interpolated", "copurchase_2hop_reach", "value_drift_psi",
-    "priority_status_mutual_info", "benford_first_digit_audit",
-    "ivm_join_snapshot", "daily_revenue_autocorr", "dow_revenue_seasonality",
-    "last_touch_attribution", "session_pattern_match", "revenue_changepoint",
-    "linear_decay_attribution", "ab_value_t_statistic", "quality_decile_lift",
-    "priority_status_chi2", "bm25_search_top10", "inverted_index_top20",
-    "phrase_search_top10", "weighted_sample_orders", "scd2_user_tier_history",
-    "scd2_temporal_join", "data_quality_audit", "doc_bigram_nll_top20",
-    "supplier_balance_distribution", "copurchase_triangle_count",
-    "pivot_dynamic_priority", "bm25_eval_screen_top3", "zorder_layout_stats",
-    # round-7 portable-sketch family
-    "json_props_regexp_agg", "minhash_dup_clusters_portable",
-    "simhash_dup_clusters_portable", "ann_qlsh_top10_portable",
-    # r1-3 stalwarts (benched headline shapes)
-    "revenue_by_nation", "pricing_summary", "top_nation", "filter_in_agg",
-    "json_props_agg", "events_hourly_window", "top10_brands_by_revenue",
-]
-
-
-# CORRECTNESS_r11.json (50/50 green) + CORRECTNESS_FULL_r11.json (229
-# queries, 224 hash-green, 0 failures) covered every name in the r11
-# window; treat them as green for the r12 rotation.
-_DRIVER_GREEN_R11 = list(_MUST_VERIFY_R11)
-_DRIVER_GREEN_R3 = _DRIVER_GREEN_R3 + _DRIVER_GREEN_R11
-
-# Round 12 rotates per the standing policy (new queries lead, then the
-# oldest driver evidence): the eight new oracled round-12 queries, then
-# every query whose plan changed this round (the sweep pair + FIFO now
-# build on shared operators; the RRF/ANN probe gained a guarded
-# lookup), then the round-9 six — last driver-verified in
-# CORRECTNESS_r09, now the oldest window evidence — then the round-10
-# head (multimodal, IVM full-outer, hashed features, VARIANT), the
-# round-5 cohort tail, the sketch stores, and the round-6 cohort head
-# to fill ~50.
-_MUST_VERIFY_R12: list[str] = [
-    # new this round — all eight oracled additions
-    # (winnow_shared_fingerprints_fast is rows-only by design — it
-    # ships behind the window like the other fast paths)
-    "interval_sweep_profile", "cox_hazard_newton",
+    "mann_whitney_order_values", "interval_sweep_profile", "cox_hazard_newton",
     "logistic_newton_step", "bpe_merge_training", "roc_auc_order_age",
     "isotonic_calibration_by_age", "conformal_interval_price",
     "t_closeness_audit", "pca_power_component",
-    # plans changed this round — re-verify all callers
-    "max_concurrent_sessions", "interval_union_coverage",
-    "fifo_return_matching", "hybrid_rrf_fusion_top10", "ann_cosine_top10",
-    # round-9 six (oldest window evidence)
-    "kaplan_meier_conversion", "bloom_prune_orders",
-    "dp_noised_priority_counts", "ann_sq4_adc_top10",
-    "u_shaped_attribution", "dow_adjusted_anomalies",
-    # round-10 head
-    "audio_pcm_features", "ivm_full_outer_snapshot", "video_avi_features",
-    "hashed_feature_profile", "json_props_variant_agg",
-    # round-5 cohort tail (rolled through the r10 window)
-    "bipartite_pagerank_top20",
-    "duplicate_ngram_top20", "jaccard_pair_similarity",
-    "part_pair_cooccurrence", "top_session_paths", "value_histogram",
-    "event_volume_zscore", "customer_segment_setops",
-    "price_quantity_regression", "lsh_bucket_histogram",
-    "supplier_balance_position", "regression_by_returnflag",
-    "time_rollup_revenue", "event_type_transitions", "customer_revenue_gini",
-    "salted_event_type_totals", "doc_length_quartiles_by_source",
-    "events_in_prior_hour", "event_type_reconciliation",
-    # sketch stores
-    "hll_rollup_distinct_users", "theta_sketch_audience_overlap",
-    "theta_retention_day7", "quantile_sketch_prices",
-    # round-6 cohort head (fills to ~50)
-    "numeric_profile_lineitem", "frequent_values_orders",
-    "lineitem_correlation_matrix", "orders_date_islands",
-    "customer_acquisition_curve", "nation_revenue_share",
-    "order_value_percentiles_by_status",
-]
-
-
-# CORRECTNESS_r12.json (50/50 green on rows+schema+hash) +
-# CORRECTNESS_FULL_r12.json (239 queries, 233 hash-green, 6 rows-only
-# by design, 0 failures) covered every name in the r12 window; treat
-# them as green for the r13 rotation.
-_DRIVER_GREEN_R12 = list(_MUST_VERIFY_R12)
-_DRIVER_GREEN_R3 = _DRIVER_GREEN_R3 + _DRIVER_GREEN_R12
-
-# Round 13 rotates per the standing policy (new queries lead, then the
-# oldest driver evidence): the five new oracled round-13 queries
-# (silver-served sweep twins, kNN-graph construction, unigram-LM
-# pruning), then every query whose plan or oracle changed this round
-# (Cox's fused descending-cumulative risk moments, the conformal
-# oracle's exact BIGINT moments, the sweep trio refactored onto the
-# shared *_from_segments bodies), then the round-4 cohort — last
-# driver-verified in CORRECTNESS_r09, now the oldest window evidence —
-# then the round-6 cohort tail (last verified in the r10 window) to
-# fill ~50.
-_MUST_VERIFY_R13: list[str] = [
-    # new this round
-    "ks_two_sample_value", "brier_decomposition", "zipf_slope_tokens",
-    "jl_projection_top10", "sprt_ab_decision", "ams_f2_tokens",
-    "woe_iv_segments", "cdc_chunk_stats", "zipf_slope_tokens_served",
-    "ams_f2_tokens_served", "kaplan_meier_conversion_served",
-    "nelson_aalen_hazard_served", "cox_hazard_newton_served",
-    "token_shard_plan_served", "lpa_communities_top20",
-    "did_order_value", "ucb1_daily_choice", "kcenter_coreset_seeds",
-    "logrank_arm_test", "ipw_ate_order_value",
     "interval_sweep_profile_served", "max_concurrent_sessions_served",
     "interval_union_coverage_served", "knn_graph_topk",
-    "mutual_knn_dedup_clusters", "unigram_lm_prune",
-    "dsir_importance_top20", "bpe_encode_stats",
-    # plan changed this round (scan-once checkpoint before the range
-    # repartition)
-    "token_shard_plan",
-    # plans/oracles changed this round — re-verify all callers
-    "cox_hazard_newton", "conformal_interval_price",
-    "interval_sweep_profile", "max_concurrent_sessions",
-    "interval_union_coverage",
-    # round-4 cohort (oldest window evidence, CORRECTNESS_r09)
-    "dedup_exact_stats", "dedup_prefix_keepers", "text_token_stats",
-    "embedding_norms", "embedding_near_dup_top20", "bpe_token_totals",
-    "text_quality_profile", "fingerprint_dup_groups",
-    "events_session_window", "asof_purchase_lag", "purchase_click_window",
-    "split_contamination", "doc_chunks", "hash_split_assign", "top_tokens",
-    "returning_users", "stratified_sample_stats", "bigram_top20",
-    "tfidf_top20", "long_token_profile", "churned_users",
-    "pii_redaction_stats", "token_position_profile", "source_token_entropy",
-    "gopher_quality_flags", "repetition_profile", "corpus_curation_funnel",
-    "dedup_keep_best", "oov_rate_by_source", "sequence_packing",
-    "domain_quota_sample", "multimodal_byte_profile",
-    "chunk_dedup_reassembly", "incremental_dedup", "mixture_weights",
-    "embedding_centroid_per_label", "ingest_clean_admissions",
-    "events_typed_agg",
-    # round-6 cohort tail (last verified in the r10 window)
-    "order_value_deciles", "customers_above_own_avg",
-    "first_last_order_shift", "event_session_stats",
-    "lapsed_part_suppliers", "revenue_drawdown_by_year",
-    "embedding_quantization_error", "vocab_growth_curve",
-    "txlog_delete_update_snapshot", "lang_id_distribution",
-    "rolling_7day_distinct_users", "top_orders_with_ties",
-]
-
-
-# CORRECTNESS_r13.json (50/50 green on rows+schema+hash) +
-# CORRECTNESS_FULL_r13.json (267 queries, 261 hash-green, 6 rows-only
-# by design, 0 failures) covered every name in the r13 window; treat
-# them as green for the r14 rotation.
-_DRIVER_GREEN_R13 = list(_MUST_VERIFY_R13)
-_DRIVER_GREEN_R3 = _DRIVER_GREEN_R3 + _DRIVER_GREEN_R13
-
-# Round 14 rotates per the standing policy: the two new oracled
-# queries (graph-ANN beam search, the logrank served twin) lead, then
-# every query whose PLAN changed this round — asof_purchase_lag moved
-# to the single-scan self-as-of, kcenter_coreset_seeds changed its
-# checkpoint bookkeeping, and every serve_silver consumer now reads an
-# immutable versioned snapshot directory (the silver scaffold's
-# snapshot-isolation fix) — then the round-5 cohort, whose last
-# driver-side evidence is CORRECTNESS_r10 and is due its regression
-# sweep.
-_MUST_VERIFY_R14: list[str] = [
-    # new this round
-    "graph_ann_top10", "logrank_arm_test_served",
-    "asof_purchase_lag_served", "simhash_wide_dup_clusters",
-    # new in the round-14 continuation session (round14b_queries):
-    # duplicate-span stats, BH-FDR, regression discontinuity,
-    # association rules
-    "dup_span_stats", "bh_fdr_nation_tests", "rdd_order_value",
-    "assoc_rules_top20", "markov_attribution",
-    # plan changed this round (self-as-of single scan)
-    "asof_purchase_lag",
-    # checkpoint bookkeeping changed (persistent-RDD-id diff release)
-    "kcenter_coreset_seeds",
-    # serve_silver consumers: versioned snapshot directories
-    "events_typed_agg", "interval_sweep_profile_served",
-    "max_concurrent_sessions_served", "interval_union_coverage_served",
+    "mutual_knn_dedup_clusters", "unigram_lm_prune", "dsir_importance_top20",
+    "bpe_encode_stats", "ks_two_sample_value", "brier_decomposition",
+    "zipf_slope_tokens", "jl_projection_top10", "sprt_ab_decision",
+    "ams_f2_tokens", "woe_iv_segments", "cdc_chunk_stats",
+    "zipf_slope_tokens_served", "ams_f2_tokens_served",
     "kaplan_meier_conversion_served", "nelson_aalen_hazard_served",
     "cox_hazard_newton_served", "token_shard_plan_served",
-    "zipf_slope_tokens_served", "ams_f2_tokens_served",
-    # shared-surface refactor rider (same plan, cheap re-verify)
-    "logrank_arm_test",
-    # round-5 cohort (oldest window evidence, CORRECTNESS_r10)
-    "ewma_daily_revenue", "mode_ship_priority", "char_diversity_profile",
-    "levenshtein_blocked_pairs", "bipartite_pagerank_top20",
-    "ann_lsh_top10", "minhash_dup_clusters", "simhash_dup_clusters",
-    "ivf_cosine_top10", "approx_event_profile",
-    "duplicate_ngram_top20", "jaccard_pair_similarity",
-    "part_pair_cooccurrence", "top_session_paths", "value_histogram",
-    "event_volume_zscore", "customer_segment_setops",
-    "price_quantity_regression", "lsh_bucket_histogram",
-    "supplier_balance_position", "regression_by_returnflag",
-    "time_rollup_revenue", "event_type_transitions",
-    "customer_revenue_gini", "salted_event_type_totals",
-    "doc_length_quartiles_by_source", "events_in_prior_hour",
-    "event_type_reconciliation",
-]
+    "lpa_communities_top20", "did_order_value", "ucb1_daily_choice",
+    "kcenter_coreset_seeds", "logrank_arm_test", "logrank_arm_test_served",
+    "ipw_ate_order_value", "asof_purchase_lag_served",
+)
 
 
-# CORRECTNESS_r14.json: the round-14 window, 45/45 green on all three
-# checks (rows + schema + hash); the five hash-seeded approximate fast
-# paths recorded their standing rows-only check (each has a hash-green
-# oracled twin). The whole window folds into the green ledger.
-_DRIVER_GREEN_R14 = list(_MUST_VERIFY_R14)
-_DRIVER_GREEN_R3 = _DRIVER_GREEN_R3 + _DRIVER_GREEN_R14
-
-# Round-15 window: new queries lead (the served t-closeness twin and
-# the VERIFIED MinHash pair), then every query whose PLAN or shared
-# expression changed this round (graph-ANN edge symmetrization +
-# hops 3→4; assoc_rules apriori prune + orderkey checkpoint + decimal
-# lift; markov sentinel guard; rdd/bh_fdr NULLIF denominators; the
-# conditional ensure_min_splits in dup_span/simhash_wide), then the
-# round-7 and round-8 cohorts, whose last driver-side evidence is
-# CORRECTNESS_r07/r08 and which are due their regression sweep (the
-# r14 verdict's rotation ask).
-_MUST_VERIFY_R15: list[str] = [
-    # new this round
-    "t_closeness_audit_served", "minhash_verified_dup_clusters_portable",
-    "minhash_verified_dup_clusters",
-    # plan / shared-expression changed this round
-    "graph_ann_top10", "assoc_rules_top20", "markov_attribution",
-    "rdd_order_value", "bh_fdr_nation_tests", "dup_span_stats",
-    "simhash_wide_dup_clusters",
-    # round-7 cohort (portable sketches; last evidence CORRECTNESS_r07)
-    "hll_rollup_distinct_users", "theta_sketch_audience_overlap",
-    "theta_retention_day7", "json_props_regexp_agg",
-    "minhash_dup_clusters_portable", "simhash_dup_clusters_portable",
-    "ann_qlsh_top10_portable",
-    # round-8 cohort (last evidence CORRECTNESS_r08)
-    "k_anonymity_audit", "cms_token_heavy_hitters", "token_shard_plan",
-    "daily_value_interpolated", "copurchase_2hop_reach",
-    "value_drift_psi", "priority_status_mutual_info",
-    "benford_first_digit_audit", "ivm_join_snapshot",
-    "daily_revenue_autocorr", "dow_revenue_seasonality",
-    "last_touch_attribution", "embedding_cluster_keep_best",
-    "cluster_aware_split", "session_pattern_match", "revenue_changepoint",
-    "linear_decay_attribution", "ab_value_t_statistic",
-    "quality_decile_lift", "priority_status_chi2",
-    "bm25_search_top10", "inverted_index_top20", "phrase_search_top10",
-    "weighted_sample_orders",
-    "scd2_user_tier_history", "scd2_temporal_join", "data_quality_audit",
-    "quantile_sketch_prices", "doc_bigram_nll_top20",
-    "supplier_balance_distribution", "copurchase_triangle_count",
-    "pivot_dynamic_priority", "bm25_eval_screen_top3",
-]
+def _ordered(registry: dict[str, Query], order: tuple[str, ...]) -> dict[str, Query]:
+    """``registry`` re-keyed in ``order``. Raises, naming the culprits,
+    unless ``order`` lists every registered query exactly once and
+    nothing else, so a query can be neither dropped nor invented."""
+    placed = set(order)
+    missing = [n for n in registry if n not in placed]
+    unknown = [n for n in order if n not in registry]
+    repeated = [n for n, c in Counter(order).items() if c > 1]
+    if missing or unknown or repeated:
+        raise RuntimeError(
+            "plans.ORDER is out of sync with the registered queries: "
+            f"not in ORDER {missing}, not registered {unknown}, "
+            f"listed twice {repeated}"
+        )
+    return {n: registry[n] for n in order}
 
 
-def _curate(registry: dict[str, Query]) -> dict[str, Query]:
-    """Rebuild the registry dict with unverified queries first.
-
-    Order: the pinned verification window, then any other
-    yet-unverified oracle-backed queries (registration order), then
-    rows-only queries, then the already-driver-green set. Deterministic
-    across processes.
-    """
-    green = set(_DRIVER_GREEN_R3)
-    pinned = [registry[n] for n in _MUST_VERIFY_R15 if n in registry]
-    placed = set(_MUST_VERIFY_R15)
-    promoted_oracle = [
-        q
-        for n, q in registry.items()
-        if n not in green and n not in placed and q.oracle
-    ]
-    promoted_rows = [
-        q
-        for n, q in registry.items()
-        if n not in green and n not in placed and not q.oracle
-    ]
-    rest = [q for n, q in registry.items() if n in green and n not in placed]
-    return {
-        q.name: q for q in pinned + promoted_oracle + promoted_rows + rest
-    }
-
-
-_curated = _curate(REGISTRY)
+_placed = _ordered(REGISTRY, ORDER)
 REGISTRY.clear()
-REGISTRY.update(_curated)
+REGISTRY.update(_placed)
 
 __all__ = ["REGISTRY", "Query", "register"]

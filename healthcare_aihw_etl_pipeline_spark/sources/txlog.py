@@ -16,11 +16,12 @@ Why the reference's replace-the-directory load (/root/reference/main.py:158,
 * **Exactly-once streaming**: each commit can record (writer_id,
   batch_id); a replayed foreachBatch sees its id already committed and
   skips — Delta's `txn` action.
-* **Optimistic concurrency**: the commit is an O_EXCL create of the next
-  numbered manifest. A losing writer re-resolves the head and retries if
-  its read set is untouched, else raises — serializable commits without
-  a lock service. (On S3-class stores the same protocol needs a
-  conditional PUT or a DynamoDB-style log, as Delta documents.)
+* **Optimistic concurrency**: the commit is an exclusive hard link of
+  the fully written next numbered manifest. A losing writer re-resolves
+  the head and retries if its read set is untouched, else raises —
+  serializable commits without a lock service. (On S3-class stores the
+  same protocol needs a conditional PUT or a DynamoDB-style log, as
+  Delta documents.)
 
 Layout:
     <root>/data/<partition=k>/c<version>-<n>.parquet   data files
@@ -144,16 +145,30 @@ class TxLogTable:
         return vs[-1], self._read_manifest(vs[-1])
 
     def _try_commit(self, version: int, manifest: dict) -> bool:
-        """Atomically create manifest `version`; False if it exists
-        (another writer won the race)."""
+        """Atomically publish manifest `version`; False if it exists
+        (another writer won the race).
+
+        The manifest is written and fsynced under a temp name that
+        _versions() ignores, then hard-linked to its version name: the
+        link is atomic and fails if the name exists, so a reader or a
+        crash never sees a half-written manifest, and a failed write
+        leaves the version free for a retry."""
         os.makedirs(self.log_dir, exist_ok=True)
         path = os.path.join(self.log_dir, f"{version:020d}.json")
+        tmp = os.path.join(self.log_dir, f".{version:020d}.{uuid.uuid4().hex}.tmp")
         try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            with open(tmp, "w") as f:
+                json.dump(manifest, f)
+                f.flush()
+                os.fsync(f.fileno())
+            os.link(tmp, path)
         except FileExistsError:
             return False
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
+        finally:
+            try:
+                os.unlink(tmp)
+            except FileNotFoundError:
+                pass
         return True
 
     # -- data-file plumbing ------------------------------------------
@@ -836,8 +851,8 @@ class TxLogTable:
         receives a copy of the head manifest — with per-commit keys
         (change feed, removed list, restore tag) stripped, so a
         constraint commit never replays the previous commit's feed —
-        and returns the next one. Same optimistic O_EXCL protocol as
-        data commits."""
+        and returns the next one. Same optimistic exclusive-link protocol
+        as data commits."""
         for _ in range(max_retries):
             h = self.head()
             version = (h[0] if h else -1) + 1

@@ -45,7 +45,7 @@ ARTIFACT = os.path.join(
 )
 
 # Real-corpus directories for the ANN recall section (the sf1/sf10
-# replicated layouts are built on demand by scale_curve_r12's helper).
+# replicated layouts are built on demand by scale_curve_ops._ensure_corpora).
 REAL_DIRS = {
     "smoke": ["/root/testdata/sf0.1"],
     "sf1": ["/tmp/sfbench/sf1"],

@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 
@@ -26,6 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import bench  # noqa: E402  (HEADLINE, _wave, run_duckdb)
 from healthcare_aihw_etl_pipeline_spark import get_spark  # noqa: E402
 from healthcare_aihw_etl_pipeline_spark.plans import REGISTRY  # noqa: E402
+from scale_curve_ops import _ensure_corpora  # noqa: E402
 
 DIRS = [
     ("sf0.01", "/root/testdata/sf0.01", 4),
@@ -33,18 +33,6 @@ DIRS = [
     ("sf1", "/tmp/sfbench/sf1", 3),
     ("sf10", "/tmp/sfbench/sf10", 2),
 ]
-
-
-def _ensure_corpora() -> None:
-    here = os.path.dirname(os.path.abspath(__file__))
-    if not os.path.isfile("/tmp/sfbench/sf1/lineitem.parquet"):
-        subprocess.run([sys.executable, os.path.join(here, "make_sf1.py")],
-                       check=True)
-    if not os.path.isfile("/tmp/sfbench/sf10/lineitem.parquet"):
-        env = {**os.environ, "SFB_SRC": "/tmp/sfbench/sf1",
-               "SFB_DST": "/tmp/sfbench/sf10"}
-        subprocess.run([sys.executable, os.path.join(here, "make_sf1.py")],
-                       check=True, env=env)
 
 
 def main() -> None:

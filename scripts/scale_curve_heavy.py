@@ -25,23 +25,18 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
-import threading
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb  # noqa: E402
-
 from healthcare_aihw_etl_pipeline_spark import get_spark  # noqa: E402
 from healthcare_aihw_etl_pipeline_spark.plans import REGISTRY  # noqa: E402
-
-DUCK_TIMEOUT = int(os.environ.get("DUCK_TIMEOUT", "60"))
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from scale_curve_ops import (  # noqa: E402
+    DUCK_TIMEOUT,
+    _ensure_corpora,
+    _time_duck,
+    _time_spark,
+)
 
 DIRS = [
     ("sf0.01", "/root/testdata/sf0.01", 3),
@@ -62,58 +57,6 @@ OPS = [
     # sf10; the curve is its committed evidence.
     "inverted_index_top20",
 ]
-
-
-def _ensure_corpora() -> None:
-    here = os.path.dirname(os.path.abspath(__file__))
-    if not os.path.isfile("/tmp/sfbench/sf1/lineitem.parquet"):
-        subprocess.run([sys.executable, os.path.join(here, "make_sf1.py")],
-                       check=True)
-    if not os.path.isfile("/tmp/sfbench/sf10/lineitem.parquet"):
-        env = {**os.environ, "SFB_SRC": "/tmp/sfbench/sf1",
-               "SFB_DST": "/tmp/sfbench/sf10"}
-        subprocess.run([sys.executable, os.path.join(here, "make_sf1.py")],
-                       check=True, env=env)
-
-
-def _time_spark(build, reps: int) -> float:
-    from pyspark.sql import functions as F
-
-    build().collect()  # warm (codegen, page cache, derived caches)
-    best = float("inf")
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        build().where(F.lit(True)).collect()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
-
-
-def _time_duck(d: str, sql: str, reps: int):
-    """min-of-reps DuckDB, or 'timeout<N>s' if interrupted once."""
-    con = duckdb.connect()
-    con.execute(f"SET threads TO {os.environ.get('SPARK_GRAFT_CPUS', '32')}")
-    for t in TABLES:
-        p = f"{d}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-            )
-    best = float("inf")
-    try:
-        for _ in range(reps):
-            timer = threading.Timer(DUCK_TIMEOUT, con.interrupt)
-            timer.start()
-            t0 = time.perf_counter()
-            try:
-                con.execute(sql).fetchall()
-            finally:
-                timer.cancel()
-            best = min(best, time.perf_counter() - t0)
-    except Exception:
-        return f"timeout{DUCK_TIMEOUT}s"
-    finally:
-        con.close()
-    return round(best, 3)
 
 
 def _asof_builders(spark, d: str):

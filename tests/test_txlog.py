@@ -1330,7 +1330,7 @@ def test_txlog_dml_query_result_cache_matches_fresh_run(
 
 def test_try_commit_two_process_race_single_winner(tmp_path):
     """The optimistic-commit primitive raced by TWO OS PROCESSES (no
-    shared interpreter state, genuine kernel-level O_EXCL contention):
+    shared interpreter state, genuine kernel-level exclusive-link contention):
     both hammer the same version sequence; every version must have
     EXACTLY ONE winner and the union of winners covers the range."""
     import multiprocessing as mp
@@ -1370,7 +1370,7 @@ def test_try_commit_two_process_race_single_winner(tmp_path):
 
 def test_concurrent_writers_optimistic_retry_no_lost_commits(spark, tmp_path):
     """Two writers (threads over one shared local-mode session — the
-    commit race itself is kernel O_EXCL, identical to two drivers on a
+    commit race itself is the kernel's exclusive link, identical to two drivers on a
     shared filesystem) interleave appends on one track_changes table.
     Every commit must land under a unique version via the retry loop
     (txlog.py _commit_loop), the final snapshot holds every row from
@@ -2292,7 +2292,7 @@ def test_two_process_concurrent_writers_one_winner_per_version(spark, tmp_path):
     """CROSS-PROCESS optimistic concurrency: a second Python process
     (own JVM, own SparkSession) races this one appending to the SAME
     table. File-lock semantics differ from thread semantics, so this
-    exercises the O_CREAT|O_EXCL manifest claim across process
+    exercises the exclusive-link manifest claim across process
     boundaries: exactly one winner per version, a contiguous version
     chain, no lost rows, and a complete change feed."""
     import subprocess
@@ -2365,3 +2365,29 @@ def test_two_process_concurrent_writers_one_winner_per_version(spark, tmp_path):
     ins = sorted(r.event_id for r in feed if r._change_type == "insert")
     assert ins == sorted(r[0] for r in rows)
     assert len({r._commit_version for r in feed}) == 6
+
+
+def test_manifest_write_crash_leaves_head_and_version_intact(tmp_path, monkeypatch):
+    """A writer that dies while writing its manifest must publish
+    nothing: head() still returns the previous snapshot, no stray file
+    is left in the log, and the same version commits on retry."""
+    import healthcare_aihw_etl_pipeline_spark.sources.txlog as txlog
+
+    t = TxLogTable(str(tmp_path / "t"))
+    assert t._try_commit(0, {"files": ["a.parquet"], "txn": {}})
+
+    def torn_dump(obj, fp, *args, **kwargs):
+        fp.write('{"files": [')
+        fp.flush()
+        raise OSError("writer killed mid-manifest")
+
+    monkeypatch.setattr(txlog.json, "dump", torn_dump)
+    with pytest.raises(OSError, match="mid-manifest"):
+        t._try_commit(1, {"files": ["a.parquet", "b.parquet"], "txn": {}})
+    monkeypatch.undo()
+
+    assert t.head() == (0, {"files": ["a.parquet"], "txn": {}})
+    assert sorted(os.listdir(t.log_dir)) == [f"{0:020d}.json"]
+    assert t._try_commit(1, {"files": ["a.parquet", "b.parquet"], "txn": {}})
+    assert t.head() == (1, {"files": ["a.parquet", "b.parquet"], "txn": {}})
+    assert not t._try_commit(1, {"files": [], "txn": {}})
