@@ -37,18 +37,19 @@ def clean_text(col: Column | str) -> Column:
       3. trailing `, <number>`        — `,\\s*[-+]?[0-9]*\\.?[0-9]+$`
     then strip whitespace, then strip double quotes.
 
-    The whitespace strip uses PYTHON's definition (what pandas
-    `.str.strip()` does): Java's `\\s`/Spark's `trim` miss `\\x1c-\\x1f`,
-    `\\x85`, NBSP and the Unicode space category, all of which Python
-    strips — a real divergence caught by property testing
-    (tests/test_properties.py).
+    Whitespace and `$` follow PYTHON's `re`/`str.strip` (what the
+    reference and pandas do), not Java's: Java's `\\s`/Spark's `trim`
+    miss `\\x1c-\\x1f`, `\\x85`, NBSP and the Unicode space category, and
+    Java's `$` also matches before a final `\\r`, `\\x85` or U+2028, where
+    Python's matches only before a final `\\n` (hence UNIX_LINES, `(?d)`).
+    tests/test_properties.py holds both sides to a Python model.
     """
     py_ws = r"[\s\x1c-\x1f\x85\p{Z}]"
     c = F.col(col) if isinstance(col, str) else col
     s = c.cast("string")
-    s = F.regexp_replace(s, r'^\("?\s*', "")
-    s = F.regexp_replace(s, r'"?\)$', "")
-    s = F.regexp_replace(s, r",\s*[-+]?[0-9]*\.?[0-9]+$", "")
+    s = F.regexp_replace(s, f'^\\("?{py_ws}*', "")
+    s = F.regexp_replace(s, r'(?d)"?\)$', "")
+    s = F.regexp_replace(s, f"(?d),{py_ws}*[-+]?[0-9]*\\.?[0-9]+$", "")
     s = F.regexp_replace(s, f"^{py_ws}+|{py_ws}+$", "")
     s = F.btrim(s, F.lit('"'))
     return s

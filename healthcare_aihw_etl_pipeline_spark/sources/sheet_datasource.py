@@ -19,7 +19,7 @@ workbook is opened, sheet-filtered and parsed on an EXECUTOR inside
 cluster exactly like a parquet scan. Dims are emitted as parallel
 key/value arrays (the fixed-schema contract of the mapInPandas kernel —
 dynamic per-sheet columns are widened afterwards with
-:func:`widen_dims`).
+``sheet_ingest.widen_dims``).
 
 Workbook format: the landing files are the container-friendly JSON
 serialization ``{"year": int, "sheets": [{"name": str, "rows":
@@ -36,14 +36,12 @@ import json
 import os
 from collections.abc import Iterator, Sequence
 
-from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from healthcare_aihw_etl_pipeline_spark.sources.discovery import sheet_name_wanted
-
-SCHEMA = (
-    "year int, state string, separations double, "
-    "dim_keys array<string>, dim_vals array<string>"
+from healthcare_aihw_etl_pipeline_spark.sources.sheet_ingest import (
+    RECORD_SCHEMA,
+    iter_tidy_records,
 )
 
 
@@ -81,11 +79,7 @@ class SheetWorkbookReader(DataSourceReader):
 
     def read(self, partition: WorkbookPartition) -> Iterator[tuple]:
         # Executor-side: parse one workbook via the SAME pure-Python core
-        # as the mapInPandas kernel (sheet_ingest.iter_tidy_records).
-        from healthcare_aihw_etl_pipeline_spark.sources.sheet_ingest import (
-            iter_tidy_records,
-        )
-
+        # as compile_sheets and the mapInPandas kernel.
         with open(partition.path, encoding="utf-8") as fh:
             wb = json.load(fh)
         year = int(wb["year"])
@@ -101,7 +95,7 @@ class SheetWorkbookDataSource(DataSource):
         return "aihw_sheets"
 
     def schema(self) -> str:
-        return SCHEMA
+        return RECORD_SCHEMA
 
     def reader(self, schema) -> SheetWorkbookReader:
         return SheetWorkbookReader(self.options)
@@ -127,22 +121,3 @@ def write_workbook_json(path: str, year: int, sheets: Sequence[tuple[str, Sequen
     }
     with open(path, "w", encoding="utf-8") as fh:
         json.dump(payload, fh)
-
-
-def widen_dims(tidy: DataFrame) -> DataFrame:
-    """Widen the fixed-schema (dim_keys, dim_vals) arrays into real
-    columns — the key-union step of compile_sheets_distributed, shared
-    here for DataSource output. One metadata-sized distinct pass."""
-    mapped = tidy.withColumn(
-        "dims", F.map_from_arrays("dim_keys", "dim_vals")
-    ).localCheckpoint(eager=True)
-    keys = sorted(
-        r[0]
-        for r in mapped.select(F.explode("dim_keys").alias("k")).distinct().collect()
-    )
-    return mapped.select(
-        *[F.col("dims").getItem(k).alias(k) for k in keys],
-        "state",
-        "separations",
-        "year",
-    )

@@ -1,19 +1,21 @@
 """Header-sniffing, dynamic-schema wide-sheet ingestion (SURVEY §1.4) —
 the reference's `parse_sheet` pipeline (/root/reference/main.py:48-131)
-re-expressed as driver-side schema inference + distributed DataFrame
-algebra.
+as one pure-Python parse core plus Spark-side loading.
 
-Split of responsibilities, chosen for the Spark execution model:
+Split of responsibilities:
 - *Schema inference* (header-row detection, column-role classification,
-  positional renames, validity predicate) runs on the driver over the
-  first ≤40 rows of each sheet — metadata-sized work, pure Python,
-  unit-testable.
-- *Data transformation* (clean-text regexes, numeric coercion, unpivot,
-  null filtering, year stamping, heterogeneous union, fill-then-group
-  aggregation) is lazy DataFrame algebra — Catalyst expressions only, so
-  the same code path scales from one worksheet to a 100 TB landing zone
-  of wide files (each sheet's rows can come from any distributed source;
-  inference needs only the tiny header slice).
+  positional renames, validity predicate) reads the first ≤40 rows of
+  each sheet — metadata-sized work, pure Python, unit-testable.
+- *Parsing* (F1 null-drop, X2 clean-text, X3 numeric coercion, R1
+  unpivot, F2 null-measure drop, P6 year stamp) is one generator,
+  :func:`iter_tidy_records`, shared by all three entry points:
+  :func:`compile_sheets` runs it on the driver and hands Spark one Arrow
+  table (the tidy frame then scans JVM-side, with no Python worker);
+  :func:`compile_sheets_distributed` runs it on executors through
+  mapInPandas; the ``aihw_sheets`` DataSource
+  (sources/sheet_datasource.py) runs it on executors per workbook file.
+- *Loading* (fill-then-group aggregation, two-tier writes) is lazy
+  DataFrame algebra.
 
 Pandas-quirk parity (deliberately reproduced, per SURVEY §7.3 hard part 1):
 - empty header cells are named ``Unnamed: N`` before slugging (pandas
@@ -31,20 +33,15 @@ import re
 from dataclasses import dataclass, field
 from collections.abc import Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from healthcare_aihw_etl_pipeline_spark.functions.scalar import (
-    STATE_CODES,
-    clean_text,
-    slug,
-    try_double,
-)
-from healthcare_aihw_etl_pipeline_spark.operators.relational import union_by_name
+from healthcare_aihw_etl_pipeline_spark.functions.scalar import STATE_CODES, slug
 
-# Fixed output columns of the tidy fact table (/root/reference/README.md:93-105).
-FIXED = {"year", "state", "separations"}
+# Fixed output columns of the tidy fact table (the reference's README.md:93-105)
+# and their Arrow types.
+FIXED = {"state": pa.string(), "separations": pa.float64(), "year": pa.int32()}
 
 HEADER_SCAN_ROWS = 40  # /root/reference/main.py:50
 
@@ -154,57 +151,9 @@ def parse_sheet(
 ) -> DataFrame | None:
     """Parse one wide sheet into the tidy long form
     (/root/reference/main.py:72-131): returns columns
-    ``*id_cols, state, separations, year`` or None for invalid sheets.
-
-    Everything below the inferred header runs as DataFrame algebra:
-    F1 null-drop on the first id column → X2 clean-text on id columns
-    (missing → literal "nan", pandas parity) → X3 coerce-cast on state
-    columns → R1 unpivot → F2 drop null measures → P6 year stamp.
-    """
-    schema = infer_schema(rows)
-    if schema is None:
-        return None
-
-    kept = [(i, n) for i, n in enumerate(schema.colmap) if n is not None]
-    body = [
-        tuple(
-            None if (r[i] if i < len(r) else None) is None else str(r[i] if i < len(r) else None)
-            for i, _ in kept
-        )
-        for r in rows[schema.header_idx + 1 :]
-    ]
-    struct = T.StructType(
-        [T.StructField(n, T.StringType(), True) for _, n in kept]
-    )
-    wide = spark.createDataFrame(body, schema=struct)
-
-    first_id = schema.id_cols[0]
-    wide = wide.where(F.col(first_id).isNotNull())  # F1
-
-    cleaned_cols = []
-    for c in wide.columns:
-        if c in schema.id_cols:
-            # pandas astype(str) turns NaN into the literal "nan".
-            cleaned_cols.append(
-                F.when(F.col(c).isNull(), F.lit("nan"))
-                .otherwise(clean_text(F.col(c)))
-                .alias(c)
-            )
-        else:
-            cleaned_cols.append(try_double(c).alias(c))  # X3
-    wide = wide.select(*cleaned_cols)
-
-    tidy = (
-        wide.unpivot(  # R1
-            schema.id_cols,
-            schema.state_cols,
-            "state",
-            "separations",
-        )
-        .where(F.col("separations").isNotNull())  # F2
-        .withColumn("year", F.lit(int(year)))  # P6
-    )
-    return tidy
+    ``*id_cols, state, separations, year`` or None for invalid sheets."""
+    table = _tidy_table([(rows, year)])
+    return None if table is None else spark.createDataFrame(table)
 
 
 def compile_sheets(
@@ -212,42 +161,82 @@ def compile_sheets(
     sheets: Sequence[tuple[Sequence[Sequence[object]], int]],
 ) -> DataFrame:
     """U1 — parse every (rows, year) sheet and union by name, NULL-filling
-    missing columns (`pd.concat`, /root/reference/main.py:135-151)."""
-    frames = [
-        df
-        for rows, year in sheets
-        if (df := parse_sheet(spark, rows, year)) is not None
-    ]
-    if not frames:
+    missing columns (`pd.concat` in the reference's main.py).
+
+    Every sheet parses on the driver through :func:`iter_tidy_records`
+    into one Arrow table, loaded with a single ``createDataFrame``."""
+    table = _tidy_table(sheets)
+    if table is None:
         raise RuntimeError("No valid data extracted - parsing rules may need an update.")
-    return union_by_name(frames)
+    return spark.createDataFrame(table)
+
+
+def _tidy_table(
+    sheets: Sequence[tuple[Sequence[Sequence[object]], int]],
+) -> pa.Table | None:
+    """Every valid sheet's tidy rows as one Arrow table (None if no sheet
+    is valid), columns as ``unionByName`` over per-sheet frames
+    ``*id_cols, state, separations, year`` gives them. Columns come from
+    each valid sheet's schema, so an all-junk sheet still adds its dims;
+    a ``Year`` id column is the year column, overwritten in place."""
+    cols: dict[str, None] = {}
+    records: list[dict] = []
+    for rows, year in sheets:
+        schema = infer_schema(rows)
+        if schema is None:
+            continue
+        cols.update(dict.fromkeys([*schema.id_cols, "state", "separations", "year"]))
+        records.extend(
+            dict(zip(keys, vals), state=st, separations=v, year=yr)
+            for yr, st, v, keys, vals in iter_tidy_records(year, rows)
+        )
+    if not cols:
+        return None
+    fields = [
+        pa.field(c, FIXED.get(c, pa.string()), c not in ("state", "year")) for c in cols
+    ]
+    return pa.Table.from_pylist(records, schema=pa.schema(fields))
 
 
 # ---------------------------------------------------------------------------
 # Distributed ingest (SURVEY §4.2 extension #2): the same parse, but with
 # the per-sheet work running ON EXECUTORS via mapInPandas. compile_sheets
-# above builds each sheet's rows driver-side (fine for metadata-sized
+# above parses every sheet on the driver (fine for metadata-sized
 # workbooks); for a landing zone of thousands of wide files the (sheet,
 # rows) pairs themselves must be a distributed dataset and each task must
 # parse its own shard. The dynamic id-columns problem (mapInPandas needs a
 # fixed output schema) is solved by emitting dims as map<string,string>
 # and widening to real columns afterwards with one metadata-sized
-# key-union pass.
+# key-union pass (:func:`widen_dims`).
 
-# Java \s (regex 1-3 of clean_text) is NOT Python \s: Python's includes
-# the Unicode space category. The executor-side twin must reproduce the
-# JAVA class for those regexes, then Python str.strip() for the final
-# whitespace strip (which IS the engine semantic — see clean_text).
-_JAVA_WS = "[ \\t\\n\\x0b\\f\\r]"
-_RE_LEAD = re.compile(r'^\("?' + _JAVA_WS + "*")
+# The reference's three `_clean_text` regexes, with Python's Unicode-aware
+# \s and `$`; functions.scalar.clean_text spells the same semantics in
+# Java regex syntax.
+_RE_LEAD = re.compile(r'^\("?\s*')
 _RE_TRAIL = re.compile(r'"?\)$')
-_RE_NUM_TAIL = re.compile("," + _JAVA_WS + r"*[-+]?[0-9]*\.?[0-9]+$")
+_RE_NUM_TAIL = re.compile(r",\s*[-+]?[0-9]*\.?[0-9]+$")
+
+# Catalyst's string → double cast is java.lang.Double.parseDouble after
+# Java's String.trim() (which strips every char ≤ U+0020): ASCII digits
+# only, no `_` separators, an optional f/F/d/D suffix, hex floats with a
+# binary exponent. What parseDouble rejects falls back to the special
+# literals below, matched case-insensitively.
+_JAVA_TRIM = "".join(map(chr, range(0x21)))
+_JAVA_DOUBLE = re.compile(
+    r"[+-]?(?:NaN|Infinity"
+    r"|(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?[fFdD]?"
+    r"|0[xX](?:[0-9a-fA-F]+\.?[0-9a-fA-F]*|\.[0-9a-fA-F]+)[pP][+-]?[0-9]+[fFdD]?)"
+)
+_SPECIAL_DOUBLES = {
+    **dict.fromkeys(["inf", "+inf", "infinity", "+infinity"], float("inf")),
+    **dict.fromkeys(["-inf", "-infinity"], float("-inf")),
+    "nan": float("nan"),
+}
 
 
 def clean_text_py(s: object) -> str:
-    """Executor/driver-side twin of functions.scalar.clean_text —
-    equality with the Catalyst chain is asserted by the distributed-vs-
-    driver parity test (tests/test_ingest.py)."""
+    """Pure-Python twin of functions.scalar.clean_text; equality with the
+    Catalyst chain is property-tested (tests/test_properties.py)."""
     t = str(s)
     t = _RE_LEAD.sub("", t)
     t = _RE_TRAIL.sub("", t)
@@ -256,13 +245,15 @@ def clean_text_py(s: object) -> str:
 
 
 def _try_double_py(s: object) -> float | None:
-    """Twin of functions.scalar.try_double (trim → try_cast double)."""
+    """Twin of functions.scalar.try_double (trim → try_cast double):
+    returns exactly what the Catalyst cast returns, junk → None."""
     if s is None:
         return None
-    try:
-        return float(str(s).strip())
-    except ValueError:
-        return None
+    t = str(s).strip(_JAVA_TRIM)
+    if not _JAVA_DOUBLE.fullmatch(t):
+        return _SPECIAL_DOUBLES.get(t.lower())
+    t = t.rstrip("fFdD")
+    return float.fromhex(t) if "x" in t.lower() else float(t)
 
 
 def sheets_to_distributed(
@@ -271,27 +262,27 @@ def sheets_to_distributed(
 ) -> DataFrame:
     """Lift (rows, year) sheets into a distributed (sheet_id, year, rows)
     DataFrame — the landing-zone shape. Cells are stringified exactly as
-    parse_sheet does (None stays NULL)."""
-    data = [
-        (
-            i,
-            int(year),
-            [[None if c is None else str(c) for c in row] for row in rows],
-        )
-        for i, (rows, year) in enumerate(sheets)
+    the parse core does (None stays NULL)."""
+    cells = [
+        [[None if c is None else str(c) for c in row] for row in rows]
+        for rows, _ in sheets
     ]
-    return spark.createDataFrame(
-        data, "sheet_id long, year int, rows array<array<string>>"
+    table = pa.table(
+        {
+            "sheet_id": pa.array(range(len(sheets)), pa.int64()),
+            "year": pa.array([int(year) for _, year in sheets], pa.int32()),
+            "rows": pa.array(cells, pa.list_(pa.list_(pa.string()))),
+        }
     )
+    return spark.createDataFrame(table)
 
 
 def iter_tidy_records(year, rows):
     """Pure-Python per-sheet parse: yield tidy long records
     ``(year, state, separations, dim_keys, dim_vals)`` from one raw
-    sheet. The single executor-side parse core shared by the
-    mapInPandas kernel below and the ``aihw_sheets`` Python
-    DataSource (sources/sheet_datasource.py); invalid sheets yield
-    nothing."""
+    sheet. The one parse core behind compile_sheets (driver),
+    the mapInPandas kernel and the ``aihw_sheets`` Python DataSource
+    (sources/sheet_datasource.py); invalid sheets yield nothing."""
     rows = [list(r) for r in rows]
     schema = infer_schema(rows)
     if schema is None:
@@ -313,38 +304,60 @@ def iter_tidy_records(year, rows):
             yield int(year), st, v, list(schema.id_cols), vals
 
 
+# iter_tidy_records' record shape, as emitted by the mapInPandas kernel and
+# the ``aihw_sheets`` DataSource.
+RECORD_SCHEMA = (
+    "year int, state string, separations double, "
+    "dim_keys array<string>, dim_vals array<string>"
+)
+
+# mapInPandas output columns with explicit dtypes, so a partition with zero
+# valid rows still yields typed columns. Arrow cannot convert pandas dict
+# cells to map<string,string>, so dims travel as parallel key/value
+# arrays, map_from_arrays'd JVM-side by widen_dims.
+_KERNEL_DTYPES = dict(
+    year="int64", state="object", separations="float64", dim_keys="object", dim_vals="object"
+)
+
+
 def _parse_sheets_batch(batches):
-    """mapInPandas kernel: parse each sheet's rows into tidy long records
-    with dims packed as a map. Runs entirely executor-side."""
+    """mapInPandas kernel: parse each sheet's rows into tidy long records.
+    Runs entirely executor-side."""
     import pandas as pd
 
     for pdf in batches:
-        years: list[int] = []
-        states: list[str] = []
-        seps: list[float] = []
-        # Arrow cannot convert pandas dict cells to map<string,string>;
-        # emit parallel key/value arrays and map_from_arrays them JVM-side.
-        dim_keys: list[list[str]] = []
-        dim_vals: list[list[str]] = []
-        for year, rows in zip(pdf["year"], pdf["rows"]):
-            for yr, st, v, dk, dv in iter_tidy_records(year, rows):
-                years.append(yr)
-                states.append(st)
-                seps.append(v)
-                dim_keys.append(dk)
-                dim_vals.append(dv)
-        # Explicit dtypes: a partition with zero valid rows would default
-        # its empty columns to float64, which Arrow cannot convert to
-        # list<string>.
-        yield pd.DataFrame(
-            {
-                "year": pd.Series(years, dtype="int64"),
-                "state": pd.Series(states, dtype="object"),
-                "separations": pd.Series(seps, dtype="float64"),
-                "dim_keys": pd.Series(dim_keys, dtype="object"),
-                "dim_vals": pd.Series(dim_vals, dtype="object"),
-            }
-        )
+        records = [
+            rec
+            for year, rows in zip(pdf["year"], pdf["rows"])
+            for rec in iter_tidy_records(year, rows)
+        ]
+        yield pd.DataFrame(records, columns=list(_KERNEL_DTYPES)).astype(_KERNEL_DTYPES)
+
+
+def widen_dims(tidy: DataFrame) -> DataFrame:
+    """Widen fixed-schema ``(dim_keys, dim_vals)`` records (the mapInPandas
+    kernel's and the ``aihw_sheets`` DataSource's output) into real dim
+    columns, sorted by name. One metadata-sized key-union pass; records
+    whose sheet lacks a dim get NULL there, like unionByName's fill. A
+    dim named like a fixed column (a ``Year`` id column) gives way to the
+    record's own column, as in :func:`compile_sheets`."""
+    # localCheckpoint (not persist): consumed twice (key discovery + the
+    # returned frame), and checkpoint blocks free on GC instead of
+    # accumulating in the CacheManager across repeated ingests.
+    mapped = tidy.withColumn(
+        "dims", F.map_from_arrays("dim_keys", "dim_vals")
+    ).localCheckpoint(eager=True)
+    keys = sorted(
+        r[0]
+        for r in mapped.select(F.explode("dim_keys").alias("k")).distinct().collect()
+        if r[0] not in FIXED
+    )
+    return mapped.select(
+        *[F.col("dims").getItem(k).alias(k) for k in keys],
+        "state",
+        "separations",
+        "year",
+    )
 
 
 def compile_sheets_distributed(
@@ -353,37 +366,17 @@ def compile_sheets_distributed(
     *,
     partitions: int | None = None,
 ) -> DataFrame:
-    """Distributed twin of :func:`compile_sheets`: same tidy output (dims
+    """Distributed twin of :func:`compile_sheets`: same tidy rows (dims
     as real columns, asserted equal by tests), but every sheet parses on
-    an executor. One metadata-sized pass discovers the dim-key union
-    (the U1 union-by-name step of the driver path); rows whose sheet
-    lacks a dim get NULL there, exactly like unionByName's NULL-fill."""
+    an executor and :func:`widen_dims` does the U1 union-by-name step."""
     sdf = sheets_to_distributed(spark, sheets)
     if partitions:
         sdf = sdf.repartition(partitions, "sheet_id")
-    mapped = sdf.mapInPandas(
-        _parse_sheets_batch,
-        schema="year int, state string, separations double, "
-        "dim_keys array<string>, dim_vals array<string>",
-    )
-    # localCheckpoint (not persist): consumed twice (key discovery + the
-    # returned frame), and checkpoint blocks free on GC instead of
-    # accumulating in the CacheManager across repeated ingests.
-    mapped = mapped.withColumn(
-        "dims", F.map_from_arrays("dim_keys", "dim_vals")
-    ).localCheckpoint(eager=True)
-    keys = sorted(
-        r[0]
-        for r in mapped.select(F.explode("dim_keys").alias("k")).distinct().collect()
-    )
-    if not keys and mapped.isEmpty():
+    tidy = widen_dims(sdf.mapInPandas(_parse_sheets_batch, schema=RECORD_SCHEMA))
+    # One small job over the checkpointed records widen_dims materialized.
+    if tidy.isEmpty():
         raise RuntimeError("No valid data extracted - parsing rules may need an update.")
-    return mapped.select(
-        *[F.col("dims").getItem(k).alias(k) for k in keys],
-        "state",
-        "separations",
-        "year",
-    )
+    return tidy
 
 
 def clean_aggregate(tidy: DataFrame) -> DataFrame:

@@ -4,6 +4,9 @@ heterogeneous union, and the staging≡clean materialization invariant
 
 from __future__ import annotations
 
+import hashlib
+import uuid
+
 import pytest
 
 from healthcare_aihw_etl_pipeline_spark.sources import fixtures
@@ -132,18 +135,20 @@ def test_distributed_compile_matches_driver_compile(spark):
     produce exactly the rows of the driver-side compile (same columns,
     same multiset of values) on the fixture corpus — every quirk (junk
     preamble, unnamed headers, total drop, tuple artifacts, coerce-casts,
-    ragged rows, invalid sheet, heterogeneous dims) included."""
+    ragged rows, invalid sheet, heterogeneous dims) included, plus a
+    sheet whose `Year` id column the sheet's year overwrites."""
     from healthcare_aihw_etl_pipeline_spark.sources.sheet_ingest import (
         compile_sheets_distributed,
     )
 
-    driver = compile_sheets(spark, fixtures.SHEETS)
-    dist = compile_sheets_distributed(spark, fixtures.SHEETS, partitions=4)
-    assert sorted(driver.columns) == sorted(dist.columns)
-    cols = sorted(driver.columns)
-    a = sorted(map(repr, (tuple(r) for r in driver.select(*cols).collect())))
-    b = sorted(map(repr, (tuple(r) for r in dist.select(*cols).collect())))
-    assert a == b
+    for zone in (fixtures.SHEETS, [YEAR_ID, fixtures.SHEET2]):
+        driver = compile_sheets(spark, zone)
+        dist = compile_sheets_distributed(spark, zone, partitions=4)
+        assert sorted(driver.columns) == sorted(dist.columns)
+        cols = sorted(driver.columns)
+        a = sorted(map(repr, (tuple(r) for r in driver.select(*cols).collect())))
+        b = sorted(map(repr, (tuple(r) for r in dist.select(*cols).collect())))
+        assert a == b
 
 
 def test_distributed_compile_no_valid_sheets_raises(spark):
@@ -153,3 +158,209 @@ def test_distributed_compile_no_valid_sheets_raises(spark):
 
     with pytest.raises(RuntimeError):
         compile_sheets_distributed(spark, [fixtures.SHEET3_INVALID])
+
+
+# --- Pinned compile_sheets / run_etl output -------------------------------
+# Measured on the per-sheet Catalyst + unionByName implementation; any
+# rewrite of the parse path must reproduce it exactly: column order (the
+# first valid sheet's dims, then state/separations/year, then dims first
+# seen in later sheets), types, nullability and every row.
+
+# A valid sheet whose measure cells are all junk: it contributes its dims
+# (here `sex`) as columns but no rows.
+JUNK = (
+    [
+        ["Junk table", None],
+        ["", "Sex", "NSW", "VIC"],
+        ["Injury", "Male", "n.p.", "—"],
+        ["Cancer", "Female", "—", "n.p."],
+    ],
+    2024,
+)
+
+# An id column named like a fixed column: the sheet's year overwrites it in
+# place (the reference's `df['year'] = year`), leaving one int `year`.
+YEAR_ID = (
+    [
+        ["Separations by year", None],
+        ["Year", "Sex", "NSW", "VIC"],
+        ["2019", "Male", "3", "n.p."],
+        ["2020", "Female", "4", "5"],
+    ],
+    2024,
+)
+_YEAR_ID_FIELDS = [
+    ("year", "int", False),
+    ("sex", "string", True),
+    ("state", "string", False),
+    ("separations", "double", True),
+]
+
+_S2_ROWS = [
+    ("Cancer", "Private", "QLD", 1.0, 2023),
+    ("Cancer", "Private", "VIC", 2.0, 2023),
+    ("Injury", "Public", "NSW", 3.0, 2023),
+    ("Injury", "Public", "QLD", 5.0, 2023),
+    ("Injury", "Public", "VIC", 4.0, 2023),
+    ("Mental health", "Public", "NSW", 6.0, 2023),
+    ("Mental health", "Public", "QLD", 2.0, 2023),
+]
+
+
+def _fields(df):
+    return [(f.name, f.dataType.simpleString(), f.nullable) for f in df.schema.fields]
+
+
+def _sorted_rows(df) -> list[str]:
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
+def _digest(rows: list[str]) -> str:
+    return hashlib.sha256("\n".join(rows).encode()).hexdigest()
+
+
+_S1_DIMS = [
+    ("category", "string", True),
+    ("principal_diagnosis", "string", True),
+    ("care_type", "string", True),
+]
+_FIXED = [("state", "string", False), ("separations", "double", True), ("year", "int", False)]
+
+
+@pytest.mark.parametrize(
+    "zone, fields, n_rows, digest",
+    [
+        (
+            fixtures.SHEETS,
+            _S1_DIMS + _FIXED + [("hospital_type", "string", True)],
+            38,
+            "37d6349b2f69869b220916889646fb39e1a429ad1e71ea332f8691b761e6f4d5",
+        ),
+        (
+            [fixtures.SHEET2, fixtures.SHEET1],
+            [("category", "string", True), ("hospital_type", "string", True)]
+            + _FIXED
+            + _S1_DIMS[1:],
+            38,
+            "0275f5f2c945a9d95e0f2004159529861c1a384067a1c7a7d62d647190db0b5e",
+        ),
+        (
+            [YEAR_ID],
+            _YEAR_ID_FIELDS,
+            3,
+            "caefbe0cb9fca7beaccb4041657c4581cf56635dce0e93b91daba200b175c9da",
+        ),
+        (
+            [YEAR_ID, fixtures.SHEET2],
+            _YEAR_ID_FIELDS + [("category", "string", True), ("hospital_type", "string", True)],
+            10,
+            "392c0e3897598435f72a031602e6b8640ec599f9f58bcbd0455ae259b734f33a",
+        ),
+        (
+            [fixtures.SHEET2, YEAR_ID],
+            [("category", "string", True), ("hospital_type", "string", True)]
+            + _FIXED
+            + [("sex", "string", True)],
+            10,
+            "ee7b9cbf22f052de03b8f06fe4d75cdbaca8e028575aca0021ba7fca1995f144",
+        ),
+    ],
+    ids=["fixture_sheets", "later_sheet_adds_dims", "year_id", "year_id_first", "year_id_later"],
+)
+def test_compile_sheets_pinned(spark, zone, fields, n_rows, digest):
+    tidy = compile_sheets(spark, zone)
+    assert _fields(tidy) == fields
+    rows = _sorted_rows(tidy)
+    assert len(rows) == n_rows
+    assert _digest(rows) == digest
+
+
+def test_compile_sheets_pinned_junk_zones(spark):
+    cat = ("category", "string", True)
+    sex = ("sex", "string", True)
+    hosp = ("hospital_type", "string", True)
+
+    tidy = compile_sheets(spark, [JUNK, fixtures.SHEET2])
+    assert _fields(tidy) == [cat, sex, *_FIXED, hosp]
+    assert _sorted_rows(tidy) == sorted(
+        repr((c, None, s, v, y, h)) for c, h, s, v, y in _S2_ROWS
+    )
+
+    tidy = compile_sheets(spark, [fixtures.SHEET2, JUNK])
+    assert _fields(tidy) == [cat, hosp, *_FIXED, sex]
+    assert _sorted_rows(tidy) == sorted(
+        repr((c, h, s, v, y, None)) for c, h, s, v, y in _S2_ROWS
+    )
+
+    # Every valid sheet junk: an empty frame with the sheet's columns.
+    tidy = compile_sheets(spark, [JUNK])
+    assert _fields(tidy) == [cat, sex, *_FIXED]
+    assert tidy.collect() == []
+
+
+def test_run_etl_tables_pinned(spark, tmp_path):
+    from healthcare_aihw_etl_pipeline_spark.pipeline import run_etl
+
+    _tidy, staging, clean = run_etl(spark, str(tmp_path), sheets_override=fixtures.SHEETS)
+    hosp = ("hospital_type", "string", True)
+    year = ("year", "int", True)  # partition column, read back last
+
+    st = spark.read.parquet(staging)
+    assert _fields(st) == [
+        *_S1_DIMS, ("state", "string", True), ("separations", "double", True), hosp, year
+    ]
+    rows = _sorted_rows(st)
+    assert len(rows) == 38
+    assert _digest(rows) == "7bc0bbbc0d2fc8c3ead28d00935d43fb129e97b2daf1f7e16ca7ea1ac41516fa"
+
+    cl = spark.read.parquet(clean)
+    assert _fields(cl) == [
+        ("state", "string", True), *_S1_DIMS, hosp, ("separations", "double", True), year
+    ]
+    rows = _sorted_rows(cl)
+    assert len(rows) == 32
+    assert _digest(rows) == "526eec4bb8cb93ceb73d01d6db019ec01a009f24bdb51456b5bfe3dfdba604c2"
+
+
+def _jobs_run(spark, label, fn):
+    """(fn(), number of Spark jobs it ran), counted by job group."""
+    sc = spark.sparkContext
+    gid = f"test-ingest-{label}-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, label, False)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_etl_job_and_lineage_counters(spark, tmp_path):
+    """Deterministic counters instead of wall time: compile_sheets and
+    sheets_to_distributed run no job and leave no Python worker in their
+    frames' lineage (later scans run JVM-side), and run_etl runs no more
+    jobs than the 5 the per-sheet Catalyst implementation ran on the
+    fixture sheets."""
+    from healthcare_aihw_etl_pipeline_spark.pipeline import run_etl
+    from healthcare_aihw_etl_pipeline_spark.sources.sheet_ingest import (
+        sheets_to_distributed,
+    )
+
+    def lineage(df) -> str:
+        return df._jdf.queryExecution().toRdd().toDebugString()
+
+    tidy, jobs = _jobs_run(spark, "compile", lambda: compile_sheets(spark, fixtures.SHEETS))
+    assert jobs == 0
+    assert "PythonRDD" not in lineage(tidy)
+    lifted, jobs = _jobs_run(
+        spark, "lift", lambda: sheets_to_distributed(spark, fixtures.SHEETS)
+    )
+    assert jobs == 0
+    assert "PythonRDD" not in lineage(lifted)
+
+    _, jobs = _jobs_run(
+        spark, "run_etl",
+        lambda: run_etl(spark, str(tmp_path), sheets_override=fixtures.SHEETS),
+    )
+    assert jobs <= 5

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import re
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from healthcare_aihw_etl_pipeline_spark.functions.scalar import (
@@ -38,8 +38,16 @@ def norm_state_model(s: str) -> str | None:
 
 
 # Printable-ish text, biased toward the artifacts the cleaners target.
+# Non-ASCII whitespace (NBSP, U+2003, U+3000, NEL, FS) is where Java's
+# \s, trim and `$` differ from Python's.
 artifact_text = st.one_of(
-    st.text(alphabet=st.characters(codec="ascii", exclude_categories=["Cc"]), max_size=40),
+    st.text(
+        alphabet=st.one_of(
+            st.characters(codec="ascii", exclude_categories=["Cc"]),
+            st.sampled_from("\xa0\u2003\u3000\x85\x1c"),
+        ),
+        max_size=40,
+    ),
     st.builds(lambda a, b: f'("{a}", {b})', st.text(max_size=20), st.integers(0, 999)),
     st.builds(lambda a, b: f"{a}, {b}.5", st.text(max_size=20), st.integers(0, 99)),
     st.sampled_from(["nsw", "N.S.W.", " vic ", "total", "", '"x"', "(y)", "AUST"]),
@@ -48,6 +56,7 @@ artifact_text = st.one_of(
 
 @settings(max_examples=5, deadline=None)
 @given(st.lists(artifact_text, min_size=20, max_size=60))
+@example(["a,\xa05", "a, 5\x85", "abc)\x85", "abc)\r", "abc)\u2028", "(\xa0abc", "x\x1c"])
 def test_clean_and_norm_match_model(spark, strings):
     df = spark.createDataFrame([(s,) for s in strings], ["t"])
     rows = df.select(
@@ -75,9 +84,13 @@ def test_clean_and_norm_match_model(spark, strings):
     )
 )
 def test_try_double_null_on_junk(spark, strings):
+    from healthcare_aihw_etl_pipeline_spark.sources.sheet_ingest import _try_double_py
+
     df = spark.createDataFrame([(s,) for s in strings], ["t"])
     rows = df.select("t", try_double("t").alias("d")).collect()
     for r in rows:
+        # the ingest parse core's twin must return exactly the cast's value
+        assert _try_double_py(r.t) == r.d, repr(r.t)
         try:
             want = float(r.t.strip())
             if want in (float("inf"), float("-inf")):
@@ -88,6 +101,32 @@ def test_try_double_null_on_junk(spark, strings):
             assert r.d is None, repr(r.t)
         else:
             assert r.d is not None and abs(r.d - want) <= abs(want) * 1e-12, repr(r.t)
+
+
+# Cells where Python's float() and Catalyst's cast disagree: `_`
+# separators, non-ASCII whitespace and digits, f/d suffixes, hex floats,
+# special literals and ASCII control whitespace.
+TRY_DOUBLE_CELLS = [
+    "1_000", "\xa012", "12\u2003", "１２", "1d", "1f", "0x1p3", "inf", "NaN",
+    "\t7\n", "12\u3000", "\x85 3", "\x1c5", "-nan", "+Infinity", "1e5F", ".5",
+    ".", "0x10", "1e400",
+]
+
+
+def test_try_double_twin_matches_catalyst(spark):
+    import math
+
+    from healthcare_aihw_etl_pipeline_spark.sources.sheet_ingest import _try_double_py
+
+    df = spark.createDataFrame([(s,) for s in TRY_DOUBLE_CELLS], "t string")
+    rows = df.select("t", try_double("t").alias("d")).collect()
+    assert [r.t for r in rows] == TRY_DOUBLE_CELLS
+    for r in rows:
+        got = _try_double_py(r.t)
+        if r.d is not None and math.isnan(r.d):
+            assert got is not None and math.isnan(got), repr(r.t)
+        else:
+            assert got == r.d, repr(r.t)
 
 
 @settings(max_examples=3, deadline=None)

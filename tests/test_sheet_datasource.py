@@ -10,10 +10,12 @@ from healthcare_aihw_etl_pipeline_spark.sources import fixtures
 from healthcare_aihw_etl_pipeline_spark.sources.sheet_datasource import (
     SheetWorkbookDataSource,
     SheetWorkbookReader,
-    widen_dims,
     write_workbook_json,
 )
-from healthcare_aihw_etl_pipeline_spark.sources.sheet_ingest import compile_sheets
+from healthcare_aihw_etl_pipeline_spark.sources.sheet_ingest import (
+    compile_sheets,
+    widen_dims,
+)
 
 
 @pytest.fixture(scope="module")
