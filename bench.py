@@ -87,6 +87,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from healthcare_aihw_etl_pipeline_spark import get_spark
+from healthcare_aihw_etl_pipeline_spark.session import local_cpus
 from healthcare_aihw_etl_pipeline_spark.plans import REGISTRY
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -156,9 +157,7 @@ def run_extended(spark, sf_dir: str, reps: int = 2):
         import duckdb
 
         con = duckdb.connect()
-        con.execute(
-            f"SET threads TO {os.environ.get('SPARK_GRAFT_CPUS', '32')}"
-        )
+        con.execute(f"SET threads TO {local_cpus()}")
         for t in (
             "region nation customer supplier part orders lineitem events documents embeddings"
         ).split():
@@ -506,7 +505,7 @@ def run_duckdb(
     out: dict[str, tuple[dict[str, float], float, float]] = {}
     for sf_dir in sf_dirs:
         con = duckdb.connect()
-        con.execute(f"SET threads TO {os.environ.get('SPARK_GRAFT_CPUS', '32')}")
+        con.execute(f"SET threads TO {local_cpus()}")
         for t in (
             "region nation customer supplier part orders lineitem events documents embeddings"
         ).split():

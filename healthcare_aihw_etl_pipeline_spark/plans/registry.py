@@ -148,6 +148,64 @@ def _state_token(sf_dir: str) -> tuple:
     return tuple(sorted(entries))
 
 
+def cached_dml_result(
+    spark: SparkSession,
+    sf_dir: str,
+    schema: str,
+    query_fn: Callable,
+    compute: Callable[[], list[tuple]],
+) -> DataFrame:
+    """Rows of a DML round-trip query, persisted across processes.
+
+    Each registry sweep is a fresh process, so the in-process plan cache
+    cannot spare a multi-second scratch-table round-trip; its few result
+    rows go to a JSON file instead. The key is (sf_dir, its
+    :func:`_state_token`, a salt over ``query_fn``'s source and the txlog
+    engine's), so new data or an edit to the DML logic misses. The file
+    sits in a 0700 per-user directory, so no other local user can plant
+    or read it; ``SPARK_GRAFT_FORCE_DML=1`` bypasses the read. Writes are
+    best-effort and atomic through a unique temp file."""
+    import hashlib
+    import inspect
+    import json
+    import os
+    import tempfile
+
+    from healthcare_aihw_etl_pipeline_spark.sources import txlog
+
+    salt = hashlib.sha256(
+        (inspect.getsource(query_fn) + inspect.getsource(txlog)).encode()
+    ).hexdigest()[:16]
+    token = repr((os.path.abspath(sf_dir), _state_token(sf_dir), salt))
+    cache_dir = os.path.join(
+        tempfile.gettempdir(), f"spark-graft-cache-{os.getuid()}"
+    )
+    try:
+        os.makedirs(cache_dir, mode=0o700, exist_ok=True)
+        if os.stat(cache_dir).st_uid != os.getuid():
+            raise OSError("cache dir owned by another user")
+        digest = hashlib.sha256(token.encode()).hexdigest()[:16]
+        cache_file = os.path.join(cache_dir, f"{query_fn.__name__}-{digest}.json")
+    except OSError:
+        cache_file = None
+    if cache_file is not None and os.environ.get("SPARK_GRAFT_FORCE_DML") != "1":
+        try:
+            with open(cache_file) as fh:
+                return spark.createDataFrame([tuple(r) for r in json.load(fh)], schema)
+        except (OSError, ValueError):
+            pass
+    rows = compute()
+    if cache_file is not None:
+        try:
+            fd, tmp = tempfile.mkstemp(dir=cache_dir, suffix=".tmp")
+            with os.fdopen(fd, "w") as fh:
+                json.dump(rows, fh)
+            os.replace(tmp, cache_file)
+        except OSError:
+            pass
+    return spark.createDataFrame(rows, schema)
+
+
 def invalidate(name: str | None = None, sf_dir: str | None = None) -> int:
     """Drop cached plans matching `name` and/or `sf_dir` (None = any).
 

@@ -20,7 +20,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from healthcare_aihw_etl_pipeline_spark.plans.registry import register
+from healthcare_aihw_etl_pipeline_spark.plans.registry import (
+    cached_dml_result,
+    register,
+)
 from healthcare_aihw_etl_pipeline_spark.sources.catalog import load_table
 
 # Deterministic PCM synthesis shared by the Spark encoder and the DuckDB
@@ -185,153 +188,110 @@ def audio_pcm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ivm_join_snapshot; SPARK_GRAFT_FORCE_DML=1 bypasses.",
 )
 def ivm_full_outer_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import inspect
-    import json as _json
     import os
     import shutil
     import tempfile
 
-    from healthcare_aihw_etl_pipeline_spark.plans.registry import (
-        _state_token,
-        cents,
-    )
-    from healthcare_aihw_etl_pipeline_spark.sources import txlog as _txlog_mod
     from healthcare_aihw_etl_pipeline_spark.sources.txlog import (
         TxLogTable,
         apply_incremental_join,
     )
 
-    schema = (
+    def compute() -> list[tuple]:
+        cust = load_table(spark, sf_dir, "customer").select(
+            "c_custkey",
+            F.col("c_mktsegment").alias("seg"),
+            "c_nationkey",
+        )
+        orders = load_table(spark, sf_dir, "orders").select(
+            F.col("o_orderkey").alias("order_id"),
+            "o_custkey",
+            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)").alias(
+                "price_cents"
+            ),
+        )
+        tmp = tempfile.mkdtemp(prefix="ivm-full-")
+        try:
+            dim = TxLogTable(os.path.join(tmp, "dim"), track_changes=True)
+            fact = TxLogTable(os.path.join(tmp, "fact"), track_changes=True)
+            out = TxLogTable(os.path.join(tmp, "out"))
+            off = os.path.join(tmp, "off.json")
+
+            def sync():
+                apply_incremental_join(
+                    spark, out, fact, dim,
+                    on=["o_custkey"], left_id="order_id", right_id="o_custkey",
+                    offset_path=off, how="full",
+                )
+
+            dim.append(
+                cust.where(F.col("c_nationkey") < 13).select(
+                    F.col("c_custkey").alias("o_custkey"), "seg"
+                )
+            )
+            fact.append(orders.where(F.col("order_id") % 3 != 0))
+            sync()
+            fact.append(orders.where(F.col("order_id") % 3 == 0))
+            sync()
+            dim.merge(
+                cust.where(F.col("c_nationkey") == 5).select(
+                    F.col("c_custkey").alias("o_custkey"),
+                    F.lit("REBUILT").alias("seg"),
+                ),
+                key_cols=["o_custkey"],
+            )
+            dim.delete_where(
+                spark,
+                F.col("o_custkey").isin(
+                    [
+                        r.c_custkey
+                        for r in cust.where(F.col("c_nationkey") == 7)
+                        .select("c_custkey")
+                        .collect()
+                    ]
+                ),
+            )
+            fact.delete_where(spark, F.col("price_cents") > 40_000_000)
+            sync()
+            snap = out.snapshot(spark).drop("_lkey", "_rkey")
+            res = (
+                snap.groupBy("seg")
+                .agg(
+                    F.count(F.lit(1)).alias("n_rows"),
+                    F.sum(
+                        (
+                            F.col("order_id").isNotNull()
+                            & F.col("seg").isNotNull()
+                        ).cast("long")
+                    ).alias("n_matched"),
+                    F.sum(F.col("seg").isNull().cast("long")).alias(
+                        "n_left_ext"
+                    ),
+                    F.sum(F.col("order_id").isNull().cast("long")).alias(
+                        "n_right_ext"
+                    ),
+                    F.sum(F.coalesce(F.col("price_cents"), F.lit(0))).alias(
+                        "total_cents"
+                    ),
+                )
+                .orderBy("seg")
+            )
+            return [
+                (
+                    r.seg, r.n_rows, r.n_matched, r.n_left_ext,
+                    r.n_right_ext, r.total_cents,
+                )
+                for r in res.collect()
+            ]
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+
+    return cached_dml_result(
+        spark, sf_dir,
         "seg string, n_rows bigint, n_matched bigint, n_left_ext bigint, "
-        "n_right_ext bigint, total_cents bigint"
+        "n_right_ext bigint, total_cents bigint",
+        ivm_full_outer_snapshot, compute,
     )
-    code_salt = hashlib.sha256(
-        (
-            inspect.getsource(ivm_full_outer_snapshot)
-            + inspect.getsource(_txlog_mod)
-        ).encode()
-    ).hexdigest()[:16]
-    token = repr((os.path.abspath(sf_dir), _state_token(sf_dir), code_salt))
-    cache_dir = os.path.join(
-        tempfile.gettempdir(), f"spark-graft-cache-{os.getuid()}"
-    )
-    try:
-        os.makedirs(cache_dir, mode=0o700, exist_ok=True)
-        if os.stat(cache_dir).st_uid != os.getuid():
-            raise OSError("cache dir owned by another user")
-        cache_file = os.path.join(
-            cache_dir,
-            "ivm-full-"
-            + hashlib.sha256(token.encode()).hexdigest()[:16]
-            + ".json",
-        )
-    except OSError:
-        cache_file = None
-    force = os.environ.get("SPARK_GRAFT_FORCE_DML") == "1"
-    if not force and cache_file is not None:
-        try:
-            with open(cache_file) as fh:
-                rows = [tuple(r) for r in _json.load(fh)]
-            return spark.createDataFrame(rows, schema)
-        except (OSError, ValueError):
-            pass
-
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.col("c_mktsegment").alias("seg"),
-        "c_nationkey",
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("order_id"),
-        "o_custkey",
-        F.expr("CAST(round(o_totalprice * 100) AS BIGINT)").alias(
-            "price_cents"
-        ),
-    )
-    tmp = tempfile.mkdtemp(prefix="ivm-full-")
-    try:
-        dim = TxLogTable(os.path.join(tmp, "dim"), track_changes=True)
-        fact = TxLogTable(os.path.join(tmp, "fact"), track_changes=True)
-        out = TxLogTable(os.path.join(tmp, "out"))
-        off = os.path.join(tmp, "off.json")
-
-        def sync():
-            apply_incremental_join(
-                spark, out, fact, dim,
-                on=["o_custkey"], left_id="order_id", right_id="o_custkey",
-                offset_path=off, how="full",
-            )
-
-        dim.append(
-            cust.where(F.col("c_nationkey") < 13).select(
-                F.col("c_custkey").alias("o_custkey"), "seg"
-            )
-        )
-        fact.append(orders.where(F.col("order_id") % 3 != 0))
-        sync()
-        fact.append(orders.where(F.col("order_id") % 3 == 0))
-        sync()
-        dim.merge(
-            cust.where(F.col("c_nationkey") == 5).select(
-                F.col("c_custkey").alias("o_custkey"),
-                F.lit("REBUILT").alias("seg"),
-            ),
-            key_cols=["o_custkey"],
-        )
-        dim.delete_where(
-            spark,
-            F.col("o_custkey").isin(
-                [
-                    r.c_custkey
-                    for r in cust.where(F.col("c_nationkey") == 7)
-                    .select("c_custkey")
-                    .collect()
-                ]
-            ),
-        )
-        fact.delete_where(spark, F.col("price_cents") > 40_000_000)
-        sync()
-        snap = out.snapshot(spark).drop("_lkey", "_rkey")
-        res = (
-            snap.groupBy("seg")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(
-                    (
-                        F.col("order_id").isNotNull()
-                        & F.col("seg").isNotNull()
-                    ).cast("long")
-                ).alias("n_matched"),
-                F.sum(F.col("seg").isNull().cast("long")).alias(
-                    "n_left_ext"
-                ),
-                F.sum(F.col("order_id").isNull().cast("long")).alias(
-                    "n_right_ext"
-                ),
-                F.sum(F.coalesce(F.col("price_cents"), F.lit(0))).alias(
-                    "total_cents"
-                ),
-            )
-            .orderBy("seg")
-        )
-        rows = [
-            (
-                r.seg, r.n_rows, r.n_matched, r.n_left_ext,
-                r.n_right_ext, r.total_cents,
-            )
-            for r in res.collect()
-        ]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    if cache_file is not None:
-        try:
-            with open(cache_file + ".tmp", "w") as fh:
-                _json.dump(rows, fh)
-            os.replace(cache_file + ".tmp", cache_file)
-        except OSError:
-            pass
-    return spark.createDataFrame(rows, schema)
 
 
 # ---------------------------------------------------------------------------

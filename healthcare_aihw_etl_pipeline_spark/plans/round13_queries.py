@@ -147,8 +147,11 @@ def _knn_planes(n: int | None) -> int:
 # exact integer scores -> per-src ranking. knn_graph_topk reads
 # `ranked` directly; mutual_knn_dedup_clusters composes a mutuality
 # join + the recursive-CTE closure on top of the SAME block, so the
-# two oracles cannot drift.
-_KNN_ORACLE_CTES = f"""params AS (
+# two oracles cannot drift. Every CTE read more than once (here or by a
+# consumer) is MATERIALIZED: DuckDB 1.0 otherwise inlines the CTE again
+# at each reference, and graph_ann_top10's unrolled hops re-expanded the
+# whole block per hop (9.8 GB at sf0.001).
+_KNN_ORACLE_CTES = f"""params AS MATERIALIZED (
       SELECT GREATEST(4, CAST(CEIL(LOG2(COUNT(*) / {_KNN_TARGET})) AS INT))
              AS p
       FROM embeddings
@@ -161,7 +164,7 @@ _KNN_ORACLE_CTES = f"""params AS (
       FROM (SELECT UNNEST(range((SELECT 2 * p FROM params))) AS j) j,
            (SELECT UNNEST(range(64)) AS d) d
     ),
-    qv AS (
+    qv AS MATERIALIZED (
       SELECT vec_id, u.d AS d,
              CAST(round(CAST(embedding[u.d + 1] AS DOUBLE) * 127)
                   AS BIGINT) AS q
@@ -172,7 +175,7 @@ _KNN_ORACLE_CTES = f"""params AS (
       FROM qv JOIN signs ON signs.d = qv.d
       GROUP BY qv.vec_id, signs.j
     ),
-    sig AS (
+    sig AS MATERIALIZED (
       SELECT vec_id, j // (SELECT p FROM params) AS band,
              CAST(SUM(CASE WHEN dot > 0
                            THEN CAST(pow(2, j % (SELECT p FROM params))
@@ -193,7 +196,7 @@ _KNN_ORACLE_CTES = f"""params AS (
       JOIN qv qb ON qb.vec_id = p.nbr AND qb.d = qa.d
       GROUP BY p.src, p.nbr
     ),
-    ranked AS (
+    ranked AS MATERIALIZED (
       SELECT src,
              ROW_NUMBER() OVER (PARTITION BY src
                                 ORDER BY qdot DESC, nbr) AS rank,

@@ -52,7 +52,9 @@ _GA_K = 10  # result size
 # Per-hop CTE triple: candidates = beam's out-neighbors never visited,
 # scored by the exact quantized dot against the probe, folded into the
 # visited relation; the next beam is the global top-B of visited.
-# Unrolled H times — the bounded-frontier recursion made static.
+# Unrolled H times — the bounded-frontier recursion made static. Each
+# visited relation is read three times, so it is MATERIALIZED (see
+# _KNN_ORACLE_CTES).
 _GA_HOP_CTES = "".join(
     f""",
     cand{t} AS (
@@ -66,7 +68,7 @@ _GA_HOP_CTES = "".join(
       JOIN cand{t} c ON c.vec_id = qv.vec_id
       GROUP BY qv.vec_id
     ),
-    visited{t} AS (
+    visited{t} AS MATERIALIZED (
       SELECT * FROM visited{t - 1} UNION ALL SELECT * FROM score{t}
     ),
     beam{t} AS (
@@ -89,7 +91,7 @@ _GA_HOP_CTES = "".join(
     -- CONVERGED below the answer). Reverse edges make every link
     -- walkable both ways: recall@10 = 1.0 at sf1 and sf10 with the
     -- SAME constants (UNION dedups).
-    edges AS (
+    edges AS MATERIALIZED (
       SELECT src, nbr FROM ranked WHERE rank <= {_KNN_K}
       UNION
       SELECT nbr AS src, src AS nbr FROM ranked WHERE rank <= {_KNN_K}
@@ -97,8 +99,8 @@ _GA_HOP_CTES = "".join(
     stride AS (
       SELECT GREATEST(1, COUNT(*) // {_GA_ENTRIES}) AS st FROM embeddings
     ),
-    probe AS (SELECT d, q FROM qv WHERE vec_id = 0),
-    visited0 AS (
+    probe AS MATERIALIZED (SELECT d, q FROM qv WHERE vec_id = 0),
+    visited0 AS MATERIALIZED (
       SELECT qv.vec_id, CAST(SUM(qv.q * probe.q) AS BIGINT) AS dot
       FROM qv JOIN probe ON probe.d = qv.d
       WHERE qv.vec_id % (SELECT st FROM stride) = 0

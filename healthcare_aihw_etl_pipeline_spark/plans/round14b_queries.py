@@ -192,7 +192,7 @@ def dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(_gram_hashes(F.col("t"))).alias("p", "h"),
     )
     # The md5 gram-hash scan is ~2/3 of the wall (decomposed in
-    # scripts/dupspan_decompose_r16.py: sf10 scan 4.2 s warm of the
+    # OPTIMIZATION_r16.md, dup_span_stats: sf10 scan 4.2 s warm of the
     # 12.4 s total), and the two-branch plan (dup-gram groupBy + the
     # position join-back) pays it TWICE. Adaptive single-pass: when
     # the footer row count says the corpus is bench-scale, LAZILY

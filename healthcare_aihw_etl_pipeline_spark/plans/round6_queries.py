@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from healthcare_aihw_etl_pipeline_spark.functions.scalar import bind
 from healthcare_aihw_etl_pipeline_spark.plans.registry import (
+    cached_dml_result,
     cents,
     register,
     sql_cents,
@@ -1091,102 +1092,55 @@ def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exercises both rewrite paths directly either way.",
 )
 def txlog_delete_update_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import inspect
-    import json as _json
     import os
     import shutil
     import tempfile
 
-    from healthcare_aihw_etl_pipeline_spark.plans.registry import _state_token
-    from healthcare_aihw_etl_pipeline_spark.sources import txlog as _txlog_mod
     from healthcare_aihw_etl_pipeline_spark.sources.txlog import TxLogTable
 
-    schema = (
-        "o_orderstatus string, n_orders bigint, total_cents bigint"
-    )
-    # Cache key = (data identity, CODE identity): salting with the
-    # source of this query AND the txlog engine means any edit to the
-    # DML logic invalidates the cache instead of silently serving rows
-    # computed by the previous code version.
-    code_salt = hashlib.sha256(
-        (
-            inspect.getsource(txlog_delete_update_snapshot)
-            + inspect.getsource(_txlog_mod)
-        ).encode()
-    ).hexdigest()[:16]
-    token = repr((os.path.abspath(sf_dir), _state_token(sf_dir), code_salt))
-    # Per-user 0700 subdirectory: no other local user can pre-plant or
-    # read the cached result (tempdir itself is world-writable).
-    cache_dir = os.path.join(
-        tempfile.gettempdir(), f"spark-graft-cache-{os.getuid()}"
-    )
-    try:
-        os.makedirs(cache_dir, mode=0o700, exist_ok=True)
-        if os.stat(cache_dir).st_uid != os.getuid():
-            raise OSError("cache dir owned by another user")
-        cache_file = os.path.join(
-            cache_dir,
-            "txlog-dml-"
-            + hashlib.sha256(token.encode()).hexdigest()[:16]
-            + ".json",
+    def compute() -> list[tuple]:
+        o = load_table(spark, sf_dir, "orders")
+        base = o.where(F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp")).select(
+            "o_orderstatus",
+            "o_orderpriority",
+            cents("o_totalprice").alias("price_cents"),
+            F.col("o_totalprice"),
         )
-    except OSError:
-        cache_file = None
-    force = os.environ.get("SPARK_GRAFT_FORCE_DML") == "1"
-    if not force and cache_file is not None:
+        tmp = tempfile.mkdtemp(prefix="txlog-dml-")
         try:
-            with open(cache_file) as fh:
-                rows = [tuple(r) for r in _json.load(fh)]
-            return spark.createDataFrame(rows, schema)
-        except (OSError, ValueError):
-            pass
-
-    o = load_table(spark, sf_dir, "orders")
-    base = o.where(F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp")).select(
-        "o_orderstatus",
-        "o_orderpriority",
-        cents("o_totalprice").alias("price_cents"),
-        F.col("o_totalprice"),
-    )
-    tmp = tempfile.mkdtemp(prefix="txlog-dml-")
-    try:
-        t = TxLogTable(os.path.join(tmp, "t"), ["o_orderstatus"])
-        t.append(base)
-        t.delete_where(
-            spark, "o_orderstatus = 'F' AND o_totalprice > 200000.0"
-        )
-        t.update_where(
-            spark,
-            "o_orderpriority = '1-URGENT'",
-            {"price_cents": F.col("price_cents") * 2},
-        )
-        snap = t.snapshot(spark)
-        out = (
-            snap.groupBy("o_orderstatus")
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.sum("price_cents").alias("total_cents"),
+            t = TxLogTable(os.path.join(tmp, "t"), ["o_orderstatus"])
+            t.append(base)
+            t.delete_where(
+                spark, "o_orderstatus = 'F' AND o_totalprice > 200000.0"
             )
-            .orderBy("o_orderstatus")
-        )
-        # Materialize before the scratch table is deleted: the returned
-        # frame must not lazily re-read the dropped files.
-        rows = [
-            (r.o_orderstatus, r.n_orders, r.total_cents)
-            for r in out.collect()
-        ]
-        if cache_file is not None:
-            tmp_cache = f"{cache_file}.tmp-{os.getpid()}"
-            try:
-                with open(tmp_cache, "w") as fh:
-                    _json.dump(rows, fh)
-                os.replace(tmp_cache, cache_file)
-            except OSError:
-                pass  # cache write is best-effort
-        return spark.createDataFrame(rows, schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+            t.update_where(
+                spark,
+                "o_orderpriority = '1-URGENT'",
+                {"price_cents": F.col("price_cents") * 2},
+            )
+            snap = t.snapshot(spark)
+            out = (
+                snap.groupBy("o_orderstatus")
+                .agg(
+                    F.count(F.lit(1)).alias("n_orders"),
+                    F.sum("price_cents").alias("total_cents"),
+                )
+                .orderBy("o_orderstatus")
+            )
+            # Materialize before the scratch table is deleted: the
+            # returned frame must not lazily re-read the dropped files.
+            return [
+                (r.o_orderstatus, r.n_orders, r.total_cents)
+                for r in out.collect()
+            ]
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+
+    return cached_dml_result(
+        spark, sf_dir,
+        "o_orderstatus string, n_orders bigint, total_cents bigint",
+        txlog_delete_update_snapshot, compute,
+    )
 
 
 # ---------------------------------------------------------------------------

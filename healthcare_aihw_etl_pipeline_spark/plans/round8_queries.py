@@ -720,8 +720,8 @@ def supplier_balance_distribution(
     # (2) the closing as a streaming JOIN-counted wedge probe (two
     # pipelined hash joins feeding COUNT(*) — nothing materialized)
     # instead of EXISTS over a DISTINCT closing set. Measured 365.7 s
-    # at sf1 (scripts/tri_alt_oracle_probe.py) where both prior
-    # DuckDB forms exceeded 420 s; still the wedge-space shape, so
+    # at sf1 by a one-off probe (OPTIMIZATION_r16.md, alt oracles),
+    # where both prior DuckDB forms exceeded 420 s; still the wedge-space shape, so
     # sf10 runs ~10x — a one-off uncapped rung, not the 25-min batch.
     alt_oracle="""
     WITH baskets AS (

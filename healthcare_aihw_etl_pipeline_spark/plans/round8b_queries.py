@@ -37,6 +37,8 @@ from healthcare_aihw_etl_pipeline_spark.operators.search import (
     tokens,
 )
 from healthcare_aihw_etl_pipeline_spark.plans.registry import (
+    cached_dml_result,
+    cents,
     register,
     sql_cents,
 )
@@ -298,8 +300,6 @@ _INTERP_EXPR = (
 )
 def daily_value_interpolated(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
-
-    from healthcare_aihw_etl_pipeline_spark.plans.registry import cents
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", F.to_date("ts").alias("day"), "value"
@@ -698,8 +698,6 @@ _BENFORD_CASE = (
     "broadcast of one row.",
 )
 def benford_first_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from healthcare_aihw_etl_pipeline_spark.plans.registry import cents
-
     digits = load_table(spark, sf_dir, "orders").select(
         F.substring(cents("o_totalprice").cast("string"), 1, 1)
         .cast("long")
@@ -765,117 +763,76 @@ def benford_first_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "SPARK_GRAFT_FORCE_DML=1 bypasses.",
 )
 def ivm_join_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import inspect
-    import json as _json
     import os
     import shutil
     import tempfile
 
-    from healthcare_aihw_etl_pipeline_spark.plans.registry import (
-        _state_token,
-        cents,
-    )
-    from healthcare_aihw_etl_pipeline_spark.sources import txlog as _txlog_mod
     from healthcare_aihw_etl_pipeline_spark.sources.txlog import (
         TxLogTable,
         apply_incremental_join,
     )
 
-    schema = "seg string, n_pairs bigint, total_cents bigint"
-    code_salt = hashlib.sha256(
-        (
-            inspect.getsource(ivm_join_snapshot)
-            + inspect.getsource(_txlog_mod)
-        ).encode()
-    ).hexdigest()[:16]
-    token = repr((os.path.abspath(sf_dir), _state_token(sf_dir), code_salt))
-    cache_dir = os.path.join(
-        tempfile.gettempdir(), f"spark-graft-cache-{os.getuid()}"
-    )
-    try:
-        os.makedirs(cache_dir, mode=0o700, exist_ok=True)
-        if os.stat(cache_dir).st_uid != os.getuid():
-            raise OSError("cache dir owned by another user")
-        cache_file = os.path.join(
-            cache_dir,
-            "ivm-join-"
-            + hashlib.sha256(token.encode()).hexdigest()[:16]
-            + ".json",
+    def compute() -> list[tuple]:
+        cust = load_table(spark, sf_dir, "customer").select(
+            "c_custkey",
+            F.col("c_mktsegment").alias("seg"),
+            "c_nationkey",
         )
-    except OSError:
-        cache_file = None
-    force = os.environ.get("SPARK_GRAFT_FORCE_DML") == "1"
-    if not force and cache_file is not None:
+        orders = load_table(spark, sf_dir, "orders").select(
+            F.col("o_orderkey").alias("order_id"),
+            "o_custkey",
+            cents("o_totalprice").alias("price_cents"),
+        )
+        tmp = tempfile.mkdtemp(prefix="ivm-join-")
         try:
-            with open(cache_file) as fh:
-                rows = [tuple(r) for r in _json.load(fh)]
-            return spark.createDataFrame(rows, schema)
-        except (OSError, ValueError):
-            pass
+            dim = TxLogTable(os.path.join(tmp, "dim"), track_changes=True)
+            fact = TxLogTable(os.path.join(tmp, "fact"), track_changes=True)
+            out = TxLogTable(os.path.join(tmp, "out"))
+            off = os.path.join(tmp, "off.json")
 
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.col("c_mktsegment").alias("seg"),
-        "c_nationkey",
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("order_id"),
-        "o_custkey",
-        cents("o_totalprice").alias("price_cents"),
-    )
-    tmp = tempfile.mkdtemp(prefix="ivm-join-")
-    try:
-        dim = TxLogTable(os.path.join(tmp, "dim"), track_changes=True)
-        fact = TxLogTable(os.path.join(tmp, "fact"), track_changes=True)
-        out = TxLogTable(os.path.join(tmp, "out"))
-        off = os.path.join(tmp, "off.json")
+            def sync():
+                apply_incremental_join(
+                    spark, out, fact, dim,
+                    on=["o_custkey"], left_id="order_id", right_id="o_custkey",
+                    offset_path=off,
+                )
 
-        def sync():
-            apply_incremental_join(
-                spark, out, fact, dim,
-                on=["o_custkey"], left_id="order_id", right_id="o_custkey",
-                offset_path=off,
+            dim.append(
+                cust.select(F.col("c_custkey").alias("o_custkey"), "seg")
             )
-
-        dim.append(
-            cust.select(F.col("c_custkey").alias("o_custkey"), "seg")
-        )
-        fact.append(orders.where(F.col("order_id") % 3 != 0))
-        sync()
-        fact.append(orders.where(F.col("order_id") % 3 == 0))
-        sync()
-        dim.merge(
-            cust.where(F.col("c_nationkey") == 1).select(
-                F.col("c_custkey").alias("o_custkey"),
-                F.lit("REBUILT").alias("seg"),
-            ),
-            key_cols=["o_custkey"],
-        )
-        fact.delete_where(spark, F.col("price_cents") > 40_000_000)
-        sync()
-        snap = out.snapshot(spark)
-        res = (
-            snap.groupBy("seg")
-            .agg(
-                F.count(F.lit(1)).alias("n_pairs"),
-                F.sum("price_cents").alias("total_cents"),
+            fact.append(orders.where(F.col("order_id") % 3 != 0))
+            sync()
+            fact.append(orders.where(F.col("order_id") % 3 == 0))
+            sync()
+            dim.merge(
+                cust.where(F.col("c_nationkey") == 1).select(
+                    F.col("c_custkey").alias("o_custkey"),
+                    F.lit("REBUILT").alias("seg"),
+                ),
+                key_cols=["o_custkey"],
             )
-            .orderBy("seg")
-        )
-        rows = [
-            (r.seg, r.n_pairs, r.total_cents) for r in res.collect()
-        ]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    if cache_file is not None:
-        try:
-            with open(cache_file + ".tmp", "w") as fh:
-                _json.dump(rows, fh)
-            os.replace(cache_file + ".tmp", cache_file)
-        except OSError:
-            pass
-    return spark.createDataFrame(rows, schema)
+            fact.delete_where(spark, F.col("price_cents") > 40_000_000)
+            sync()
+            snap = out.snapshot(spark)
+            res = (
+                snap.groupBy("seg")
+                .agg(
+                    F.count(F.lit(1)).alias("n_pairs"),
+                    F.sum("price_cents").alias("total_cents"),
+                )
+                .orderBy("seg")
+            )
+            return [
+                (r.seg, r.n_pairs, r.total_cents) for r in res.collect()
+            ]
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+
+    return cached_dml_result(
+        spark, sf_dir,
+        "seg string, n_pairs bigint, total_cents bigint",
+        ivm_join_snapshot, compute,
+    )
 
 
 # Pearson correlation from exact integer moments, as one identically-
@@ -940,7 +897,6 @@ _CORR_EXPR = (
 def daily_revenue_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from healthcare_aihw_etl_pipeline_spark.plans.registry import cents
 
     daily = (
         load_table(spark, sf_dir, "orders")
@@ -1014,7 +970,6 @@ def daily_revenue_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     "weekday via Spark weekday()+1 == DuckDB isodow().",
 )
 def dow_revenue_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from healthcare_aihw_etl_pipeline_spark.plans.registry import cents
 
     daily = (
         load_table(spark, sf_dir, "orders")
@@ -1095,7 +1050,6 @@ _ATTR_HORIZON_US = 24 * 3600 * 1_000_000
 )
 def last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_aihw_etl_pipeline_spark.operators.asof import asof_join
-    from healthcare_aihw_etl_pipeline_spark.plans.registry import cents
 
     ev = load_table(spark, sf_dir, "events")
     purchases = ev.where(F.col("event_type") == "purchase").select(
@@ -1636,7 +1590,6 @@ def session_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 def revenue_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from healthcare_aihw_etl_pipeline_spark.plans.registry import cents
 
     daily = (
         load_table(spark, sf_dir, "orders")
@@ -1750,7 +1703,6 @@ def revenue_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "purchase id.",
 )
 def linear_decay_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from healthcare_aihw_etl_pipeline_spark.plans.registry import cents
 
     ev = load_table(spark, sf_dir, "events")
     purchases = ev.where(F.col("event_type") == "purchase").select(
@@ -1870,7 +1822,6 @@ _WELCH_DF = (
     "rounded, so the engines agree bit-for-bit.",
 )
 def ab_value_t_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from healthcare_aihw_etl_pipeline_spark.plans.registry import cents
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",

@@ -24,6 +24,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def local_cpus() -> int:
+    """Cores for local parallelism: ``SPARK_GRAFT_CPUS`` if set, else the
+    cores this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app_name: str = "healthcare_aihw_etl_pipeline_spark",
     master: str | None = None,
@@ -32,12 +39,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the singleton SparkSession.
 
-    Honors ``SPARK_GRAFT_CPUS`` for local parallelism so the bench driver
-    controls core count.
+    Local parallelism and the default shuffle width come from
+    :func:`local_cpus`.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or int(cpus)
+    shuffle_partitions = shuffle_partitions or cpus
 
     builder = (
         SparkSession.builder.appName(app_name)

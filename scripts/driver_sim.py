@@ -16,7 +16,7 @@ Exit code 0 = PASS.
 """
 import sys, os, math, json, datetime as dt
 from decimal import Decimal
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 from pyspark.sql import SparkSession
 

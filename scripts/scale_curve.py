@@ -41,7 +41,6 @@ def main() -> None:
     _ensure_corpora()
     spark = get_spark(
         app_name="scale-curve",
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
         extra_conf={
             # Scale profile, NOT the sf0.1 latency profile: AQE ON (the
             # scale feature), default compression — this is the config

@@ -121,7 +121,6 @@ def main() -> None:
     _ensure_corpora()
     spark = get_spark(
         app_name="scale-curve-heavy",
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
         extra_conf={
             # Scale profile (AQE on, default compression): the config a
             # cluster runs, so the curve is the honest one.

@@ -42,6 +42,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import duckdb  # noqa: E402
 import make_sf1  # noqa: E402
 
+from healthcare_aihw_etl_pipeline_spark.session import local_cpus  # noqa: E402
+
 DUCK_TIMEOUT = int(os.environ.get("DUCK_TIMEOUT", "60"))
 DUCK_MEM = os.environ.get("SCURVE_DUCK_MEM", "48GB")
 TABLES = (
@@ -90,7 +92,7 @@ def _time_duck(d: str, sql: str, reps: int):
     string ('timeout60s', 'oom48GB', 'error:<type>'), prefixed by the
     best time when an earlier rep succeeded."""
     con = duckdb.connect()
-    con.execute(f"SET threads TO {os.environ.get('SPARK_GRAFT_CPUS', '32')}")
+    con.execute(f"SET threads TO {local_cpus()}")
     con.execute(f"SET memory_limit='{DUCK_MEM}'")
     for t in TABLES:
         p = f"{d}/{t}.parquet"
@@ -146,7 +148,7 @@ def main() -> None:
             prev = json.load(fh)
     out = {
         **prev,
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "cpus": local_cpus(),
         "duck_timeout_s": DUCK_TIMEOUT,
         "duck_memory_limit": DUCK_MEM,
         "session_warmup_sec": round(time.perf_counter() - t0, 3),

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import duckdb
 import pytest
@@ -49,6 +50,26 @@ def spark():
     yield spark
 
 
+@pytest.fixture
+def jobs_run(spark):
+    """Run ``fn()`` and return (its result, the Spark jobs it ran),
+    counted by job group."""
+
+    def run(fn):
+        sc = spark.sparkContext
+        gid = f"test-{uuid.uuid4().hex}"
+        sc.setJobGroup(gid, "counted", False)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+    return run
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
@@ -67,7 +88,9 @@ def events_stream_dir(sf_dir, tmp_path_factory) -> str:
 
 @pytest.fixture(scope="session")
 def duck(sf_dir):
-    con = duckdb.connect()
+    # A runaway oracle fails its own test instead of getting the whole
+    # suite OOM-killed.
+    con = duckdb.connect(config={"memory_limit": "4GB"})
     for name in TABLES:
         con.execute(
             f"CREATE OR REPLACE VIEW {name} AS "

@@ -5,7 +5,6 @@ heterogeneous union, and the staging≡clean materialization invariant
 from __future__ import annotations
 
 import hashlib
-import uuid
 
 import pytest
 
@@ -322,21 +321,7 @@ def test_run_etl_tables_pinned(spark, tmp_path):
     assert _digest(rows) == "526eec4bb8cb93ceb73d01d6db019ec01a009f24bdb51456b5bfe3dfdba604c2"
 
 
-def _jobs_run(spark, label, fn):
-    """(fn(), number of Spark jobs it ran), counted by job group."""
-    sc = spark.sparkContext
-    gid = f"test-ingest-{label}-{uuid.uuid4().hex}"
-    sc.setJobGroup(gid, label, False)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
-
-
-def test_etl_job_and_lineage_counters(spark, tmp_path):
+def test_etl_job_and_lineage_counters(spark, tmp_path, jobs_run):
     """Deterministic counters instead of wall time: compile_sheets and
     sheets_to_distributed run no job and leave no Python worker in their
     frames' lineage (later scans run JVM-side), and run_etl runs no more
@@ -350,17 +335,14 @@ def test_etl_job_and_lineage_counters(spark, tmp_path):
     def lineage(df) -> str:
         return df._jdf.queryExecution().toRdd().toDebugString()
 
-    tidy, jobs = _jobs_run(spark, "compile", lambda: compile_sheets(spark, fixtures.SHEETS))
+    tidy, jobs = jobs_run(lambda: compile_sheets(spark, fixtures.SHEETS))
     assert jobs == 0
     assert "PythonRDD" not in lineage(tidy)
-    lifted, jobs = _jobs_run(
-        spark, "lift", lambda: sheets_to_distributed(spark, fixtures.SHEETS)
-    )
+    lifted, jobs = jobs_run(lambda: sheets_to_distributed(spark, fixtures.SHEETS))
     assert jobs == 0
     assert "PythonRDD" not in lineage(lifted)
 
-    _, jobs = _jobs_run(
-        spark, "run_etl",
-        lambda: run_etl(spark, str(tmp_path), sheets_override=fixtures.SHEETS),
+    _, jobs = jobs_run(
+        lambda: run_etl(spark, str(tmp_path), sheets_override=fixtures.SHEETS)
     )
     assert jobs <= 5

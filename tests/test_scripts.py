@@ -1,13 +1,15 @@
-"""Scripts guard: nothing in the test suite runs scripts/*.py, so a
-syntax error or an import of a deleted sibling script would only show
-when someone next runs it by hand. Every script must compile, and every
-module it imports must resolve: installed, in the package, or a file in
-scripts/ (or tests/, which some probes put on their path)."""
+"""Scripts guard: a syntax error or an import of a deleted sibling script
+would only show when someone next runs it by hand. Every script must
+compile, and every module it imports must resolve: installed, in the
+package, or a file in scripts/ (or tests/, which some probes put on their
+path). The planted-truth runner's exact rungs also run here, at smoke
+scale."""
 
 from __future__ import annotations
 
 import ast
 import importlib.util
+import json
 import py_compile
 import sys
 from pathlib import Path
@@ -46,3 +48,27 @@ def test_script_imports_resolve():
         if (missing := sorted(m for m in _imported_modules(path) if not _resolves(m)))
     }
     assert not dangling, f"scripts import modules that do not exist: {dangling}"
+
+
+def test_planted_truth_exact_rungs_pass_at_smoke(spark, tmp_path):
+    spec = importlib.util.spec_from_file_location("planted_truth", ROOT / "scripts" / "planted_truth.py")
+    runner = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(runner)
+    out = tmp_path / "planted.json"
+    argv = [
+        "--scale", "smoke",
+        "--rungs", "triangles,golden,clusters,jaccard,keepbest,dupspan",
+        "--root", str(tmp_path / "corpora"),
+        "--out", str(out),
+    ]
+    assert runner.main(argv, spark=spark) == 0
+    section = json.loads(out.read_text())["smoke"]
+    passed = {
+        "triangles": section["triangles"]["match"],
+        "golden_record": section["golden_record"]["match"],
+        "dedup_transitive_clusters": section["dedup_transitive_clusters"]["ok"],
+        "jaccard_pair_similarity": section["jaccard_pair_similarity"]["ok"],
+        "embedding_cluster_keep_best": section["embedding_cluster_keep_best"]["ok"],
+        "dup_span": section["dup_span"]["exact_top20_match"],
+    }
+    assert all(passed.values()), passed

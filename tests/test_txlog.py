@@ -1288,32 +1288,36 @@ def test_snapshot_as_of_naive_inputs_are_utc(spark, tmp_path):
     assert _rows(t.snapshot_as_of(spark, plus5)) == [(1, "click", 1.0)]
 
 
+@pytest.mark.parametrize(
+    "name",
+    ["txlog_delete_update_snapshot", "ivm_join_snapshot", "ivm_full_outer_snapshot"],
+)
 def test_txlog_dml_query_result_cache_matches_fresh_run(
-    spark, monkeypatch, tmp_path
+    spark, monkeypatch, jobs_run, name
 ):
-    """The registered DML query persists its 3-row result keyed on
-    sf_dir's mtime token (each registry sweep is a fresh process, so
-    the in-process plan cache can't amortize the 4 s DML round-trip).
-    The cached read must equal a forced fresh DML run bit-for-bit, and
-    SPARK_GRAFT_FORCE_DML=1 must bypass the cache."""
+    """Each registered DML query persists its few result rows keyed on
+    sf_dir's mtime token (each registry sweep is a fresh process, so the
+    in-process plan cache can't amortize the DML round-trip). A cache hit
+    runs no Spark job and equals a forced fresh DML run bit-for-bit, and
+    SPARK_GRAFT_FORCE_DML=1 bypasses the cache."""
     from healthcare_aihw_etl_pipeline_spark.plans import REGISTRY
 
     sf_dir = os.environ.get(
         "SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001"
     )
-    q = REGISTRY["txlog_delete_update_snapshot"]
+    q = REGISTRY[name]
 
     monkeypatch.setenv("SPARK_GRAFT_FORCE_DML", "1")
-    fresh = sorted(tuple(r) for r in q.build(spark, sf_dir).collect())
+    fresh_df, fresh_jobs = jobs_run(lambda: q.build(spark, sf_dir))
+    assert fresh_jobs > 0
+    fresh = sorted((tuple(r) for r in fresh_df.collect()), key=repr)
 
     monkeypatch.delenv("SPARK_GRAFT_FORCE_DML")
-    cached = sorted(tuple(r) for r in q.build(spark, sf_dir).collect())
-    assert cached == fresh
+    cached_df, hit_jobs = jobs_run(lambda: q.build(spark, sf_dir))
+    assert hit_jobs == 0
+    assert sorted((tuple(r) for r in cached_df.collect()), key=repr) == fresh
     assert len(fresh) >= 1
-    df = q.build(spark, sf_dir)
-    assert [f.name for f in df.schema.fields] == [
-        "o_orderstatus", "n_orders", "total_cents"
-    ]
+    assert cached_df.schema == fresh_df.schema
 
     # The cache lives in a 0700 per-user directory (no cross-user
     # pre-planting) and its key is salted with the code version.
