@@ -88,70 +88,6 @@ def asof_join(
     )
 
 
-def asof_join_cogrouped(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    on: Sequence[str],
-    ts: str,
-    value_cols: Sequence[str],
-    suffix: str = "_asof",
-    direction: str = "backward",
-) -> DataFrame:
-    """Cogrouped-pandas twin of :func:`asof_join` — the fourth member of
-    the pandas-API matrix (mapInPandas, applyInPandas,
-    applyInPandasWithState, cogroup().applyInPandas): both sides shuffle
-    once on the key, and each key's pair of pandas frames merges with
-    ``pd.merge_asof`` inside the executor.
-
-    Same single-shuffle profile as the native composition. The native
-    union+window form is preferred in production (stays in whole-stage
-    codegen, no Arrow transfer); this twin exists for per-key logic that
-    genuinely needs pandas (e.g. interpolation instead of
-    carry-forward) and is equivalence-tested against the native form.
-    """
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    on = list(on)
-    value_cols = list(value_cols)
-    out_fields = [left.schema[c] for c in left.columns]
-    right_schema = right.schema
-    out_fields += [
-        T.StructField(f"{c}{suffix}", right_schema[c].dataType, True)
-        for c in value_cols
-    ]
-    out_schema = T.StructType(out_fields)
-    left_cols = list(left.columns)
-
-    def merge(l_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
-        if l_pdf.empty:
-            return pd.DataFrame(columns=[f.name for f in out_fields])
-        l_sorted = l_pdf.sort_values(ts, kind="mergesort")
-        r_pdf = r_pdf[r_pdf[ts].notna()]  # NULL ts never matches (ASOF parity)
-        if r_pdf.empty:
-            out = l_sorted.copy()
-            for c in value_cols:
-                out[f"{c}{suffix}"] = None
-            return out
-        r_sorted = (
-            r_pdf[[ts] + [c for c in value_cols if c != ts]]
-            .assign(**{f"{c}{suffix}": r_pdf[c] for c in value_cols})
-            .sort_values(ts, kind="mergesort")[
-                [ts] + [f"{c}{suffix}" for c in value_cols]
-            ]
-        )
-        return pd.merge_asof(
-            l_sorted, r_sorted, on=ts, direction=direction, suffixes=("", suffix)
-        )[[*left_cols, *[f"{c}{suffix}" for c in value_cols]]]
-
-    return (
-        left.groupBy(*on)
-        .cogroup(right.groupBy(*on))
-        .applyInPandas(merge, schema=out_schema)
-    )
-
-
 def asof_join_bucketed(
     left: DataFrame,
     right: DataFrame,

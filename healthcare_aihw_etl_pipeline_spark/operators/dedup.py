@@ -58,25 +58,6 @@ def word_shingles(text_col: Column | str, k: int = 5) -> Column:
     )
 
 
-def char_shingles(text_col: Column | str, k: int = 8) -> Column:
-    """k-char shingles (distinct) — language-agnostic alternative.
-    Trimmed text let-bound once per row (see word_shingles)."""
-    from healthcare_aihw_etl_pipeline_spark.functions.scalar import bind
-
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return bind(
-        F.trim(c),
-        lambda s: F.array_distinct(
-            F.transform(
-                F.sequence(
-                    F.lit(1), F.greatest(F.length(s) - F.lit(k - 1), F.lit(1))
-                ),
-                lambda i: F.substr(s, i, F.lit(k)),
-            )
-        ),
-    )
-
-
 def _permutation_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
     rng = random.Random(seed)
     return [(rng.randrange(1, _P), rng.randrange(0, _P)) for _ in range(num_hashes)]

@@ -84,14 +84,6 @@ def distinct_domain(df: DataFrame, col: str, *, drop_empty: bool = True) -> Data
     return out.distinct().orderBy(col)
 
 
-def cardinality_guard(df: DataFrame, col: str, lo: int = 1, hi: int = 50) -> bool:
-    """F6 — offer a dynamic dim filter only when 1 < n_distinct < 50
-    (/root/reference/streamlit_app.py:66-73). Exact count, single column
-    scan; cheap because of column pruning."""
-    n = df.select(F.countDistinct(col).alias("n")).first()["n"]
-    return lo < n < hi
-
-
 def top_k(df: DataFrame, order_col: str, k: int, *, tiebreak: Sequence[str] = ()) -> DataFrame:
     """O1/O3/O4 — top-k by measure descending
     (`nlargest(10, ...)`, /root/reference/streamlit_app.py:129;

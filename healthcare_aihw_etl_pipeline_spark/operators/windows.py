@@ -75,78 +75,3 @@ def top_k_per_group(
     w = Window.partitionBy(*partition_by).orderBy(*order)
     ranked = df.withColumn(rank_name, getattr(F, rank_fn)().over(w))
     return ranked.where(F.col(rank_name) <= k)
-
-
-def top_k_per_group_agg(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    order_col: str,
-    k: int,
-    *,
-    tiebreak: Sequence[str] = (),
-    rank_name: str = "rn",
-) -> DataFrame:
-    """Sort-free top-k per group for SMALL k: k max_by scan-aggregates.
-
-    The window form (`top_k_per_group`) sorts every map partition before
-    the group-limit can prune — the sort dominates when k << group size.
-    This variant runs k rounds; each round takes per group the max of a
-    (order_col, -tiebreaks, full-row) struct — an ordinary hash aggregate
-    with map-side partial combine, so the shuffle carries one candidate
-    row per (task, group) and nothing is ever sorted. Winners are removed
-    between rounds with a broadcast anti-join on the ranking key (the
-    winner set is |groups| rows — broadcast-sized by construction).
-
-    Requirements: `tiebreak` columns must be numeric (they are negated so
-    "ascending tiebreak" becomes part of one max), and (order_col,
-    *tiebreak) must be unique within a group — the same determinism
-    condition under which row_number itself is well-defined. NULLs in
-    order/tiebreak columns are handled: winner removal uses null-safe
-    equality, so a null-keyed winner is still removed from later rounds
-    (a plain equi-anti-join would never match it and re-select it with
-    every rank — duplicate winners).
-
-    Scale: k scans of the (column-pruned) input vs one scan + one sort.
-    Wins while k * scan_cost < sort_cost; for large k use the window form.
-    """
-    tb = list(tiebreak)
-    neg = [(-F.col(c)).alias(f"_t{i}") for i, c in enumerate(tb)]
-    work = df.select(*df.columns, *neg)
-    key_fields = [order_col, *[f"_t{i}" for i in range(len(tb))]]
-    payload = F.struct(*[F.col(c) for c in df.columns]).alias("_row")
-    best_struct = F.struct(
-        *[F.col(c) for c in key_fields], payload
-    )
-    rounds: list[DataFrame] = []
-    remaining = work
-    for rn in range(1, k + 1):
-        best = remaining.groupBy(*partition_by).agg(
-            F.max(best_struct).alias("_b")
-        )
-        rounds.append(
-            best.select(F.col("_b._row").alias("_row")).select(
-                "_row.*", F.lit(rn).alias(rank_name)
-            )
-        )
-        if rn < k:
-            winner_keys = best.select(
-                *partition_by,
-                *[F.col(f"_b.{c}").alias(c) for c in key_fields],
-            )
-            # eqNullSafe, not an equi-join: a NULL order/tiebreak value
-            # still identifies a winner row, and plain `=` would leave it
-            # in `remaining` forever (advisor-reported duplicate-winner
-            # bug). NULL-safe equality still hashes/broadcasts fine.
-            left = remaining.alias("_l")
-            right = F.broadcast(winner_keys.alias("_r"))
-            cond = None
-            for c in [*partition_by, *key_fields]:
-                e = F.col(f"_l.{c}").eqNullSafe(F.col(f"_r.{c}"))
-                cond = e if cond is None else cond & e
-            remaining = left.join(right, cond, "left_anti").select(
-                *[F.col(f"_l.{c}").alias(c) for c in work.columns]
-            )
-    out = rounds[0]
-    for r in rounds[1:]:
-        out = out.unionByName(r)
-    return out

@@ -4,13 +4,13 @@
     discover → fetch → parse sheets → compile (union) → two-tier load
 
 Network and Excel decoding are injected (see sources.discovery), so the
-pipeline is fully testable offline with raw-row sheets. All three ingest
+pipeline is fully testable offline with raw-row sheets. The two ingest
 entry points parse with the one pure-Python core,
-``sheet_ingest.iter_tidy_records``: here ``compile_sheets`` runs it on
-the driver and loads the tidy rows as one Arrow table, so the load's
-scans run JVM-side without Python workers; ``compile_sheets_distributed``
-and the ``aihw_sheets`` DataSource run it on executors for landing zones
-too large for the driver. The two-tier load is DataFrame algebra.
+``sheet_ingest.iter_tidy_records``, under one column contract: here
+``compile_sheets`` runs it on the driver and loads the tidy rows as one
+Arrow table, so the load's scans run JVM-side without Python workers;
+``compile_sheets_distributed`` runs it on executors through mapInArrow.
+The two-tier load is DataFrame algebra.
 """
 
 from __future__ import annotations

@@ -382,7 +382,11 @@ _BPE_MAX_VOCAB = 2_000_000
 
 
 def _bpe_stage_sql(i: int) -> str:
-    """One unrolled merge round: pair counts -> argmax -> rewrite."""
+    """One unrolled merge round: pair counts -> argmax -> rewrite.
+
+    t{i} is read by v{i} and by the oracle's consumer of the merge
+    table, v{i} (like v0) by the next round's p and v, so both are
+    MATERIALIZED (see round13_queries' _KNN_ORACLE_CTES)."""
     prev = f"v{i - 1}"
     return f"""
     p{i} AS (
@@ -396,7 +400,7 @@ def _bpe_stage_sql(i: int) -> str:
               FROM {prev})
       ) GROUP BY pr
     ),
-    t{i} AS (
+    t{i} AS MATERIALIZED (
       SELECT CAST({i} AS BIGINT) AS round,
              string_split(pair, ' ')[1] AS left_sym,
              string_split(pair, ' ')[2] AS right_sym,
@@ -404,7 +408,7 @@ def _bpe_stage_sql(i: int) -> str:
              c AS pair_count
       FROM p{i} ORDER BY c DESC, pair ASC LIMIT 1
     ),
-    v{i} AS (
+    v{i} AS MATERIALIZED (
       SELECT replace(spaced,
                      ' ' || left_sym || '  ' || right_sym || ' ',
                      ' ' || merged || ' ') AS spaced, cnt
@@ -420,7 +424,7 @@ _BPE_ORACLE = (
         FROM documents WHERE trim(text) <> ''
       ) WHERE regexp_matches(t, '{_BPE_WORD_RE}') GROUP BY t
     ),
-    v0 AS (
+    v0 AS MATERIALIZED (
       SELECT '  ' || regexp_replace(word, '(.)', '\\1  ', 'g') AS spaced,
              cnt
       FROM words

@@ -1058,7 +1058,7 @@ def _bpe_encode_oracle() -> str:
         FROM documents WHERE trim(text) <> ''
       ) WHERE regexp_matches(t, '{_BPE_WORD_RE}') GROUP BY t
     ),
-    v0 AS (
+    v0 AS MATERIALIZED (
       SELECT '  ' || regexp_replace(word, '(.)', '\\1  ', 'g') AS spaced,
              cnt
       FROM words

@@ -1686,7 +1686,12 @@ _KC_MAX_DRIVER_ROWS = 200_000
 
 
 def _kcenter_oracle() -> str:
-    ctes = ["""qv AS (
+    # qv and the m{t}/p{t} chain are read twice per round, so they are
+    # MATERIALIZED (see round13_queries' _KNN_ORACLE_CTES): inlined, each
+    # round re-expands the chain. Each d{t} joins the new center's 64
+    # codes first, so a round is one n x 64 probe join, not a qv
+    # self-join on d.
+    ctes = ["""qv AS MATERIALIZED (
       SELECT vec_id, u.d AS d,
              CAST(round(CAST(embedding[u.d + 1] AS DOUBLE) * 127)
                   AS BIGINT) AS q
@@ -1698,9 +1703,9 @@ def _kcenter_oracle() -> str:
       FROM qv a JOIN qv b ON b.vec_id = 0 AND b.d = a.d
       GROUP BY a.vec_id
     ),
-    m1 AS (SELECT vec_id, dist FROM d1)"""]
+    m1 AS MATERIALIZED (SELECT vec_id, dist FROM d1)"""]
     for t in range(2, _KC_ROUNDS + 2):
-        ctes.append(f"""p{t} AS (
+        ctes.append(f"""p{t} AS MATERIALIZED (
       SELECT vec_id, dist FROM m{t - 1}
       ORDER BY dist DESC, vec_id LIMIT 1
     )""")
@@ -1708,10 +1713,11 @@ def _kcenter_oracle() -> str:
             ctes.append(f"""d{t} AS (
       SELECT a.vec_id, CAST(SUM((a.q - b.q) * (a.q - b.q)) AS BIGINT)
                AS dist
-      FROM qv a JOIN qv b ON b.d = a.d JOIN p{t} ON b.vec_id = p{t}.vec_id
+      FROM qv a
+      JOIN (SELECT qv.d, qv.q FROM qv JOIN p{t} USING (vec_id)) b ON b.d = a.d
       GROUP BY a.vec_id
     )""")
-            ctes.append(f"""m{t} AS (
+            ctes.append(f"""m{t} AS MATERIALIZED (
       SELECT m.vec_id, LEAST(m.dist, d{t}.dist) AS dist
       FROM m{t - 1} m JOIN d{t} USING (vec_id)
     )""")

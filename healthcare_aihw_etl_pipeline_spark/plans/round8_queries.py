@@ -519,7 +519,6 @@ def _doc_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NLL_QUANT = 10**6
 # Identical ln-probability expression on both engines: add-1 smoothed
 # bigram model ln((c12 + 1) / (c1 + V)), quantized to integer millionths
 # BEFORE the per-document sum so partial-agg order cannot move totals.

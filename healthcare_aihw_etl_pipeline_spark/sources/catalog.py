@@ -37,9 +37,6 @@ TABLES = (
     "embeddings",
 )
 
-# Small dimension tables that should be broadcast in joins at any scale.
-SMALL_DIMS = ("region", "nation")
-
 
 # Lazy-DataFrame handle cache: metadata only (see module docstring).
 # Keyed by applicationId so a new SparkSession never sees stale handles.

@@ -8,12 +8,13 @@ Split of responsibilities:
   each sheet — metadata-sized work, pure Python, unit-testable.
 - *Parsing* (F1 null-drop, X2 clean-text, X3 numeric coercion, R1
   unpivot, F2 null-measure drop, P6 year stamp) is one generator,
-  :func:`iter_tidy_records`, shared by all three entry points:
-  :func:`compile_sheets` runs it on the driver and hands Spark one Arrow
-  table (the tidy frame then scans JVM-side, with no Python worker);
-  :func:`compile_sheets_distributed` runs it on executors through
-  mapInPandas; the ``aihw_sheets`` DataSource
-  (sources/sheet_datasource.py) runs it on executors per workbook file.
+  :func:`iter_tidy_records`, shared by the two entry points. Both take
+  their output columns from :func:`_tidy_schema` and build Arrow tables
+  with :func:`_tidy_records`: :func:`compile_sheets` runs it on the
+  driver and hands Spark one Arrow table (the tidy frame then scans
+  JVM-side, with no Python worker); :func:`compile_sheets_distributed`
+  runs it on executors through mapInArrow, one table per batch of
+  sheets.
 - *Loading* (fill-then-group aggregation, two-tier writes) is lazy
   DataFrame algebra.
 
@@ -31,11 +32,12 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
-from collections.abc import Sequence
+from collections.abc import Iterable, Sequence
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from healthcare_aihw_etl_pipeline_spark.functions.scalar import STATE_CODES, slug
 
@@ -152,8 +154,10 @@ def parse_sheet(
     """Parse one wide sheet into the tidy long form
     (/root/reference/main.py:72-131): returns columns
     ``*id_cols, state, separations, year`` or None for invalid sheets."""
-    table = _tidy_table([(rows, year)])
-    return None if table is None else spark.createDataFrame(table)
+    schema = _tidy_schema([(rows, year)])
+    if schema is None:
+        return None
+    return spark.createDataFrame(_tidy_records([(rows, year)], schema))
 
 
 def compile_sheets(
@@ -165,49 +169,77 @@ def compile_sheets(
 
     Every sheet parses on the driver through :func:`iter_tidy_records`
     into one Arrow table, loaded with a single ``createDataFrame``."""
-    table = _tidy_table(sheets)
-    if table is None:
-        raise RuntimeError("No valid data extracted - parsing rules may need an update.")
-    return spark.createDataFrame(table)
+    schema = _valid_schema(sheets)
+    return spark.createDataFrame(_tidy_records(sheets, schema))
 
 
-def _tidy_table(
+def compile_sheets_distributed(
+    spark: SparkSession,
     sheets: Sequence[tuple[Sequence[Sequence[object]], int]],
-) -> pa.Table | None:
-    """Every valid sheet's tidy rows as one Arrow table (None if no sheet
-    is valid), columns as ``unionByName`` over per-sheet frames
-    ``*id_cols, state, separations, year`` gives them. Columns come from
-    each valid sheet's schema, so an all-junk sheet still adds its dims;
-    a ``Year`` id column is the year column, overwritten in place."""
+    *,
+    partitions: int | None = None,
+) -> DataFrame:
+    """Distributed twin of :func:`compile_sheets`: the same columns and
+    rows, but every sheet parses on an executor. The columns are decided
+    on the driver from the sheets' headers, and each mapInArrow task
+    builds its records under that one schema; a task whose sheets yield
+    no row, or that gets no sheet, emits nothing."""
+    schema = _valid_schema(sheets)
+    sdf = sheets_to_distributed(spark, sheets)
+    if partitions:
+        sdf = sdf.repartition(partitions, "sheet_id")
+
+    def parse(batches):
+        for batch in batches:
+            rows, years = (batch.column(c).to_pylist() for c in ("rows", "year"))
+            yield from _tidy_records(zip(rows, years), schema).to_batches()
+
+    return sdf.mapInArrow(parse, schema=from_arrow_schema(schema))
+
+
+def _valid_schema(
+    sheets: Sequence[tuple[Sequence[Sequence[object]], int]],
+) -> pa.Schema:
+    schema = _tidy_schema(sheets)
+    if schema is None:
+        raise RuntimeError("No valid data extracted - parsing rules may need an update.")
+    return schema
+
+
+def _tidy_schema(
+    sheets: Sequence[tuple[Sequence[Sequence[object]], int]],
+) -> pa.Schema | None:
+    """The tidy columns of these sheets (None if no sheet is valid), as
+    ``unionByName`` over per-sheet frames ``*id_cols, state, separations,
+    year`` gives them. Columns come from each valid sheet's header, so an
+    all-junk sheet still adds its dims; a ``Year`` id column is the year
+    column, kept at its place."""
     cols: dict[str, None] = {}
-    records: list[dict] = []
-    for rows, year in sheets:
+    for rows, _ in sheets:
         schema = infer_schema(rows)
-        if schema is None:
-            continue
-        cols.update(dict.fromkeys([*schema.id_cols, "state", "separations", "year"]))
-        records.extend(
-            dict(zip(keys, vals), state=st, separations=v, year=yr)
-            for yr, st, v, keys, vals in iter_tidy_records(year, rows)
-        )
+        if schema is not None:
+            cols.update(dict.fromkeys([*schema.id_cols, "state", "separations", "year"]))
     if not cols:
         return None
-    fields = [
+    return pa.schema(
         pa.field(c, FIXED.get(c, pa.string()), c not in ("state", "year")) for c in cols
+    )
+
+
+def _tidy_records(
+    sheets: Iterable[tuple[Sequence[Sequence[object]], int]],
+    schema: pa.Schema,
+) -> pa.Table:
+    """Every sheet's tidy rows as one Arrow table under ``schema`` (a
+    :func:`_tidy_schema` covering these sheets): dims a sheet lacks are
+    NULL, and a ``Year`` id column holds the sheet's year."""
+    records = [
+        dict(zip(keys, vals), state=st, separations=v, year=yr)
+        for rows, year in sheets
+        for yr, st, v, keys, vals in iter_tidy_records(year, rows)
     ]
-    return pa.Table.from_pylist(records, schema=pa.schema(fields))
+    return pa.Table.from_pylist(records, schema=schema)
 
-
-# ---------------------------------------------------------------------------
-# Distributed ingest (SURVEY §4.2 extension #2): the same parse, but with
-# the per-sheet work running ON EXECUTORS via mapInPandas. compile_sheets
-# above parses every sheet on the driver (fine for metadata-sized
-# workbooks); for a landing zone of thousands of wide files the (sheet,
-# rows) pairs themselves must be a distributed dataset and each task must
-# parse its own shard. The dynamic id-columns problem (mapInPandas needs a
-# fixed output schema) is solved by emitting dims as map<string,string>
-# and widening to real columns afterwards with one metadata-sized
-# key-union pass (:func:`widen_dims`).
 
 # The reference's three `_clean_text` regexes, with Python's Unicode-aware
 # \s and `$`; functions.scalar.clean_text spells the same semantics in
@@ -280,9 +312,9 @@ def sheets_to_distributed(
 def iter_tidy_records(year, rows):
     """Pure-Python per-sheet parse: yield tidy long records
     ``(year, state, separations, dim_keys, dim_vals)`` from one raw
-    sheet. The one parse core behind compile_sheets (driver),
-    the mapInPandas kernel and the ``aihw_sheets`` Python DataSource
-    (sources/sheet_datasource.py); invalid sheets yield nothing."""
+    sheet. The one parse core behind compile_sheets (driver) and
+    compile_sheets_distributed (executors); invalid sheets yield
+    nothing."""
     rows = [list(r) for r in rows]
     schema = infer_schema(rows)
     if schema is None:
@@ -302,81 +334,6 @@ def iter_tidy_records(year, rows):
             if v is None:  # F2
                 continue
             yield int(year), st, v, list(schema.id_cols), vals
-
-
-# iter_tidy_records' record shape, as emitted by the mapInPandas kernel and
-# the ``aihw_sheets`` DataSource.
-RECORD_SCHEMA = (
-    "year int, state string, separations double, "
-    "dim_keys array<string>, dim_vals array<string>"
-)
-
-# mapInPandas output columns with explicit dtypes, so a partition with zero
-# valid rows still yields typed columns. Arrow cannot convert pandas dict
-# cells to map<string,string>, so dims travel as parallel key/value
-# arrays, map_from_arrays'd JVM-side by widen_dims.
-_KERNEL_DTYPES = dict(
-    year="int64", state="object", separations="float64", dim_keys="object", dim_vals="object"
-)
-
-
-def _parse_sheets_batch(batches):
-    """mapInPandas kernel: parse each sheet's rows into tidy long records.
-    Runs entirely executor-side."""
-    import pandas as pd
-
-    for pdf in batches:
-        records = [
-            rec
-            for year, rows in zip(pdf["year"], pdf["rows"])
-            for rec in iter_tidy_records(year, rows)
-        ]
-        yield pd.DataFrame(records, columns=list(_KERNEL_DTYPES)).astype(_KERNEL_DTYPES)
-
-
-def widen_dims(tidy: DataFrame) -> DataFrame:
-    """Widen fixed-schema ``(dim_keys, dim_vals)`` records (the mapInPandas
-    kernel's and the ``aihw_sheets`` DataSource's output) into real dim
-    columns, sorted by name. One metadata-sized key-union pass; records
-    whose sheet lacks a dim get NULL there, like unionByName's fill. A
-    dim named like a fixed column (a ``Year`` id column) gives way to the
-    record's own column, as in :func:`compile_sheets`."""
-    # localCheckpoint (not persist): consumed twice (key discovery + the
-    # returned frame), and checkpoint blocks free on GC instead of
-    # accumulating in the CacheManager across repeated ingests.
-    mapped = tidy.withColumn(
-        "dims", F.map_from_arrays("dim_keys", "dim_vals")
-    ).localCheckpoint(eager=True)
-    keys = sorted(
-        r[0]
-        for r in mapped.select(F.explode("dim_keys").alias("k")).distinct().collect()
-        if r[0] not in FIXED
-    )
-    return mapped.select(
-        *[F.col("dims").getItem(k).alias(k) for k in keys],
-        "state",
-        "separations",
-        "year",
-    )
-
-
-def compile_sheets_distributed(
-    spark: SparkSession,
-    sheets: Sequence[tuple[Sequence[Sequence[object]], int]],
-    *,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Distributed twin of :func:`compile_sheets`: same tidy rows (dims
-    as real columns, asserted equal by tests), but every sheet parses on
-    an executor and :func:`widen_dims` does the U1 union-by-name step."""
-    sdf = sheets_to_distributed(spark, sheets)
-    if partitions:
-        sdf = sdf.repartition(partitions, "sheet_id")
-    tidy = widen_dims(sdf.mapInPandas(_parse_sheets_batch, schema=RECORD_SCHEMA))
-    # One small job over the checkpointed records widen_dims materialized.
-    if tidy.isEmpty():
-        raise RuntimeError("No valid data extracted - parsing rules may need an update.")
-    return tidy
 
 
 def clean_aggregate(tidy: DataFrame) -> DataFrame:

@@ -130,24 +130,30 @@ def test_clean_aggregate_drops_all_null_dims(spark):
 
 
 def test_distributed_compile_matches_driver_compile(spark):
-    """SURVEY §4.2 extension #2: the mapInPandas landing-zone path must
-    produce exactly the rows of the driver-side compile (same columns,
-    same multiset of values) on the fixture corpus — every quirk (junk
-    preamble, unnamed headers, total drop, tuple artifacts, coerce-casts,
-    ragged rows, invalid sheet, heterogeneous dims) included, plus a
-    sheet whose `Year` id column the sheet's year overwrites."""
+    """SURVEY §4.2 extension #2: the mapInArrow path must produce exactly
+    the driver-side compile's frame (fields by name, type, nullability and
+    order, and the multiset of rows) on the fixture corpus — every quirk
+    (junk preamble, unnamed headers, total drop, tuple artifacts,
+    coerce-casts, ragged rows, invalid sheet, heterogeneous dims)
+    included, plus a sheet whose `Year` id column the sheet's year
+    overwrites, and valid sheets with only junk measures, first, last or
+    alone. More partitions than sheets leaves partitions empty."""
     from healthcare_aihw_etl_pipeline_spark.sources.sheet_ingest import (
         compile_sheets_distributed,
     )
 
-    for zone in (fixtures.SHEETS, [YEAR_ID, fixtures.SHEET2]):
+    zones = (
+        fixtures.SHEETS,
+        [YEAR_ID, fixtures.SHEET2],
+        [JUNK, fixtures.SHEET2],
+        [fixtures.SHEET2, JUNK],
+        [JUNK],
+    )
+    for zone, partitions in [(z, 4) for z in zones] + [(fixtures.SHEETS, 16)]:
         driver = compile_sheets(spark, zone)
-        dist = compile_sheets_distributed(spark, zone, partitions=4)
-        assert sorted(driver.columns) == sorted(dist.columns)
-        cols = sorted(driver.columns)
-        a = sorted(map(repr, (tuple(r) for r in driver.select(*cols).collect())))
-        b = sorted(map(repr, (tuple(r) for r in dist.select(*cols).collect())))
-        assert a == b
+        dist = compile_sheets_distributed(spark, zone, partitions=partitions)
+        assert _fields(dist) == _fields(driver)
+        assert _sorted_rows(dist) == _sorted_rows(driver)
 
 
 def test_distributed_compile_no_valid_sheets_raises(spark):
@@ -324,11 +330,13 @@ def test_run_etl_tables_pinned(spark, tmp_path):
 def test_etl_job_and_lineage_counters(spark, tmp_path, jobs_run):
     """Deterministic counters instead of wall time: compile_sheets and
     sheets_to_distributed run no job and leave no Python worker in their
-    frames' lineage (later scans run JVM-side), and run_etl runs no more
-    jobs than the 5 the per-sheet Catalyst implementation ran on the
-    fixture sheets."""
+    frames' lineage (later scans run JVM-side), compile_sheets_distributed
+    runs no job until its frame is used, and run_etl runs no more jobs
+    than the 5 the per-sheet Catalyst implementation ran on the fixture
+    sheets."""
     from healthcare_aihw_etl_pipeline_spark.pipeline import run_etl
     from healthcare_aihw_etl_pipeline_spark.sources.sheet_ingest import (
+        compile_sheets_distributed,
         sheets_to_distributed,
     )
 
@@ -341,6 +349,8 @@ def test_etl_job_and_lineage_counters(spark, tmp_path, jobs_run):
     lifted, jobs = jobs_run(lambda: sheets_to_distributed(spark, fixtures.SHEETS))
     assert jobs == 0
     assert "PythonRDD" not in lineage(lifted)
+    _, jobs = jobs_run(lambda: compile_sheets_distributed(spark, fixtures.SHEETS))
+    assert jobs == 0
 
     _, jobs = jobs_run(
         lambda: run_etl(spark, str(tmp_path), sheets_override=fixtures.SHEETS)

@@ -353,12 +353,8 @@ def test_asof_join_null_value_and_null_ts(spark):
 
 def test_asof_join_forward_direction(spark):
     """Forward mode: smallest right ts >= left ts (inclusive), NULL when
-    nothing follows — the native window form and the cogrouped
-    merge_asof twin must agree row-for-row."""
-    from healthcare_aihw_etl_pipeline_spark.operators.asof import (
-        asof_join,
-        asof_join_cogrouped,
-    )
+    nothing follows."""
+    from healthcare_aihw_etl_pipeline_spark.operators.asof import asof_join
 
     left = spark.createDataFrame(
         [(1, 100, "a"), (1, 160, "b"), (1, 300, "c"), (2, 50, "d")],
@@ -380,13 +376,6 @@ def test_asof_join_forward_direction(spark):
         "c": None,  # nothing follows
         "d": None,  # right row is earlier → no forward match
     }
-    twin = {
-        r.tag: r.v_asof
-        for r in asof_join_cogrouped(
-            left, right, on=["k"], ts="t", value_cols=["v"], direction="forward"
-        ).collect()
-    }
-    assert twin == native
 
 
 def test_chunk_tokens_boundaries(spark):
@@ -548,35 +537,6 @@ def test_cluster_outlier_scores_finds_planted_outlier(spark):
         grp = [r for r in out if r.group == g]
         top = max(grp, key=lambda r: r.outlier_score)
         assert top.vec_id == g * 100 + 99, (g, top)
-
-
-def test_asof_cogrouped_matches_native(spark, sf_dir):
-    """The cogrouped pd.merge_asof twin must produce exactly the native
-    union+window as-of join's rows (clicks → most recent prior purchase
-    per user; microsecond event times make right-side ties impossible,
-    so the arbitrary-tie caveat doesn't bite)."""
-    from healthcare_aihw_etl_pipeline_spark.operators.asof import (
-        asof_join,
-        asof_join_cogrouped,
-    )
-    from healthcare_aihw_etl_pipeline_spark.sources.catalog import load_table
-
-    events = load_table(spark, sf_dir, "events")
-    clicks = events.where(F.col("event_type") == "click").select("user_id", "ts")
-    purchases = events.where(F.col("event_type") == "purchase").select(
-        "user_id", "ts"
-    )
-    kw = dict(on=["user_id"], ts="ts", value_cols=["ts"])
-    native = {
-        (r.user_id, r.ts, r.ts_asof)
-        for r in asof_join(clicks, purchases, **kw).collect()
-    }
-    cogrouped = {
-        (r.user_id, r.ts, r.ts_asof)
-        for r in asof_join_cogrouped(clicks, purchases, **kw).collect()
-    }
-    assert cogrouped == native
-    assert any(t[2] is not None for t in native)  # matches exist
 
 
 def test_asof_self_join_matches_two_sided(spark, sf_dir):

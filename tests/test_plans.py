@@ -549,62 +549,6 @@ def test_events_typed_agg_no_parser_in_plan(spark, sf_dir):
     assert "HashAggregate" in p, p
 
 
-def test_top_k_per_group_agg_matches_window(spark, sf_dir):
-    """The sort-free aggregate-side top-k must reproduce the window
-    form's rows exactly, rank column included (the determinism condition
-    — unique (order, tiebreak) per group — holds on o_orderkey)."""
-    from healthcare_aihw_etl_pipeline_spark.operators.windows import (
-        top_k_per_group,
-        top_k_per_group_agg,
-    )
-    from healthcare_aihw_etl_pipeline_spark.sources.catalog import load_table
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderpriority", "o_orderkey", "o_totalprice"
-    )
-    kw = dict(
-        partition_by=["o_orderpriority"],
-        order_col="o_totalprice",
-        k=4,
-        tiebreak=["o_orderkey"],
-    )
-    want = sorted(map(tuple, top_k_per_group(orders, **kw).collect()))
-    got = sorted(
-        map(
-            tuple,
-            top_k_per_group_agg(orders, **kw)
-            .select("o_orderpriority", "o_orderkey", "o_totalprice", "rn")
-            .collect(),
-        )
-    )
-    assert got == want
-
-
-def test_top_k_per_group_agg_null_order_values(spark):
-    """A NULL order value must not produce duplicate winners: winner
-    removal between rounds uses null-safe equality, so the null-keyed
-    row is selected at most once (advisor-reported bug: plain equi
-    anti-join re-selected it with every rank)."""
-    from healthcare_aihw_etl_pipeline_spark.operators.windows import (
-        top_k_per_group_agg,
-    )
-
-    df = spark.createDataFrame(
-        [("g", 1, None), ("g", 2, 5.0), ("g", 3, 3.0)],
-        ["grp", "id", "score"],
-    )
-    got = sorted(
-        (r.grp, r.id, r.score, r.rn)
-        for r in top_k_per_group_agg(
-            df, ["grp"], "score", 3, tiebreak=["id"]
-        ).collect()
-    )
-    # descending max: 5.0, 3.0, then the NULL row exactly once, rank 3
-    assert [(g, i, rn) for g, i, _s, rn in got] == [
-        ("g", 1, 3), ("g", 2, 1), ("g", 3, 2)
-    ], got
-
-
 def test_plan_cache_invalidate(spark, sf_dir):
     """The prepared-plan cache assumes immutable inputs; invalidate() is
     the hook a data-rewriting path (e.g. the _events_typed rebuild) must

@@ -3,7 +3,8 @@ would only show when someone next runs it by hand. Every script must
 compile, and every module it imports must resolve: installed, in the
 package, or a file in scripts/ (or tests/, which some probes put on their
 path). The planted-truth runner's exact rungs also run here, at smoke
-scale."""
+scale. A dead-name guard keeps every top-level name of the package in
+use."""
 
 from __future__ import annotations
 
@@ -11,10 +12,13 @@ import ast
 import importlib.util
 import json
 import py_compile
+import re
 import sys
+from collections import Counter
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
+PACKAGE = ROOT / "healthcare_aihw_etl_pipeline_spark"
 SCRIPTS = sorted((ROOT / "scripts").glob("*.py"))
 LOCAL_DIRS = (ROOT / "scripts", ROOT / "tests", ROOT)
 
@@ -72,3 +76,29 @@ def test_planted_truth_exact_rungs_pass_at_smoke(spark, tmp_path):
         "dup_span": section["dup_span"]["exact_top20_match"],
     }
     assert all(passed.values()), passed
+
+
+def _top_level_names(path: Path):
+    for node in ast.parse(path.read_text(), str(path)).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            yield node.name
+        elif isinstance(node, ast.Assign):
+            yield from (t.id for t in node.targets if isinstance(t, ast.Name))
+        elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+            yield node.target.id
+
+
+def test_no_dead_top_level_names():
+    """Every top-level def, class or constant of the package is named
+    somewhere in the package, tests/, scripts/ or bench.py besides its
+    own definition (word-boundary match, so a name that several modules
+    define needs more mentions than definitions). ``__all__`` and
+    ``__version__`` are read by protocol, not by name."""
+    pkg = sorted(PACKAGE.rglob("*.py"))
+    corpus = [*pkg, *(ROOT / "tests").glob("*.py"), *SCRIPTS, ROOT / "bench.py"]
+    words = Counter(re.findall(r"\w+", "\n".join(p.read_text() for p in corpus)))
+    defs = Counter(name for path in pkg for name in _top_level_names(path))
+    dead = sorted(
+        n for n, k in defs.items() if words[n] <= k and n not in ("__all__", "__version__")
+    )
+    assert not dead, f"top-level names referenced nowhere: {dead}"
