@@ -4,12 +4,13 @@ tidy fact DataFrame.
 
 The reference recomputes a pandas groupby per widget per interaction
 (A3–A10); here the serving pattern is: load → harmonize → persist once
-(C2), then lazy per-widget aggregations, or one cube pass serving every
-widget grain (supersedes the eight re-scans).
+(C2), read the filter domains once per served frame, then one lazy
+aggregation per widget and one grouping-sets aggregate for the insights.
 """
 
 from __future__ import annotations
 
+import weakref
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -18,19 +19,17 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from healthcare_aihw_etl_pipeline_spark.operators.relational import (
-    FIXED_COLS,
     dims_of,
-    distinct_domain,
     top_k,
 )
 from healthcare_aihw_etl_pipeline_spark.operators.reshape import pivot_sum
-from healthcare_aihw_etl_pipeline_spark.operators.windows import (
-    argmax_row,
-    first_last_pct_change,
-)
 from healthcare_aihw_etl_pipeline_spark.functions.scalar import STATE_CODES, try_double, try_int
 
 MEASURE = "separations"
+# F6 cardinality guard: a dynamic dim is a filter only with 1 < n < MAX_DOMAIN values.
+MAX_DOMAIN = 50
+# Filter domains per served frame: filled by filter_domains, dropped with the frame.
+_DOMAINS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def harmonize(df: DataFrame) -> DataFrame:
@@ -49,8 +48,11 @@ def harmonize(df: DataFrame) -> DataFrame:
 def serve(df: DataFrame) -> DataFrame:
     """C2 — persist the harmonized base frame once; every widget
     aggregation below re-reads it from memory (`st.cache_data`,
-    /root/reference/streamlit_app.py:26-27)."""
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
+    /root/reference/streamlit_app.py:26-27). The returned frame's filter
+    domains are read once, by the first filter_domains call."""
+    served = df.persist(StorageLevel.MEMORY_AND_DISK)
+    _DOMAINS[served] = None
+    return served
 
 
 # Widget aggregations A3-A10 (/root/reference/streamlit_app.py:82-147).
@@ -81,16 +83,6 @@ def treemap(df: DataFrame) -> DataFrame:
     """A10 — two-level category / principal_diagnosis rollup."""
     return df.groupBy("category", "principal_diagnosis").agg(
         F.sum(MEASURE).alias(MEASURE)
-    )
-
-
-def widget_cube(df: DataFrame) -> DataFrame:
-    """One cube pass over (year, state, category) serving the A3-A9 grains
-    with grouping-id to select a widget's slice — replaces eight separate
-    fact scans with one (SURVEY §4.2 candidate extension #1)."""
-    return (
-        df.cube("year", "state", "category")
-        .agg(F.sum(MEASURE).alias(MEASURE), F.grouping_id().alias("grain"))
     )
 
 
@@ -127,35 +119,38 @@ class Insights:
 
 def generate_insights(df: DataFrame) -> Insights | None:
     """The insight generator (/root/reference/streamlit_app.py:78-104):
-    top state (W2), top category (W2), first→last pct change (W1) — three
-    aggregations instead of the reference's sort-and-take-head passes.
-    F10 empty guards via isEmpty()."""
-    if df.isEmpty():
-        return None
-
-    ts = argmax_row(state_bar(df), "state", MEASURE).first()
-    top_cat = None
-    if "category" in df.columns:
-        top_cat = argmax_row(
-            df.groupBy("category").agg(F.sum(MEASURE).alias(MEASURE)),
-            "category",
-            MEASURE,
-        ).first()
-
-    pct = None
-    if df.select("year").distinct().limit(2).count() > 1:
-        yearly = df.groupBy("year").agg(F.sum(MEASURE).alias(MEASURE))
-        pct = first_last_pct_change(yearly, "year", MEASURE).first()
-
-    return Insights(
-        top_state=ts["state"] if ts else None,
-        top_state_total=ts[MEASURE] if ts else None,
-        top_category=top_cat["category"] if top_cat else None,
-        top_category_total=top_cat[MEASURE] if top_cat else None,
-        first_year=pct["first_year"] if pct else None,
-        last_year=pct["last_year"] if pct else None,
-        pct_change=pct["pct_change"] if pct else None,
+    top state and top category (W2, ties to the larger key, a NULL key
+    competing like any other) and the first→last year pct change (W1),
+    all from ONE grouping-sets aggregate collected once. An empty frame
+    (F10) gives None; a single year or a zero first-year total gives no
+    pct change."""
+    keys = ["state", "year", *(["category"] if "category" in df.columns else [])]
+    sets = df.groupingSets([[k] for k in keys], *keys).agg(
+        F.sum(MEASURE).alias("total"),
+        *[F.grouping(k).alias(f"g_{k}") for k in keys],
     )
+
+    def argmax(key: str) -> Column:
+        pair = F.struct(F.col("total").alias("m"), F.col(key).alias("k"))
+        return F.max(F.when(F.col(f"g_{key}") == 0, pair)).alias(key)
+
+    year = F.when(F.col("g_year") == 0, F.col("year"))
+    first_v, last_v = F.min_by("total", year), F.max_by("total", year)
+    row = sets.agg(
+        argmax("state"),
+        argmax("category") if "category" in keys else F.lit(None).alias("category"),
+        F.min(year).alias("first_year"),
+        F.max(year).alias("last_year"),
+        F.round(F.try_divide(last_v - first_v, first_v) * 100, 4).alias("pct_change"),
+    ).first()
+    if row["state"] is None:
+        return None
+    state_total, state = row["state"]
+    category_total, category = row["category"] or (None, None)
+    trend = [row["first_year"], row["last_year"], row["pct_change"]]
+    if row["first_year"] == row["last_year"]:
+        trend = [None] * 3
+    return Insights(state, state_total, category, category_total, *trend)
 
 
 def _domains_one_pass(
@@ -171,10 +166,6 @@ def _domains_one_pass(
     cap-slice count reflects the non-empty domain — filtering after the
     slice would let a ≥cap domain plus '' shrink to cap-1 and slip past
     the cardinality guard.
-
-    The round-1 shape was one distinct().collect() job PER column — N
-    full column scans and N driver round-trips per interaction; this is
-    one scan for every normally-sized column regardless of column count.
 
     Extreme cardinality is pre-gated: collect_set buffers the FULL
     distinct set in every partial-aggregation buffer before the slice, so
@@ -235,51 +226,46 @@ def _gate_over_cap(
     return {c for c in cols if gate[c] > 1.3 * cap}
 
 
-def interactive_filter(
-    df: DataFrame,
-    selections: dict[str, list],
-    *,
-    max_domain: int = 50,
-) -> DataFrame:
+def interactive_filter(df: DataFrame, selections: dict[str, list]) -> DataFrame:
     """F4/F5/F6 — the sidebar filter model
     (/root/reference/streamlit_app.py:54-74): apply an IN-list per selected
-    column, skipping no-op selections (selection == full domain), with the
-    cardinality guard for dynamic dims. All guarded domains come from ONE
-    aggregation job (not one per column)."""
-    guarded = [
-        col
-        for col, sel in selections.items()
-        if col in df.columns and sel and col not in FIXED_COLS | {"year", "state"}
-    ]
-    domains = _domains_one_pass(df, guarded, cap=max_domain)
+    column. Year and state always apply; a dynamic dim applies only when
+    it passes the cardinality guard and the selection is not its full
+    domain. A served frame reuses the domains read when it opened, so the
+    filter runs no Spark job."""
+    domains = filter_domains(df)
+    dynamic = set(dims_of(df))
     pred = None
     for col, sel in selections.items():
         if col not in df.columns or not sel:
             continue
-        if col in domains:
-            domain = domains[col]
-            if not (1 < len(domain) < max_domain) or len(sel) == len(domain):
-                continue
+        if col in dynamic and len(sel) == len(domains.get(col, sel)):
+            continue
         p = F.col(col).isin(list(sel))
         pred = p if pred is None else (pred & p)
     return df.where(pred) if pred is not None else df
 
 
-def filter_domains(df: DataFrame, *, max_domain: int = 50) -> dict[str, list]:
+def filter_domains(df: DataFrame) -> dict[str, list]:
     """A12/F6/F7 — the widget domains: sorted distinct values per dynamic
-    dim with 1 < n < max_domain, plus year/state
+    dim with 1 < n < MAX_DOMAIN, plus year/state
     (/root/reference/streamlit_app.py:57-69). One aggregation job
-    regardless of column count (round 1 issued one per column)."""
+    regardless of column count, once per served frame; any other frame is
+    read on every call."""
+    cached = _DOMAINS.get(df)
+    if cached is not None:
+        return cached
     cols = [c for c in ["year", "state", *dims_of(df)] if c in df.columns]
     # year/state domains are small by nature but have no 1<n<max guard, so
-    # cap them generously; dynamic dims cap at max_domain (a full slice ⇒
-    # domain too large ⇒ dropped below, preserving the exact guard).
-    cap = max(max_domain, 1000)
-    domains = _domains_one_pass(df, cols, cap=cap)
-    out: dict[str, list] = {}
-    for col, vals in domains.items():
-        if col in ("year", "state") or 1 < len(vals) < max_domain:
-            out[col] = vals
+    # cap them generously; the guard below drops any larger dynamic dim.
+    domains = _domains_one_pass(df, cols, cap=1000)
+    out = {
+        col: vals
+        for col, vals in domains.items()
+        if col in ("year", "state") or 1 < len(vals) < MAX_DOMAIN
+    }
+    if df in _DOMAINS:
+        _DOMAINS[df] = out
     return out
 
 

@@ -875,9 +875,8 @@ def rollup_returnflag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY CUBE (EXTRACT(year FROM o_orderdate), o_orderstatus)
     """,
     doc="Cube multi-granularity pass with grouping_id — one scan serving "
-    "all four widget grains (supersedes the reference's per-widget "
-    "re-aggregation, SURVEY §2.5 A3-A10; engine layer: plans.analytics."
-    "widget_cube).",
+    "all four grains of a widget-style rollup (the reference's per-widget "
+    "re-aggregation, SURVEY §2.5 A3-A10).",
 )
 def cube_year_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")

@@ -70,7 +70,13 @@ def get_spark(
         # CWD the process launched from — the repo root is snapshotted.
         .config("spark.sql.warehouse.dir", "/tmp/spark-graft-warehouse")
     )
-    for k, v in (extra_conf or {}).items():
+    # Python workers start in the JVM's working directory, so they find
+    # the package only through the parent directory put first on their path.
+    conf = dict(extra_conf or {})
+    key = "spark.executorEnv.PYTHONPATH"
+    parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    conf[key] = os.pathsep.join(filter(None, [parent, conf.get(key)]))
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

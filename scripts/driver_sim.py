@@ -26,7 +26,8 @@ OUT = os.environ.get("SIM_OUT")
 ONLY = [s for s in os.environ.get("SIM_ONLY", "").split(",") if s]
 
 import __spark_entry__ as e
-spark = SparkSession.builder.master("local[8]").getOrCreate()
+from healthcare_aihw_etl_pipeline_spark import session
+spark = SparkSession.builder.master(f"local[{session.local_cpus()}]").getOrCreate()
 
 df = e.entry(spark)
 rows = df.collect()

@@ -1,6 +1,7 @@
 """Dashboard-serving layer tests (SURVEY §3.2): insights, widget
-aggregations, interactive filters, and the cube serving pass — over the
-reference-shaped fixture corpus."""
+aggregations and interactive filters over the reference-shaped fixture
+corpus, plus the insight and filter semantics pinned on small frames and
+the Spark jobs each dashboard step may run."""
 
 from __future__ import annotations
 
@@ -13,6 +14,9 @@ from healthcare_aihw_etl_pipeline_spark.sources.sheet_ingest import (
     clean_aggregate,
     compile_sheets,
 )
+
+
+TIDY = "year int, state string, category string, separations double"
 
 
 @pytest.fixture(scope="module")
@@ -44,8 +48,9 @@ def test_insights_values(admissions):
     assert len(ins.lines()) == 3
 
 
-def test_insights_empty_guard(admissions):
+def test_insights_empty_guard(spark, admissions):
     assert analytics.generate_insights(admissions.where("year = 1900")) is None
+    assert analytics.generate_insights(spark.createDataFrame([], TIDY)) is None
 
 
 def test_widget_shapes(admissions):
@@ -62,22 +67,6 @@ def test_widget_shapes(admissions):
     assert set(tm.columns) == {"category", "principal_diagnosis", "separations"}
 
 
-def test_widget_cube_serves_all_grains(admissions):
-    cube = analytics.widget_cube(admissions).collect()
-    # grand total grain (everything null) equals the full sum
-    total = admissions.agg(F.sum("separations")).first()[0]
-    grand = [r for r in cube if r.year is None and r.state is None and r.category is None]
-    assert len(grand) == 1 and grand[0].separations == total
-    # state grain matches the A6 widget
-    by_state = {
-        r.state: r.separations
-        for r in cube
-        if r.state is not None and r.year is None and r.category is None
-    }
-    want = {r.state: r.separations for r in analytics.state_bar(admissions).collect()}
-    assert by_state == want
-
-
 def test_interactive_filter_semantics(admissions):
     domains = analytics.filter_domains(admissions)
     assert set(domains["state"]) >= {"NSW", "VIC", "QLD"}
@@ -90,6 +79,93 @@ def test_interactive_filter_semantics(admissions):
     only_2022 = analytics.interactive_filter(admissions, {"year": [2022]})
     assert only_2022.select("year").distinct().collect()[0][0] == 2022
     assert only_2022.count() < admissions.count()
+
+
+def test_insights_tie_goes_to_larger_key(spark):
+    df = spark.createDataFrame(
+        [(2022, "NSW", "A", 5.0), (2022, "VIC", "B", 5.0)], TIDY
+    )
+    ins = analytics.generate_insights(df)
+    assert (ins.top_state, ins.top_state_total) == ("VIC", 5.0)
+    assert (ins.top_category, ins.top_category_total) == ("B", 5.0)
+
+
+def test_insights_null_category_takes_part_in_argmax(spark):
+    df = spark.createDataFrame(
+        [(2022, "NSW", None, 10.0), (2022, "VIC", "A", 3.0)], TIDY
+    )
+    ins = analytics.generate_insights(df)
+    assert (ins.top_category, ins.top_category_total) == (None, 10.0)
+    assert (ins.top_state, ins.top_state_total) == ("NSW", 10.0)
+
+
+def test_insights_single_year_has_no_trend(spark):
+    df = spark.createDataFrame(
+        [(2022, "NSW", "A", 4.0), (2022, "VIC", "B", 6.0)], TIDY
+    )
+    ins = analytics.generate_insights(df)
+    assert (ins.first_year, ins.last_year, ins.pct_change) == (None, None, None)
+    assert len(ins.lines()) == 2
+
+
+def test_insights_without_category(spark):
+    df = spark.createDataFrame(
+        [(2021, "NSW", 4.0), (2023, "NSW", 5.0)],
+        "year int, state string, separations double",
+    )
+    ins = analytics.generate_insights(df)
+    assert (ins.top_category, ins.top_category_total) == (None, None)
+    assert (ins.first_year, ins.last_year, ins.pct_change) == (2021, 2023, 25.0)
+
+
+def test_insights_zero_first_year_has_no_trend(spark):
+    """An earliest year summing to 0 has no defined percentage change; the
+    dashboard must still answer (ANSI division by zero would raise)."""
+    df = spark.createDataFrame(
+        [(2021, "NSW", "X", 0.0), (2022, "NSW", "X", 5.0)], TIDY
+    )
+    ins = analytics.generate_insights(df)
+    assert ins.pct_change is None
+    assert (ins.top_state, ins.top_state_total) == ("NSW", 5.0)
+    assert len(ins.lines()) == 2
+
+
+def test_filter_guard_ignores_large_and_single_value_dims(spark):
+    wide = [(2022, "NSW", f"c{i:02d}", "only", 1.0) for i in range(50)]
+    df = spark.createDataFrame(
+        wide, "year int, state string, category string, one string, separations double"
+    )
+    # 50 categories (>= the cap) and a single-valued dim: both ignored
+    out = analytics.interactive_filter(df, {"category": ["c00"], "one": ["other"]})
+    assert out.count() == 50
+    # one fewer category: the guard admits the dim and the selection applies
+    narrow = df.where("category != 'c49'")
+    assert analytics.interactive_filter(narrow, {"category": ["c00"]}).count() == 1
+    # year and state always filter, even when single-valued
+    assert analytics.interactive_filter(df, {"year": [2021]}).count() == 0
+    assert analytics.interactive_filter(df, {"state": ["VIC"]}).count() == 0
+
+
+def test_filter_unserved_frames_use_their_own_domains(spark):
+    two = spark.createDataFrame([(2022, "NSW", c, 1.0) for c in "ab"], TIDY)
+    three = spark.createDataFrame([(2022, "NSW", c, 1.0) for c in "abc"], TIDY)
+    sel = {"category": ["a", "b"]}
+    assert analytics.interactive_filter(two, sel).count() == 2
+    assert analytics.interactive_filter(three, sel).count() == 2
+    assert analytics.interactive_filter(three, {"category": ["a", "b", "c"]}).count() == 3
+    assert analytics.interactive_filter(two, {"category": ["a"]}).count() == 1
+
+
+def test_served_filter_and_insights_job_counts(admissions, jobs_run):
+    """Opening the dashboard reads the served frame's domains; an
+    interaction's filter then runs no Spark job and its insights come
+    from one aggregate."""
+    domains = analytics.filter_domains(admissions)
+    sel = {"year": [2022], "category": domains["category"][:1]}
+    view, n_filter = jobs_run(lambda: analytics.interactive_filter(admissions, sel))
+    assert n_filter == 0
+    ins, n_insights = jobs_run(lambda: analytics.generate_insights(view))
+    assert ins is not None and n_insights <= 3
 
 
 def test_profile(admissions):

@@ -5,6 +5,10 @@ heterogeneous union, and the staging≡clean materialization invariant
 from __future__ import annotations
 
 import hashlib
+import os
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 
@@ -163,6 +167,33 @@ def test_distributed_compile_no_valid_sheets_raises(spark):
 
     with pytest.raises(RuntimeError):
         compile_sheets_distributed(spark, [fixtures.SHEET3_INVALID])
+
+
+def test_distributed_compile_from_outside_the_checkout(tmp_path):
+    """Python workers start in the JVM's working directory; they must still
+    import the package when the process runs elsewhere with no PYTHONPATH
+    (only the driver's sys.path names the checkout)."""
+    root = Path(__file__).resolve().parent.parent
+    script = tmp_path / "compile_elsewhere.py"
+    script.write_text(
+        "import sys\n"
+        f"sys.path.insert(0, {str(root)!r})\n"
+        "from healthcare_aihw_etl_pipeline_spark.session import get_spark\n"
+        "from healthcare_aihw_etl_pipeline_spark.sources import fixtures\n"
+        "from healthcare_aihw_etl_pipeline_spark.sources.sheet_ingest import compile_sheets_distributed\n"
+        "spark = get_spark(app_name='elsewhere', shuffle_partitions=2)\n"
+        "print('rows', compile_sheets_distributed(spark, fixtures.SHEETS, partitions=2).count())\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_CPUS"] = "2"
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    done = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert done.returncode == 0, done.stderr[-2000:]
+    assert int(done.stdout.split("rows")[-1]) > 0
 
 
 # --- Pinned compile_sheets / run_etl output -------------------------------

@@ -4,7 +4,7 @@ compile, and every module it imports must resolve: installed, in the
 package, or a file in scripts/ (or tests/, which some probes put on their
 path). The planted-truth runner's exact rungs also run here, at smoke
 scale. A dead-name guard keeps every top-level name of the package in
-use."""
+use, and no program hard-codes its local core count."""
 
 from __future__ import annotations
 
@@ -102,3 +102,31 @@ def test_no_dead_top_level_names():
         n for n, k in defs.items() if words[n] <= k and n not in ("__all__", "__version__")
     )
     assert not dead, f"top-level names referenced nowhere: {dead}"
+
+
+def _docstrings(tree: ast.AST):
+    scopes = (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+    for node in ast.walk(tree):
+        if isinstance(node, scopes) and ast.get_docstring(node) is not None:
+            yield node.body[0].value
+
+
+def test_no_hardcoded_local_master():
+    """Local parallelism comes from ``session.local_cpus()``: no string
+    literal in the package, scripts/ or bench.py names a fixed
+    ``local[<digits>]`` master. Docstrings and comments that cite a
+    measurement's host are exempt."""
+    fixed = re.compile(r"local\[\d+\]")
+    hits = []
+    for path in [*PACKAGE.rglob("*.py"), *SCRIPTS, ROOT / "bench.py"]:
+        tree = ast.parse(path.read_text(), str(path))
+        docs = {id(node) for node in _docstrings(tree)}
+        hits += [
+            f"{path.relative_to(ROOT)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and id(node) not in docs
+            and fixed.search(node.value)
+        ]
+    assert not hits, f"hard-coded local[N] masters: {hits}"
