@@ -82,6 +82,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -328,6 +329,22 @@ def _noise_probe(spark, reps: int = 3) -> float:
     return best
 
 
+def _fair_pools_file(directory: str) -> str:
+    """Write a fair-scheduler allocation file declaring _wave's pools
+    p0..p<n-1> with the settings Spark gives an undeclared pool (FIFO
+    inside the pool, weight 1, minShare 0): scheduling is unchanged, and
+    Spark no longer warns once per undeclared pool on every wave."""
+    pools = "".join(
+        f'  <pool name="p{i}"><schedulingMode>FIFO</schedulingMode>'
+        "<weight>1</weight><minShare>0</minShare></pool>\n"
+        for i in range(len(HEADLINE))
+    )
+    path = os.path.join(directory, "fairscheduler.xml")
+    with open(path, "w") as f:
+        f.write(f'<?xml version="1.0"?>\n<allocations>\n{pools}</allocations>\n')
+    return path
+
+
 def run_spark() -> tuple[
     dict[str, float], dict[str, float], dict[str, float], dict[str, float],
     dict[str, float], float, list[float]
@@ -345,6 +362,7 @@ def run_spark() -> tuple[
     # profile. Constraint propagation likewise off here (−5% planning;
     # it exists to unlock filter inference on big plans, worthless on
     # these hand-shaped queries).
+    pools_dir = tempfile.TemporaryDirectory(prefix="bench-")
     spark = get_spark(
         app_name="bench",
         shuffle_partitions=4,
@@ -371,6 +389,7 @@ def run_spark() -> tuple[
             # FIFO head-of-line blocking. Sequential timings are
             # unaffected (single pool in use).
             "spark.scheduler.mode": "FAIR",
+            "spark.scheduler.allocation.file": _fair_pools_file(pools_dir.name),
             # 8 MB scan splits: sf1's lineitem is one 184 MB file with
             # 32 row groups — the 128 MB default gives the scan TWO
             # tasks on 32 cores; 8 MB splits it at row-group grain
@@ -379,6 +398,7 @@ def run_spark() -> tuple[
             "spark.sql.files.maxPartitionBytes": "8388608",
         },
     )
+    pools_dir.cleanup()  # the allocation file is read at session start
     _warmup(spark)
     # steady-state per-job latency: the floor under every query
     t0 = time.perf_counter()

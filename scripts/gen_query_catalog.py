@@ -5,18 +5,23 @@ scale/design rationale, so this is the browsable index of the engine's
 query surface.
 
 Usage: python scripts/gen_query_catalog.py  (writes QUERIES.md)
+
+`render()` returns the catalog text; a Tier-1 test holds the committed
+QUERIES.md to it.
 """
 from __future__ import annotations
 
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from healthcare_aihw_etl_pipeline_spark.plans import REGISTRY
 
 
-def main() -> None:
+def render() -> str:
+    """QUERIES.md as generated from the registry."""
     lines = [
         "# QUERIES — the registered query surface",
         "",
@@ -47,14 +52,15 @@ def main() -> None:
             lines.append("")
             lines.append(doc if doc else "(no doc)")
             lines.append("")
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "QUERIES.md",
-    )
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    out = os.path.join(ROOT, "QUERIES.md")
     with open(out, "w") as f:
-        f.write("\n".join(lines) + "\n")
+        f.write(render())
     print(f"wrote {out}: {len(REGISTRY)} queries")
-    _sync_readme_counts(len(REGISTRY), n_oracle)
+    _sync_readme_counts(len(REGISTRY), sum(1 for q in REGISTRY.values() if q.oracle))
 
 
 def _sync_readme_counts(n: int, n_oracle: int) -> None:
@@ -62,10 +68,7 @@ def _sync_readme_counts(n: int, n_oracle: int) -> None:
     registry itself — hand-typed counts drift (a round-6 review nit)."""
     import re
 
-    readme = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "README.md",
-    )
+    readme = os.path.join(ROOT, "README.md")
     with open(readme) as f:
         text = f.read()
     new = re.sub(r"SIM_N=\d+", f"SIM_N={n}", text)

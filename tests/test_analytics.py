@@ -168,6 +168,125 @@ def test_served_filter_and_insights_job_counts(admissions, jobs_run):
     assert ins is not None and n_insights <= 3
 
 
+WIDGETS = ("state_bar", "year_trend", "category_top10", "category_state_heatmap", "treemap")
+
+
+def _dash_frame(spark, parts: int):
+    """120 tidy rows in `parts` partitions, planned with no Exchange."""
+    i = F.col("id")
+
+    def pick(values, k):
+        return F.element_at(F.array(*map(F.lit, values)), (i % k + 1).cast("int"))
+
+    return spark.range(0, 120, 1, parts).select(
+        (2020 + i % 3).cast("int").alias("year"),
+        pick(["NSW", "VIC", "QLD", "SA"], 4).alias("state"),
+        pick("ABCDE", 5).alias("category"),
+        F.concat(pick("ABCDE", 5), (i % 7).cast("string")).alias("principal_diagnosis"),
+        (i % 11).cast("double").alias("separations"),
+    )
+
+
+def _sorted_rows(rows) -> list[tuple]:
+    return sorted((tuple(r) for r in rows), key=repr)
+
+
+@pytest.fixture
+def small_file(spark, tmp_path):
+    """A small file read and harmonized: one partition, no Exchange."""
+    path = str(tmp_path / "tidy.parquet")
+    _dash_frame(spark, 1).write.parquet(path)
+    return analytics.harmonize(spark.read.parquet(path))
+
+
+def test_one_partition_frame_serves_one_job_per_step(small_file, jobs_run):
+    """serve() declares a one-partition frame so, and each widget and the
+    insights then run one Spark job, with the same rows as the unserved
+    frame."""
+    frame = small_file
+    served, n_serve = jobs_run(lambda: analytics.serve(frame))
+    try:
+        assert n_serve == 0
+        _, n_domains = jobs_run(lambda: analytics.filter_domains(served))
+        assert n_domains <= 3  # cache fill, HLL gate, collect_set
+        for w in WIDGETS:
+            rows, n_widget = jobs_run(lambda: getattr(analytics, w)(served).collect())
+            assert n_widget == 1, w
+            assert _sorted_rows(rows) == _sorted_rows(getattr(analytics, w)(frame).collect()), w
+        ins, n_insights = jobs_run(lambda: analytics.generate_insights(served))
+        assert n_insights == 1
+        assert ins == analytics.generate_insights(frame)
+        assert served.rdd.getNumPartitions() == 1
+    finally:
+        served.unpersist()
+
+
+def test_new_selection_compiles_no_new_code(spark, small_file):
+    """A new selection over the same columns reuses the code generated
+    for the last one: an IN list would inline its values and compile
+    every widget afresh."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    served = analytics.serve(small_file)
+
+    def interact(sel):
+        view = analytics.interactive_filter(served, sel)
+        for w in WIDGETS:
+            getattr(analytics, w)(view).collect()
+        analytics.generate_insights(view)
+
+    try:
+        interact({"year": [2021], "state": ["NSW", "SA"], "category": ["B"]})
+        before = compiles.getCount()
+        interact({"year": [2020, 2022], "state": ["VIC"], "category": ["A", "C", "E"]})
+        assert compiles.getCount() == before
+    finally:
+        served.unpersist()
+
+
+def test_multi_partition_frame_is_served_as_it_is(spark, jobs_run):
+    """A frame of several partitions keeps them when served; its widgets
+    and insights equal the unserved frame's, and the insights run no more
+    than one shuffle's jobs."""
+    frame = analytics.harmonize(_dash_frame(spark, 3))
+    served = analytics.serve(frame)
+    try:
+        assert served.rdd.getNumPartitions() == 3
+        for w in WIDGETS:
+            assert _sorted_rows(getattr(analytics, w)(served).collect()) == _sorted_rows(
+                getattr(analytics, w)(frame).collect()
+            ), w
+        ins, n_insights = jobs_run(lambda: analytics.generate_insights(served))
+        assert ins == analytics.generate_insights(frame)
+        assert n_insights <= 3
+    finally:
+        served.unpersist()
+
+
+def test_one_partition_check_runs_no_job_and_skips_exchanges(spark, jobs_run):
+    """The partition count is read only off a plan with no Exchange or
+    subquery: with adaptive execution off, a broadcast join's plan would
+    start its broadcast job if asked, and a scalar subquery its own."""
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    for adaptive in ("true", "false"):
+        spark.conf.set("spark.sql.adaptive.enabled", adaptive)
+        try:
+            # built under each setting: a frame plans once
+            one = _dash_frame(spark, 1)
+            years = F.broadcast(one.select("year").distinct())
+            last = one.where(F.col("year") == one.select(F.max("year")).scalar())
+            cases = [
+                (one, True),
+                (one.repartition(1), False),
+                (one.join(years, "year"), False),
+                (last, False),
+            ]
+            for df, want in cases:
+                got, n = jobs_run(lambda: analytics._one_partition(df))
+                assert (got, n) == (want, 0), (adaptive, df)
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", old)
+
+
 def test_profile(admissions):
     prof = {r.column: r for r in analytics.profile(admissions).collect()}
     assert set(prof) == set(admissions.columns)

@@ -4,7 +4,8 @@ compile, and every module it imports must resolve: installed, in the
 package, or a file in scripts/ (or tests/, which some probes put on their
 path). The planted-truth runner's exact rungs also run here, at smoke
 scale. A dead-name guard keeps every top-level name of the package in
-use, and no program hard-codes its local core count."""
+use, no program hard-codes its local core count, and QUERIES.md is what
+the catalog generator writes from the registry."""
 
 from __future__ import annotations
 
@@ -54,10 +55,22 @@ def test_script_imports_resolve():
     assert not dangling, f"scripts import modules that do not exist: {dangling}"
 
 
+def _load_script(name: str):
+    spec = importlib.util.spec_from_file_location(name, ROOT / "scripts" / f"{name}.py")
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+
+def test_query_catalog_matches_registry():
+    catalog = _load_script("gen_query_catalog")
+    assert (ROOT / "QUERIES.md").read_text() == catalog.render(), (
+        "QUERIES.md is stale: run python scripts/gen_query_catalog.py"
+    )
+
+
 def test_planted_truth_exact_rungs_pass_at_smoke(spark, tmp_path):
-    spec = importlib.util.spec_from_file_location("planted_truth", ROOT / "scripts" / "planted_truth.py")
-    runner = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(runner)
+    runner = _load_script("planted_truth")
     out = tmp_path / "planted.json"
     argv = [
         "--scale", "smoke",
