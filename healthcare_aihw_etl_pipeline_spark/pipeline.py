@@ -8,9 +8,11 @@ pipeline is fully testable offline with raw-row sheets. The two ingest
 entry points parse with the one pure-Python core,
 ``sheet_ingest.iter_tidy_records``, under one column contract: here
 ``compile_sheets`` runs it on the driver and loads the tidy rows as one
-Arrow table, so the load's scans run JVM-side without Python workers;
-``compile_sheets_distributed`` runs it on executors through mapInArrow.
-The two-tier load is DataFrame algebra.
+Arrow table in one partition, so the load's scans run JVM-side without
+Python workers; ``compile_sheets_distributed`` runs it on executors
+through mapInArrow. The two-tier load is two Spark jobs, one write per
+table: the staging write counts which dims hold a value, and the clean
+write groups by those, with no shuffle over the one-partition frame.
 """
 
 from __future__ import annotations

@@ -15,8 +15,11 @@ Split of responsibilities:
   JVM-side, with no Python worker); :func:`compile_sheets_distributed`
   runs it on executors through mapInArrow, one table per batch of
   sheets.
-- *Loading* (fill-then-group aggregation, two-tier writes) is lazy
-  DataFrame algebra.
+- *Loading* (:func:`load_two_tier`) is one Spark job per table: the
+  staging write also counts each dim's non-null values, and the clean
+  table fill-then-groups by the dims counted non-null. Over
+  :func:`compile_sheets`' one-partition frame neither job shuffles, and
+  each table gets one file per year.
 
 Pandas-quirk parity (deliberately reproduced, per SURVEY §7.3 hard part 1):
 - empty header cells are named ``Unnamed: N`` before slugging (pandas
@@ -32,14 +35,15 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
-from collections.abc import Iterable, Sequence
+from collections.abc import Iterable, Mapping, Sequence
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from healthcare_aihw_etl_pipeline_spark.functions.scalar import STATE_CODES, slug
+from healthcare_aihw_etl_pipeline_spark.sources import sinks
 
 # Fixed output columns of the tidy fact table (the reference's README.md:93-105)
 # and their Arrow types.
@@ -168,9 +172,11 @@ def compile_sheets(
     missing columns (`pd.concat` in the reference's main.py).
 
     Every sheet parses on the driver through :func:`iter_tidy_records`
-    into one Arrow table, loaded with a single ``createDataFrame``."""
+    into one Arrow table, loaded with a single ``createDataFrame`` as one
+    partition: the frame reports SinglePartition, so a grouping over it
+    plans no Exchange and each write of it is one task."""
     schema = _valid_schema(sheets)
-    return spark.createDataFrame(_tidy_records(sheets, schema))
+    return spark.createDataFrame(_tidy_records(sheets, schema)).coalesce(1)
 
 
 def compile_sheets_distributed(
@@ -342,17 +348,28 @@ def clean_aggregate(tidy: DataFrame) -> DataFrame:
     least one non-null value; NULL dims are filled to "" *before* grouping
     (pandas drops NaN group keys — the fill is load-bearing for parity).
 
-    One extra metadata-sized aggregation discovers non-null dims; the main
-    pass is a single hash aggregation (one shuffle).
+    One metadata-sized aggregate counts each candidate dim's non-null
+    values; :func:`load_two_tier` takes the same counts from its staging
+    write instead.
     """
-    candidate = [c for c in tidy.columns if c not in FIXED]
-    if candidate:
-        counts = tidy.agg(
-            *[F.count(F.col(c)).alias(c) for c in candidate]
-        ).first()
-        dims = [c for c in candidate if counts[c] > 0]
-    else:
-        dims = []
+    metrics = _nonnull_counts(tidy)
+    counts = (
+        tidy.agg(*[m.alias(c) for c, m in metrics.items()]).first().asDict()
+        if metrics
+        else {}
+    )
+    return _fill_and_group(tidy, counts)
+
+
+def _nonnull_counts(tidy: DataFrame) -> dict[str, Column]:
+    """One non-null count per candidate dim: every column but FIXED's."""
+    return {c: F.count(F.col(c)) for c in tidy.columns if c not in FIXED}
+
+
+def _fill_and_group(tidy: DataFrame, counts: Mapping[str, int]) -> DataFrame:
+    """Group by year, state and every dim counted non-null at least once,
+    with NULL dims filled to "" first."""
+    dims = [c for c in tidy.columns if counts.get(c, 0) > 0]
     filled = tidy.na.fill("", subset=dims) if dims else tidy
     return filled.groupBy("year", "state", *dims).agg(
         F.sum("separations").alias("separations")
@@ -364,9 +381,16 @@ def load_two_tier(tidy: DataFrame, base_path: str) -> tuple[str, str]:
     and clean (pre-aggregated) tables (/root/reference/main.py:155-165),
     as parquet instead of JDBC. Partitioned by year: every dashboard
     filter includes year (/root/reference/streamlit_app.py:57-63), so
-    partition pruning serves the interactive path at scale."""
+    partition pruning serves the interactive path at scale.
+
+    The staging write observes each candidate dim's non-null count, and
+    the clean table groups by the dims counted > 0, so the load runs one
+    job per table. Over :func:`compile_sheets`' one-partition frame
+    neither job shuffles."""
     staging = f"{base_path}/staging_admissions"
     clean = f"{base_path}/clean_admissions"
-    tidy.write.mode("overwrite").partitionBy("year").parquet(staging)
-    clean_aggregate(tidy).write.mode("overwrite").partitionBy("year").parquet(clean)
+    counts = sinks.write_table_observed(
+        tidy, staging, _nonnull_counts(tidy), partition_by=["year"]
+    )
+    sinks.write_table(_fill_and_group(tidy, counts), clean, partition_by=["year"])
     return staging, clean

@@ -70,10 +70,13 @@ def write_table_observed(
 
     `metrics` values must be aggregate expressions containing no
     distinct or filter-pushdown-dependent subexpressions (Spark's
-    observe contract).
+    observe contract). With no metrics it is a plain write returning {}.
     """
     from pyspark.sql import Observation
 
+    if not metrics:
+        write_table(df, path, mode=mode, partition_by=partition_by, fmt=fmt)
+        return {}
     obs = Observation()
     write_table(
         df.observe(obs, *[c.alias(n) for n, c in metrics.items()]),

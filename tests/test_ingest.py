@@ -108,18 +108,41 @@ def test_compile_no_valid_sheets_raises(spark):
 
 def test_staging_clean_invariant(spark, tmp_path):
     """SURVEY §3.3: clean computed at load time must equal on-the-fly
-    aggregation of staging read back from storage (both fill-then-group)."""
-    tidy = compile_sheets(spark, fixtures.SHEETS)
-    staging_path, clean_path = load_two_tier(tidy, str(tmp_path))
+    aggregation of staging read back from storage (both fill-then-group).
+    The load groups clean by the dims its staging write saw non-null, so
+    an all-NULL dim (a valid sheet whose measures are all junk) stays in
+    staging and leaves clean. Frames: the fixture sheets, a junk sheet
+    last and first, no rows (from a compile, and from an RDD of zero
+    partitions), no candidate dim, and the distributed compile over 4
+    partitions. A frame with no rows writes no parquet file."""
+    from healthcare_aihw_etl_pipeline_spark.sources.sheet_ingest import (
+        compile_sheets_distributed,
+    )
 
-    clean_loaded = spark.read.parquet(clean_path)
-    staging_loaded = spark.read.parquet(staging_path)
-    recomputed = clean_aggregate(staging_loaded)
-
-    cols = sorted(clean_loaded.columns)
-    a = sorted(map(repr, (tuple(r) for r in clean_loaded.select(*cols).collect())))
-    b = sorted(map(repr, (tuple(r) for r in recomputed.select(*cols).collect())))
-    assert a == b
+    year_only = ([["Year", "NSW", "VIC"], ["2019", "3", "4"]], 2024)
+    junk = compile_sheets(spark, [JUNK])
+    frames = [
+        compile_sheets(spark, fixtures.SHEETS),
+        compile_sheets(spark, [fixtures.SHEET2, JUNK]),
+        compile_sheets(spark, [JUNK, fixtures.SHEET2]),
+        junk,
+        spark.createDataFrame(spark.sparkContext.emptyRDD(), junk.schema),
+        compile_sheets(spark, [year_only]),
+        compile_sheets_distributed(spark, fixtures.SHEETS, partitions=4),
+    ]
+    for i, tidy in enumerate(frames):
+        staging_path, clean_path = load_two_tier(tidy, str(tmp_path / str(i)))
+        if not list(Path(staging_path).rglob("*.parquet")):
+            assert tidy.isEmpty(), i
+            assert not list(Path(clean_path).rglob("*.parquet")), i
+            continue
+        clean_loaded = spark.read.parquet(clean_path)
+        recomputed = clean_aggregate(spark.read.parquet(staging_path))
+        cols = sorted(clean_loaded.columns)
+        assert cols == sorted(recomputed.columns), i
+        assert _sorted_rows(clean_loaded.select(*cols)) == _sorted_rows(
+            recomputed.select(*cols)
+        ), i
 
 
 def test_clean_aggregate_drops_all_null_dims(spark):
@@ -357,14 +380,19 @@ def test_run_etl_tables_pinned(spark, tmp_path):
     assert len(rows) == 32
     assert _digest(rows) == "526eec4bb8cb93ceb73d01d6db019ec01a009f24bdb51456b5bfe3dfdba604c2"
 
+    # Write layout: one parquet file per year directory in both tables.
+    for table in (staging, clean):
+        files = {d.name: len(list(d.glob("*.parquet"))) for d in Path(table).glob("year=*")}
+        assert files == {"year=2022": 1, "year=2023": 1}
+
 
 def test_etl_job_and_lineage_counters(spark, tmp_path, jobs_run):
     """Deterministic counters instead of wall time: compile_sheets and
     sheets_to_distributed run no job and leave no Python worker in their
     frames' lineage (later scans run JVM-side), compile_sheets_distributed
-    runs no job until its frame is used, and run_etl runs no more jobs
-    than the 5 the per-sheet Catalyst implementation ran on the fixture
-    sheets."""
+    runs no job until its frame is used, and run_etl on the fixture
+    sheets runs 2 jobs: the staging write, which also counts each dim's
+    non-null values, and the clean write, with no shuffle between."""
     from healthcare_aihw_etl_pipeline_spark.pipeline import run_etl
     from healthcare_aihw_etl_pipeline_spark.sources.sheet_ingest import (
         compile_sheets_distributed,
@@ -386,4 +414,4 @@ def test_etl_job_and_lineage_counters(spark, tmp_path, jobs_run):
     _, jobs = jobs_run(
         lambda: run_etl(spark, str(tmp_path), sheets_override=fixtures.SHEETS)
     )
-    assert jobs <= 5
+    assert jobs <= 2
