@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from healthcare_aihw_etl_pipeline_spark.operators.gates import collect_at_most
+
 # Mersenne prime 2^31 - 1: modulus for the universal-hash permutations.
 # Chosen so a*h + b stays below 2^62 (a, h < 2^31) — no long overflow even
 # under ANSI mode (the driver's default session in Spark 4 has ANSI on,
@@ -1032,13 +1034,19 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
+# Driver union-find fast path: at most this many symmetric edges (Rows
+# of two longs) are collected to the driver; past it, distributed rounds.
+_CC_SMALL_EDGE_CAP = 65536
+# Round budget of the distributed loop; near-star duplicate clusters
+# converge in 2-3 rounds (O(log diameter) with pointer jumping).
+_CC_MAX_ITERATIONS = 20
+
+
 def connected_components(
     edges: DataFrame,
     *,
     src: str = "src",
     dst: str = "dst",
-    max_iterations: int = 20,
-    small_edge_cap: int = 65536,
 ) -> DataFrame:
     """Transitive closure of duplicate edges: per node, the minimum id
     reachable through any chain — true dedup CLUSTERS, where the star
@@ -1072,13 +1080,11 @@ def connected_components(
     scheduler floor (~1-2 s of job launch + AQE stage materialization on
     local[32], regardless of data size), so a closure over a few hundred
     LSH edges pays seconds for milliseconds of work. When the symmetric
-    edge set is at most ``small_edge_cap`` rows (probed with a
-    LIMIT cap+1 count — an early-stopping scan, not a full pass over a
-    large edge set), the closure collects the edges once (bounded:
-    ≤ cap rows of two longs) and runs union-find by min root on the
-    driver — the same bounded-collect policy as the capped+HLL-gated
-    pivot domain discovery. Edge sets above the cap — the 100 TB case —
-    always take the distributed loop; results are identical (min
+    edge set is at most ``_CC_SMALL_EDGE_CAP`` rows, the one bounded
+    probe collect (≤ cap + 1 rows of two longs) IS the edge list, and
+    union-find by min root runs on the driver. Edge sets above the cap
+    — the 100 TB case — take the distributed loop (at most
+    ``_CC_MAX_ITERATIONS`` rounds); results are identical (min
     reachable id) on either path.
     """
     # Undirected symmetric edge list, self-loops dropped.
@@ -1087,8 +1093,8 @@ def connected_components(
     )
     sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
     sym = sym.persist()
-    if small_edge_cap > 0 and sym.limit(small_edge_cap + 1).count() <= small_edge_cap:
-        rows = sym.collect()
+    rows = collect_at_most(sym, _CC_SMALL_EDGE_CAP)
+    if rows is not None:
         parent: dict = {}
 
         def find(x):
@@ -1120,7 +1126,7 @@ def connected_components(
         .select("node", F.col("node").alias("component"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iterations):
+    for _ in range(_CC_MAX_ITERATIONS):
         # (1) candidate label: min over own label and neighbors' labels.
         neighbor_min = (
             sym.join(labels, sym["b"] == labels["node"])

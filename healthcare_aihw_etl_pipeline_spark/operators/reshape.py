@@ -21,6 +21,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from healthcare_aihw_etl_pipeline_spark.operators.gates import collect_at_most
+
 
 def unpivot(
     df: DataFrame,
@@ -85,19 +87,16 @@ def pivot_sum_dynamic(
     only the resulting COLUMN NAMES are Spark's deterministic
     rendering of each value.
     """
-    vals = [
-        r[0]
-        for r in df.select(pivot_col)
-        .where(F.col(pivot_col).isNotNull())
-        .distinct()
-        .limit(max_domain + 1)
-        .collect()
-    ]
-    if len(vals) > max_domain:
+    rows = collect_at_most(
+        df.select(pivot_col).where(F.col(pivot_col).isNotNull()).distinct(),
+        max_domain,
+    )
+    if rows is None:
         raise ValueError(
             f"pivot domain of {pivot_col!r} exceeds max_domain="
             f"{max_domain}; pivoting an unbounded domain into columns "
             "is almost always a bug — pass explicit values (pivot_sum) "
             "or raise the cap deliberately"
         )
-    return pivot_sum(df, row_key, pivot_col, sorted(vals), measure)
+    vals = sorted(r[0] for r in rows)
+    return pivot_sum(df, row_key, pivot_col, vals, measure)

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from healthcare_aihw_etl_pipeline_spark.operators.gates import at_most
+
 _DAY_US = 86_400_000_000
 
 
@@ -82,7 +84,7 @@ def daily_boundary_segments(
         "user_id", F.col("ts").cast("date").alias("day")
     ).agg(F.min(us).alias("s"), F.max(us).alias("e"))
     one = F.lit(1).cast("long")
-    if n_rows is not None and n_rows <= _SWEEP_TWO_LEVEL_ROWS:
+    if at_most(n_rows, _SWEEP_TWO_LEVEL_ROWS):
         # Small corpus: the original single-(day)-window plan — no
         # checkpoint, no summary join; |days| partitions are plenty
         # when each carries little volume.

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from healthcare_aihw_etl_pipeline_spark.functions.scalar import clean_text, norm_state
+from healthcare_aihw_etl_pipeline_spark.operators.gates import at_most
 from healthcare_aihw_etl_pipeline_spark.operators.relational import (
     distinct_domain,
     top_k,
@@ -133,17 +134,9 @@ def _revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n_orders = table_rows(sf_dir, "orders")
     n_customer = table_rows(sf_dir, "customer")
-    snowflake_fit = (
-        n_orders is not None
-        and n_customer is not None
-        and n_orders <= _BCAST_SNOWFLAKE_MAX_ROWS
-        and n_customer <= _BCAST_SNOWFLAKE_MAX_ROWS
-    )
-    shj_fit = n_orders is not None and n_orders <= _SHJ_ORDERS_MAX_ROWS
-    customer_fit = (
-        n_customer is not None and n_customer <= _BCAST_CUSTOMER_MAX_ROWS
-    )
-    if snowflake_fit:
+    if at_most(n_orders, _BCAST_SNOWFLAKE_MAX_ROWS) and at_most(
+        n_customer, _BCAST_SNOWFLAKE_MAX_ROWS
+    ):
         return nation_tail(
             lineitem.select("l_orderkey", _revenue().alias("rev"))
             .join(
@@ -156,12 +149,12 @@ def _revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             "c_nationkey",
         )
-    if shj_fit:
+    if at_most(n_orders, _SHJ_ORDERS_MAX_ROWS):
         joined = lineitem.select("l_orderkey", _revenue().alias("rev")).join(
             orders.select("o_orderkey", "o_custkey").hint("SHUFFLE_HASH"),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
-        if customer_fit:
+        if at_most(n_customer, _BCAST_CUSTOMER_MAX_ROWS):
             return nation_tail(
                 joined.join(
                     F.broadcast(

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from healthcare_aihw_etl_pipeline_spark.operators.gates import collect_at_most
 from healthcare_aihw_etl_pipeline_spark.operators.search import (
     sql_contrib,
     sql_tokens,
@@ -608,14 +609,11 @@ def theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # replication.
     import numpy as np
 
-    # ROUND 17 (r16 verdict item 8): the collect is GATED — the numpy
-    # pair stage allocates O(days²) driver memory, fine for this
-    # corpus's ~2.4k-day calendar but not for a corpus spanning many
-    # decades at day grain. The probe collects at most _TS_MAX_DAYS + 1
-    # rows of the same rollup; past that the retained Spark pair plan
-    # (_theil_sen_spark_pairs) runs instead.
-    rows = daily.limit(_TS_MAX_DAYS + 1).collect()
-    if len(rows) > _TS_MAX_DAYS:
+    # The numpy pair stage allocates O(days²) driver memory, so the
+    # collect is gated: past _TS_MAX_DAYS days the retained Spark pair
+    # plan (_theil_sen_spark_pairs) runs instead.
+    rows = collect_at_most(daily, _TS_MAX_DAYS)
+    if rows is None:
         return _theil_sen_spark_pairs(daily)
     xs = np.array([r["x"] for r in rows], dtype=np.int64)
     rs = np.array([r["r"] for r in rows], dtype=np.int64)

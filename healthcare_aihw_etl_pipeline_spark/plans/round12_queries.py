@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from healthcare_aihw_etl_pipeline_spark.operators.gates import at_most, collect_at_most
 from healthcare_aihw_etl_pipeline_spark.operators.privacy import sql_band_of
 from healthcare_aihw_etl_pipeline_spark.plans.registry import register
 from healthcare_aihw_etl_pipeline_spark.sources.catalog import load_table
@@ -379,6 +380,9 @@ _BPE_WORD_RE = "^[a-z]{2,16}$"
 # the cap). Real [a-z]{2,16} vocabularies sit 1-3 orders below this;
 # past it the Spark merge loop runs instead.
 _BPE_MAX_VOCAB = 2_000_000
+# Doc-count proxy in front of that probe: past it the Spark merge loop
+# runs without collecting any vocab.
+_BPE_MAX_DOCS = 10_000_000
 
 
 def _bpe_stage_sql(i: int) -> str:
@@ -492,43 +496,26 @@ def _bpe_train(spark: SparkSession, sf_dir: str) -> list[tuple]:
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-    # ROUND 16 (optimization): the corpus-sized work is exactly ONE
-    # pass — the distinct-word count above. Every merge round after it
-    # runs on the language-bounded vocab relation, and the previous
-    # shape paid 2 Spark jobs + an eager localCheckpoint per round
-    # (17 jobs; 4.8-12.5 s cold at sf0.001 for bpe_merge_training and
-    # ~26 s for bpe_encode_stats, which trains then applies — almost
-    # all of it per-job scheduling floor + replanning, the registry's
-    # worst cold cost). Production BPE trainers (Sennrich's reference
-    # implementation onward) aggregate the corpus once and run the
-    # merge loop in memory. Adaptive on the parquet footer row count
-    # (the dup_span/assoc_rules discipline): at bench scale the vocab
-    # is collected once (bounded by the language, not the data) and
-    # the 8 rounds run driver-side with the IDENTICAL pair-count /
-    # argmax / left-to-right non-overlapping replace semantics
-    # (Python str.replace == Spark replace() == DuckDB replace(),
-    # verified for the 'a a a' overlap case); at web scale — or with
-    # an unreadable footer — the Spark loop below is kept, since a
-    # pathological corpus could blow the [a-z]{2,16} vocab past
-    # driver memory. Measured: bpe_merge_training 12.5 -> 1.3 s cold,
-    # bpe_encode_stats 26 -> 3 s; byte-identical merge tables (the
-    # oracle and tests/test_round12.py pin them).
-    from healthcare_aihw_etl_pipeline_spark.sources.catalog import (
-        table_rows,
-    )
+    # The corpus-sized work is ONE pass, the distinct-word count above;
+    # every merge round runs on the language-bounded vocab. Under both
+    # gates (the documents footer, then the vocab itself, which a
+    # token-diverse corpus can inflate independently of doc count) the
+    # vocab is collected once and the 8 rounds run driver-side with the
+    # IDENTICAL pair-count / argmax / left-to-right non-overlapping
+    # replace semantics (Python str.replace == Spark replace() == DuckDB
+    # replace(), verified for the 'a a a' overlap case), as production
+    # BPE trainers do; otherwise the Spark loop below runs. Measured
+    # cold at sf0.001 against the per-round Spark loop (17 jobs):
+    # bpe_merge_training 12.5 -> 1.3 s, bpe_encode_stats 26 -> 3 s;
+    # byte-identical merge tables (the oracle and tests/test_round12.py
+    # pin them).
+    from healthcare_aihw_etl_pipeline_spark.sources.catalog import table_rows
 
-    # ROUND 17 (r16 ADVICE): the doc-count footer gate is a proxy — the
-    # actual driver-memory risk is the DISTINCT-WORD vocab collected
-    # below, which a token-diverse corpus could inflate independently
-    # of doc count. Bound the collect itself: fetch at most
-    # _BPE_MAX_VOCAB + 1 rows of the same aggregate; if the vocab is
-    # larger, fall through to the scale-safe Spark loop.
-    n_docs = table_rows(sf_dir, "documents")
-    collected: list | None = None
-    if n_docs is not None and n_docs <= 10_000_000:
-        probe = words.limit(_BPE_MAX_VOCAB + 1).collect()
-        if len(probe) <= _BPE_MAX_VOCAB:
-            collected = probe
+    collected = (
+        collect_at_most(words, _BPE_MAX_VOCAB)
+        if at_most(table_rows(sf_dir, "documents"), _BPE_MAX_DOCS)
+        else None
+    )
     if collected is not None:
         vocab_rows = [
             ("  " + "".join(ch + "  " for ch in r["word"]), r["cnt"])

@@ -40,6 +40,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from healthcare_aihw_etl_pipeline_spark.operators.gates import collect_at_most
 from healthcare_aihw_etl_pipeline_spark.plans.registry import REGISTRY, register
 from healthcare_aihw_etl_pipeline_spark.sources.catalog import load_table
 
@@ -756,21 +757,17 @@ def unigram_lm_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
-    # ROUND 17 (optimization, r16 verdict item 5): the whole pipeline
-    # after the distinct-word aggregate runs on the LANGUAGE-bounded
-    # vocab, yet it unrolled into 16 Spark jobs per run (checkpoint,
-    # model collect, mapInPandas Viterbi usage + its shuffle, three
-    # joins) — 5.9 s cold at sf0.001, almost all per-job floor +
-    # Python-boundary traffic (guide §1.2/§4). The bpe/markov
-    # bounded-collect discipline applies verbatim: the limit probe
-    # collects at most _UNI_MAX_VOCAB + 1 rows of the SAME aggregate
-    # (the vocab itself is the gate — no footer proxy needed); under
-    # the gate the substring seed, top-M cap, quantized-ln scores,
-    # Viterbi usage (the IDENTICAL _uni_viterbi the Arrow path calls),
-    # alts and losses run driver-side: 16 jobs -> 2. The Spark path
-    # below is KEPT for a vocab past the gate.
-    probe = words_plan.limit(_UNI_MAX_VOCAB + 1).collect()
-    if len(probe) <= _UNI_MAX_VOCAB:
+    # The whole pipeline after the distinct-word aggregate runs on the
+    # LANGUAGE-bounded vocab, yet in Spark it is 16 jobs per run
+    # (checkpoint, model collect, mapInPandas Viterbi usage + its
+    # shuffle, three joins): 5.9 s cold at sf0.001, almost all per-job
+    # floor. The vocab itself is the gate: under _UNI_MAX_VOCAB rows
+    # the substring seed, top-M cap, quantized-ln scores, Viterbi usage
+    # (the IDENTICAL _uni_viterbi the Arrow path calls), alts and
+    # losses run driver-side in 2 jobs. The Spark path below is KEPT
+    # for a vocab past the gate.
+    probe = collect_at_most(words_plan, _UNI_MAX_VOCAB)
+    if probe is not None:
         return _unigram_driver(spark, probe)
     words = words_plan.localCheckpoint(eager=True)
     sub = words.select(
@@ -806,8 +803,8 @@ def unigram_lm_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # construction; the LIMIT probe turns a violated assumption into a
     # loud error instead of an unbounded collect.
     cap = _UNI_TOPM + _UNI_CHAR_CAP
-    model_rows = scored.limit(cap + 1).collect()
-    if len(model_rows) > cap:  # pragma: no cover - contract guard
+    model_rows = collect_at_most(scored, cap)
+    if model_rows is None:  # pragma: no cover - contract guard
         raise ValueError(f"unigram model exceeded {cap} pieces")
     score = {r["piece"]: r["score_q"] for r in model_rows}
 

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from healthcare_aihw_etl_pipeline_spark.operators.gates import at_most
 from healthcare_aihw_etl_pipeline_spark.plans.registry import cents, register
 from healthcare_aihw_etl_pipeline_spark.sources.catalog import load_table
 
@@ -1773,21 +1774,14 @@ def kcenter_coreset_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise ValueError(f"missing center row vec_id={vid}")
         return [int(v) for v in row[0]]
 
-    # ROUND 17 (optimization, r16 verdict item 5): at bench scale the
-    # round loop's cost was its JOB COUNT — 8 x (Arrow min-dist pass +
-    # eager localCheckpoint + 1-row TakeOrdered) = 20 Spark jobs per
-    # run, each paying the per-job floor plus the JVM<->Python Arrow
-    # round trip of the full (vec_id, q[64], dmin) relation (guide
-    # §1.2/§4). Footer-gated (the graph_ann/bpe bounded-collect
-    # discipline): below _KC_MAX_DRIVER_ROWS the quantized codes are
-    # collected ONCE (the same int7 codes the Arrow path carries) and
-    # the whole Gonzalez loop runs in numpy — exact integer squared-L2,
-    # argmax with the (dmin desc, vec_id asc) tie rule replicated as
-    # max-then-min-id — so the selected centers and radii are
-    # bit-identical: 20 jobs -> 1. The carried-dmin Arrow path below
-    # remains the large-corpus shape.
-    n_emb = table_rows(sf_dir, "embeddings")
-    if n_emb is not None and n_emb <= _KC_MAX_DRIVER_ROWS:
+    # At bench scale the round loop's cost is its job count: 8 x (Arrow
+    # min-dist pass + eager localCheckpoint + 1-row TakeOrdered) = 20
+    # jobs. Below the footer gate the int7 codes are collected ONCE and
+    # the Gonzalez loop runs in numpy (exact integer squared-L2, the
+    # (dmin desc, vec_id asc) tie rule as max-then-min-id), so centers
+    # and radii are bit-identical in 1 job. The carried-dmin Arrow path
+    # below remains the large-corpus shape.
+    if at_most(table_rows(sf_dir, "embeddings"), _KC_MAX_DRIVER_ROWS):
         import numpy as np
 
         rows = emb.collect()

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from healthcare_aihw_etl_pipeline_spark.operators.gates import at_most
 from healthcare_aihw_etl_pipeline_spark.plans.registry import register
 from healthcare_aihw_etl_pipeline_spark.plans.round13_queries import (
     _KNN_K,
@@ -147,17 +148,13 @@ def graph_ann_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
 
-    # ROUND 17 (optimization, r16 verdict item 5): the distributed
-    # form pays 20+ Spark jobs per run — the kNN index build (Arrow
-    # signature pass + two applyInPandas band top-k passes + 2 eager
-    # checkpoints) plus 2 bounded collects per hop — 5.0 s cold at
-    # sf0.001, nearly all per-job floor (guide §1.2). Every kernel in
-    # that pipeline is ALREADY numpy inside mapInPandas/applyInPandas,
-    # so below the footer gate the identical arithmetic runs driver-
-    # side on the collected codes (1 job); the distributed index build
-    # below stays the large-corpus path.
+    # The distributed form pays 20+ Spark jobs per run (the kNN index
+    # build plus 2 bounded collects per hop): 5.0 s cold at sf0.001,
+    # nearly all per-job floor. Its kernels are already numpy, so below
+    # the footer gate the identical arithmetic runs driver-side on the
+    # collected codes (1 job); the index build stays the large path.
     n_gate = table_rows(sf_dir, "embeddings")
-    if n_gate is not None and n_gate <= _GA_MAX_DRIVER_ROWS:
+    if at_most(n_gate, _GA_MAX_DRIVER_ROWS):
         return _graph_ann_driver(spark, emb, n_gate)
 
     qcodes = emb.select("vec_id", quantize_q127("embedding").alias("q"))

@@ -53,6 +53,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from healthcare_aihw_etl_pipeline_spark.operators.gates import at_most, collect_at_most
 from healthcare_aihw_etl_pipeline_spark.operators.search import sql_tokens, tokens
 from healthcare_aihw_etl_pipeline_spark.plans.registry import register, sql_cents
 from healthcare_aihw_etl_pipeline_spark.sources.catalog import load_table
@@ -68,6 +69,9 @@ from healthcare_aihw_etl_pipeline_spark.sources.catalog import load_table
 # and ~4e5 in 1e12 grams (rate 4e-7) at the 100 TB grain.
 _DS_K = 8
 _DS_TOP = 20
+# One-pass persist gate: the 32 B/row position stream fits memory up to
+# bench-scale corpora; past it both branches recompute the hash scan.
+_DS_PERSIST_MAX_DOCS = 10_000_000
 
 _DS_GRAM_SQL = " || ' ' || ".join(f"t[i+{j + 1}]" for j in range(_DS_K))
 
@@ -194,25 +198,19 @@ def dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The md5 gram-hash scan is ~2/3 of the wall (decomposed in
     # OPTIMIZATION_r16.md, dup_span_stats: sf10 scan 4.2 s warm of the
     # 12.4 s total), and the two-branch plan (dup-gram groupBy + the
-    # position join-back) pays it TWICE. Adaptive single-pass: when
-    # the footer row count says the corpus is bench-scale, LAZILY
-    # persist the slim 32 B/row position stream so both branches read
-    # one hash pass (measured 12.4 -> 7.9 s at sf10, under DuckDB's
-    # 11.5 s same-run pair). At web scale the position stream is
-    # token-stream-sized and a persist of it would dwarf the row-local
-    # recompute — the large path keeps the recompute-both-branches
-    # shape. Duplicated-gram detection is min(doc_id) != max(doc_id)
+    # position join-back) pays it TWICE. Under the footer gate the
+    # position stream is LAZILY persisted so both branches read one
+    # hash pass (measured 12.4 -> 7.9 s at sf10, under DuckDB's 11.5 s
+    # same-run pair); at web scale a persist would dwarf the row-local
+    # recompute. Duplicated-gram detection is min(doc_id) != max(doc_id)
     # in BOTH branches (same predicate as the oracle's
     # COUNT(DISTINCT doc_id) >= 2): unlike countDistinct it partial-
     # aggregates map-side with no expand, so a boilerplate gram shared
     # by millions of docs costs one partial row per map task, and the
     # join-back stays the AQE-skew-handled probe.
-    from healthcare_aihw_etl_pipeline_spark.sources.catalog import (
-        table_rows,
-    )
+    from healthcare_aihw_etl_pipeline_spark.sources.catalog import table_rows
 
-    n_docs = table_rows(sf_dir, "documents")
-    if n_docs is not None and n_docs <= 10_000_000:
+    if at_most(table_rows(sf_dir, "documents"), _DS_PERSIST_MAX_DOCS):
         from pyspark.storagelevel import StorageLevel
 
         pos = pos.persist(StorageLevel.MEMORY_AND_DISK)
@@ -568,6 +566,9 @@ def rdd_order_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _AR_SUPPORT = 2
 _AR_TOP = 20
+# Lazy in-memory basket persist up to ~sf3; past it the order-grain
+# arrays are corpus-sized and take the eager DISK_ONLY checkpoint.
+_AR_PERSIST_MAX_LINEITEM = 20_000_000
 
 
 @register(
@@ -633,9 +634,7 @@ _AR_TOP = 20
 def assoc_rules_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
-    from healthcare_aihw_etl_pipeline_spark.sources.catalog import (
-        table_rows,
-    )
+    from healthcare_aihw_etl_pipeline_spark.sources.catalog import table_rows
 
     li = load_table(spark, sf_dir, "lineitem")
     base = li.select("l_orderkey", "l_partkey")
@@ -649,18 +648,13 @@ def assoc_rules_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at sf10; a rollup countDistinct variant re-paid the distinct
     # machinery per consumer.)
     #
-    # Storage strategy keyed on the parquet footer row count (the
-    # ensure_min_splits discipline — a metastore statistic on a real
-    # cluster): up to ~20M lineitem rows (sf≤~3) the order-grain
-    # arrays fit executor memory, so a LAZY in-memory persist lets
-    # the first action pipeline basket build + item supports + prune
-    # stats in ONE pass instead of four serialized materializations
-    # (the r15 2.8×-at-sf1 residue was exactly this eager-checkpoint
-    # stage barrier). Beyond that — or when the footer is unreadable
-    # — the arrays are corpus-sized, and the scale-safe choice is the
-    # eager DISK_ONLY checkpoint that sf10 needs.
-    n_li = table_rows(sf_dir, "lineitem")
-    small = n_li is not None and n_li <= 20_000_000
+    # Storage keyed on the lineitem footer row count: under the gate a
+    # LAZY in-memory persist lets the first action pipeline basket build
+    # + item supports + prune stats in ONE pass instead of four
+    # serialized materializations (that eager-checkpoint stage barrier
+    # was a 2.8x-at-sf1 residue). Past it, or with an unreadable
+    # footer, the eager DISK_ONLY checkpoint that sf10 needs.
+    small = at_most(table_rows(sf_dir, "lineitem"), _AR_PERSIST_MAX_LINEITEM)
     baskets_all = base.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("l_partkey")).alias("ps")
     )
@@ -998,34 +992,23 @@ def markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     trans = edges.groupBy("src", "dst").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
     )
-    # ROUND 16 (optimization): everything below the transition matrix
-    # is bounded by the event-type domain squared — tens of rows at ANY
-    # corpus size — yet the previous plan unrolled the 7 removal-effect
-    # rounds as 14 nested broadcast joins plus 2 eager checkpoints:
-    # ~16 s cold / ~4.6 s warm at sf0.001 of pure planning + per-job
-    # scheduling floor (the registry's worst cold cost after bpe).
-    # The corpus-sized work (per-user window pass + map-side-combined
-    # (src, dst) count) stays in Spark; the domain-bounded matrix is
-    # collected (the graph-ANN / assoc-prune bounded-collect
-    # discipline) and the exact integer ppb recursion runs driver-side
-    # with the IDENTICAL truncating-division term order (Spark `div`
-    # rounds toward zero; all operands here are non-negative, where it
-    # coincides with the oracle's `//`). Measured: 15.7 s -> 1.6 s
-    # cold in the full-registry sweep session, byte-identical rows
-    # (tests/test_round14b.py::test_markov_matches_python pins the
-    # result against an independent pure-Python replication).
-    #
-    # ROUND 17 (r16 verdict item 4): the collect is GATED. event_type
-    # is enum-like in this corpus, but a high-cardinality column would
-    # put domain² rows on the driver and spin the pure-Python
-    # recursion. The probe collects at most _MK_MAX_CELLS + 1 rows of
-    # the SAME aggregate (one extra CollectLimit over the already
-    # bounded matrix — no second corpus pass in the common case); if
-    # the matrix is larger, the distributed removal-effect plan
-    # (_markov_spark_rounds, the pre-r16 implementation) degrades
-    # gracefully instead.
-    tr = trans.limit(_MK_MAX_CELLS + 1).collect()
-    if len(tr) > _MK_MAX_CELLS:
+    # Everything below the transition matrix is bounded by the
+    # event-type domain squared (tens of rows here), yet unrolling the 7
+    # removal-effect rounds in Spark (14 nested broadcast joins + 2
+    # eager checkpoints) cost ~16 s cold / ~4.6 s warm at sf0.001 of
+    # planning and per-job floor. The corpus-sized work (per-user
+    # window + map-side-combined (src, dst) count) stays in Spark; the
+    # matrix is collected and the exact integer ppb recursion runs
+    # driver-side with the IDENTICAL truncating-division term order
+    # (Spark `div` rounds toward zero; all operands are non-negative,
+    # where it equals the oracle's `//`). Measured 15.7 s -> 1.6 s cold,
+    # byte-identical rows (tests/test_round14b.py::
+    # test_markov_matches_python pins them). A high-cardinality
+    # event_type would put domain² rows on the driver, so the collect
+    # is gated: past _MK_MAX_CELLS the distributed removal-effect plan
+    # (_markov_spark_rounds) runs instead.
+    tr = collect_at_most(trans, _MK_MAX_CELLS)
+    if tr is None:
         return _markov_spark_rounds(ev, trans)
 
     def _div(a: int, b: int) -> int:

@@ -95,21 +95,22 @@ def table_rows(sf_dir: str, name: str) -> int | None:
     no data scan, no Spark job. This is the table-statistics primitive a
     cost-based planner needs for strategy selection (broadcast vs
     shuffle); on a cluster the metastore serves the same number. Returns
-    None when the footer is unreadable (callers must then choose the
-    scale-safe strategy)."""
+    None when the footer is unreadable — a missing path, a directory or
+    a non-parquet file (callers must then choose the scale-safe
+    strategy); any other error propagates."""
+    import os
+
+    import pyarrow.parquet as pq
+
     key = (sf_dir, name)
+    path = f"{sf_dir}/{name}.parquet"
     try:
-        import os
-
-        import pyarrow.parquet as pq
-
-        path = f"{sf_dir}/{name}.parquet"
         mtime = os.path.getmtime(path)
         hit = _ROWCOUNT_CACHE.get(key)
         if hit is not None and hit[0] == mtime:
             return hit[1]
         n = pq.ParquetFile(path).metadata.num_rows
-    except Exception:
+    except (OSError, ValueError):  # ArrowInvalid is a ValueError
         return None
     _ROWCOUNT_CACHE[key] = (mtime, n)
     return n

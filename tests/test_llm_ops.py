@@ -238,43 +238,51 @@ def test_connected_components_chain_and_islands(spark):
     assert comp == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6, 7: 6}
 
 
-def test_connected_components_long_chain_converges(spark):
+def test_connected_components_long_chain_converges(spark, monkeypatch):
     """A 12-node path graph needs multiple propagation rounds — the loop
-    must reach the fixed point, not stop early. small_edge_cap=0 forces
-    the DISTRIBUTED pointer-jumping path (the default would take the
+    must reach the fixed point, not stop early. A cap of 0 forces the
+    DISTRIBUTED pointer-jumping path (the default would take the
     bounded driver union-find fast path on a graph this small), so this
     test keeps the at-scale loop itself covered."""
-    from healthcare_aihw_etl_pipeline_spark.operators.dedup import connected_components
+    from healthcare_aihw_etl_pipeline_spark.operators import dedup
 
+    monkeypatch.setattr(dedup, "_CC_SMALL_EDGE_CAP", 0)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(11, 0, -1)], ["src", "dst"]
     )
     comp = {
         r.node: r.component
-        for r in connected_components(edges, small_edge_cap=0).collect()
+        for r in dedup.connected_components(edges).collect()
     }
     assert set(comp.values()) == {1}
     assert len(comp) == 12
 
 
-def test_connected_components_paths_agree_at_cap_boundary(spark):
+def test_connected_components_paths_agree_at_cap_boundary(
+    spark, monkeypatch, jobs_run
+):
     """Driver union-find and the distributed loop must return identical
     labelings on the same graph — including exactly at the cap boundary
     (symmetric edge count == cap takes the fast path, cap-1 forces the
-    loop). Mixed topology: chain + triangle + isolated edge."""
-    from healthcare_aihw_etl_pipeline_spark.operators.dedup import connected_components
+    loop). Mixed topology: chain + triangle + isolated edge. The fast
+    path runs 4 Spark jobs: its one bounded probe collect is the edge
+    list, with no separate count."""
+    from healthcare_aihw_etl_pipeline_spark.operators import dedup
 
     raw = [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (12, 10), (20, 21)]
     edges = spark.createDataFrame(raw, ["src", "dst"])
     n_sym = 2 * len(raw)  # no duplicate/self edges → symmetric count
-    fast = {
-        r.node: r.component
-        for r in connected_components(edges, small_edge_cap=n_sym).collect()
-    }
-    dist = {
-        r.node: r.component
-        for r in connected_components(edges, small_edge_cap=n_sym - 1).collect()
-    }
+
+    def closure(cap):
+        monkeypatch.setattr(dedup, "_CC_SMALL_EDGE_CAP", cap)
+        return {
+            r.node: r.component
+            for r in dedup.connected_components(edges).collect()
+        }
+
+    fast, jobs = jobs_run(lambda: closure(n_sym))
+    assert jobs == 4
+    dist = closure(n_sym - 1)
     assert fast == dist
     assert fast[4] == 1 and fast[12] == 10 and fast[21] == 20
 

@@ -126,20 +126,38 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _both_sides(spark, sf_dir, monkeypatch, name):
+    """Build ``name`` on its scale-safe side (footer unreadable) and then
+    on its small side; return each side's rows and whether its physical
+    plan reads an in-memory persisted relation. The cache is cleared
+    first: a relation the small side persisted earlier in the session
+    would otherwise serve the scale-safe side's equal subplan too."""
+    from healthcare_aihw_etl_pipeline_spark.sources import catalog
+
+    def side():
+        df = REGISTRY[name].build(spark, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return _rows(df), "InMemoryTableScan" in plan
+
+    spark.catalog.clearCache()
+    with monkeypatch.context() as m:
+        m.setattr(catalog, "table_rows", lambda *_a, **_k: None)
+        large = side()
+    return side(), large
+
+
 def test_dup_span_small_path_equals_recompute_path(
     spark, sf_dir, monkeypatch
 ):
     """dup_span_stats keys its one-pass persist on the documents
     footer row count; forcing the footer unreadable (None) must take
-    the recompute-both-branches path and produce the identical
-    relation."""
-    from healthcare_aihw_etl_pipeline_spark.sources import catalog
-
-    q = REGISTRY["dup_span_stats"]
-    small = _rows(q.build(spark, sf_dir))
-    monkeypatch.setattr(catalog, "table_rows", lambda *_a, **_k: None)
-    large = _rows(q.build(spark, sf_dir))
+    the recompute-both-branches path, with no in-memory relation in its
+    plan, and produce the identical relation."""
+    (small, small_cached), (large, large_cached) = _both_sides(
+        spark, sf_dir, monkeypatch, "dup_span_stats"
+    )
     assert small == large
+    assert small_cached and not large_cached
 
 
 def test_assoc_rules_small_path_equals_checkpoint_path(
@@ -147,11 +165,10 @@ def test_assoc_rules_small_path_equals_checkpoint_path(
 ):
     """assoc_rules_top20 keys its lazy in-memory persist vs eager
     DISK_ONLY checkpoint on the lineitem footer row count; both
-    storage strategies must produce the identical relation."""
-    from healthcare_aihw_etl_pipeline_spark.sources import catalog
-
-    q = REGISTRY["assoc_rules_top20"]
-    small = _rows(q.build(spark, sf_dir))
-    monkeypatch.setattr(catalog, "table_rows", lambda *_a, **_k: None)
-    large = _rows(q.build(spark, sf_dir))
+    storage strategies must produce the identical relation, and only
+    the small side reads an in-memory relation."""
+    (small, small_cached), (large, large_cached) = _both_sides(
+        spark, sf_dir, monkeypatch, "assoc_rules_top20"
+    )
     assert small == large
+    assert small_cached and not large_cached

@@ -143,3 +143,61 @@ def test_no_hardcoded_local_master():
             and fixed.search(node.value)
         ]
     assert not hits, f"hard-coded local[N] masters: {hits}"
+
+
+def _is_table_rows(node: ast.AST) -> bool:
+    return isinstance(node, ast.Call) and "table_rows" in (
+        getattr(node.func, "id", None),
+        getattr(node.func, "attr", None),
+    )
+
+
+def _hand_rolled_gates(tree: ast.AST):
+    """Lines holding a size gate written out by hand: a ``.limit(<expr>
+    + 1)`` probe, or an order comparison of a ``table_rows(...)``
+    result (called inline or bound to a name in the same function)."""
+    scopes = [tree, *(n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef))]
+    for scope in scopes:
+        footer = {
+            t.id
+            for n in ast.walk(scope)
+            if isinstance(n, ast.Assign) and _is_table_rows(n.value)
+            for t in n.targets
+            if isinstance(t, ast.Name)
+        }
+        for n in ast.walk(scope):
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "limit"
+                and n.args
+                and isinstance(n.args[0], ast.BinOp)
+                and isinstance(n.args[0].op, ast.Add)
+                and 1 in {getattr(a, "value", None) for a in (n.args[0].left, n.args[0].right)}
+            ):
+                yield n.lineno
+            elif isinstance(n, ast.Compare) and any(
+                isinstance(op, (ast.Lt, ast.LtE, ast.Gt, ast.GtE)) for op in n.ops
+            ):
+                operands = [n.left, *n.comparators]
+                if any(
+                    _is_table_rows(o) or (isinstance(o, ast.Name) and o.id in footer)
+                    for o in operands
+                ):
+                    yield n.lineno
+
+
+def test_size_gates_go_through_gates_module():
+    """Every driver-vs-distributed size choice reads its size through
+    ``operators/gates.py`` (``at_most`` / ``collect_at_most``), so the
+    ceilings stay listable from one place: no other package module
+    writes its own ``limit(C + 1)`` probe or compares a footer row
+    count with a ceiling."""
+    gates = PACKAGE / "operators" / "gates.py"
+    hits = sorted(
+        f"{path.relative_to(ROOT)}:{line}"
+        for path in PACKAGE.rglob("*.py")
+        if path != gates
+        for line in set(_hand_rolled_gates(ast.parse(path.read_text())))
+    )
+    assert not hits, f"hand-rolled size gates (use operators.gates): {hits}"

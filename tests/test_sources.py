@@ -111,15 +111,33 @@ def test_spread_guard(spark, tmp_path):
     assert spread(df2) is df2  # untouched: enough files already
 
 
-def test_table_rows_serves_footer_statistics(spark, sf_dir):
+def test_table_rows_serves_footer_statistics(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """catalog.table_rows is the metastore statistic the stats-guarded
-    plans read: exact, cached, and computed without a Spark job."""
+    plans read: exact, cached, and computed without a Spark job. An
+    unreadable footer — a missing file, a directory, a non-parquet
+    file — reads as None, so every gate takes its scale-safe side; a
+    bug raises instead of silently flipping every gate."""
+    import pyarrow.parquet as pq
+
     from healthcare_aihw_etl_pipeline_spark.sources.catalog import table_rows
 
     n = table_rows(sf_dir, "orders")
     assert n == spark.read.parquet(f"{sf_dir}/orders.parquet").count()
     assert table_rows(sf_dir, "orders") is not None  # cache hit path
     assert table_rows(sf_dir, "no_such_table") is None
+    (tmp_path / "a_dir.parquet").mkdir()
+    (tmp_path / "not_parquet.parquet").write_text("not a parquet file")
+    assert table_rows(str(tmp_path), "a_dir") is None
+    assert table_rows(str(tmp_path), "not_parquet") is None
+
+    def bug(*_a, **_k):
+        raise TypeError("bug")
+
+    monkeypatch.setattr(pq, "ParquetFile", bug)
+    with pytest.raises(TypeError):
+        table_rows(str(tmp_path), "not_parquet")
 
 
 def test_http_transport_opt_in_and_local_fixture_server():
