@@ -1,37 +1,47 @@
 """Dashboard-serving analytics (SURVEY §3.2) — the reference's Streamlit
-query path (/root/reference/streamlit_app.py) as an engine API over any
-tidy fact DataFrame.
+query path (streamlit_app.py) as an engine API over any tidy fact
+DataFrame.
 
-The reference recomputes a pandas groupby per widget per interaction
-(A3–A10); here the serving pattern is: load → harmonize → persist once
-(C2), read the filter domains once per served frame, then one lazy
-aggregation per widget and one aggregate for the insights.
+The reference redraws every widget with its own pandas groupby on each
+sidebar change (A3–A10) and leans on `st.cache_data` (C2) to compute one
+filtered state once. Here the serving pattern is: load → harmonize →
+persist once (C2), read the filter domains once per served frame, then
+answer each view from ONE aggregate. `_rollup` sums the measure over
+every grouping the five widgets and the insights need, as one
+grouping-sets aggregate collected once; each widget returns its slice as
+a local frame (a LocalRelation, whose collect runs no Spark job) and the
+insights are read from it on the driver. An interaction therefore runs
+that aggregate's jobs and no others. The result is kept for the served
+frame and for the views interactive_filter derives from it; any other
+frame is aggregated again on every call, so a lazy frame over a changing
+source is never answered from stale rows.
 
 A frame whose plan has no Exchange and already runs as one partition
 (a small file read and harmonized) is served as `coalesce(1)`. That
 moves no data; it lets the planner see that the cached frame is one
-partition, so no aggregate below plans an Exchange and each widget and
-the insights run one Spark job with one task. Every other frame is
-served as it is: forcing one partition on a 3.6M-row, 4-partition frame
-made the five widgets 1.3-2x slower and `filter_domains` about 2.5x
-slower (4 cores), so the rule only declares what the plan already does.
+partition, so the filter-domain aggregates over it plan no Exchange.
+Every other frame is served as it is: forcing one partition on a
+3.6M-row, 4-partition frame made grouped aggregates over it 1.3-2x
+slower and `filter_domains` about 2.5x slower (4 cores), so the rule
+only declares what the plan already does.
 """
 
 from __future__ import annotations
 
+import math
 import weakref
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass
+from decimal import ROUND_HALF_UP, Decimal
 
-from pyspark.sql import Column, DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
-from healthcare_aihw_etl_pipeline_spark.operators.relational import (
-    dims_of,
-    top_k,
-)
-from healthcare_aihw_etl_pipeline_spark.operators.reshape import pivot_sum
+from healthcare_aihw_etl_pipeline_spark.operators.relational import dims_of
 from healthcare_aihw_etl_pipeline_spark.functions.scalar import STATE_CODES, try_double, try_int
 
 MEASURE = "separations"
@@ -39,6 +49,20 @@ MEASURE = "separations"
 MAX_DOMAIN = 50
 # Filter domains per served frame: filled by filter_domains, dropped with the frame.
 _DOMAINS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+# Rollup per served frame and per view filtered from one: filled by
+# _rollup, dropped with the frame.
+_ROLLUPS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+# The rollup's grouping columns, in grouping_id bit order, and the
+# groupings the widgets and the insights read.
+_ROLLUP_KEYS = ("year", "state", "category", "principal_diagnosis")
+_ROLLUP_SETS = (
+    ("state",),
+    ("year", "state"),
+    ("category",),
+    ("category", "state"),
+    ("category", "principal_diagnosis"),
+    ("year",),
+)
 
 
 def harmonize(df: DataFrame) -> DataFrame:
@@ -55,21 +79,25 @@ def harmonize(df: DataFrame) -> DataFrame:
 
 
 def serve(df: DataFrame) -> DataFrame:
-    """C2 — persist the harmonized base frame once; every widget
-    aggregation below re-reads it from memory (`st.cache_data`,
-    /root/reference/streamlit_app.py:26-27). The returned frame's filter
-    domains are read once, by the first filter_domains call.
+    """C2 — persist the harmonized base frame once; each view's rollup
+    re-reads it from memory (`st.cache_data`, the reference's
+    streamlit_app.py:26-27). The returned frame's filter domains are read
+    once, by the first filter_domains call, and its rollup and those of
+    the views filtered from it once each, by their first widget or
+    insights call.
 
     A frame that already runs as one partition with no Exchange is
     persisted as `coalesce(1)`: the cached scan then reports
     SinglePartition, which satisfies every clustered and all-tuples
-    requirement, so the widgets and insights over it plan no Exchange.
-    Any other frame keeps its partitioning (see the module docstring for
+    requirement, so the filter-domain aggregates over it plan no
+    Exchange (a rollup still plans one small Exchange: its Expand reports
+    unknown partitioning). Any other frame keeps its partitioning (see the module docstring for
     why this is not a general rule)."""
     if _one_partition(df):
         df = df.coalesce(1)
     served = df.persist(StorageLevel.MEMORY_AND_DISK)
     _DOMAINS[served] = None
+    _ROLLUPS[served] = None
     return served
 
 
@@ -91,35 +119,117 @@ def _one_partition(df: DataFrame) -> bool:
     return plan.execute().getNumPartitions() == 1
 
 
-# Widget aggregations A3-A10 (/root/reference/streamlit_app.py:82-147).
+@dataclass(frozen=True)
+class _Rollup:
+    """One view's grouping-sets result: the rows of each kept set (its
+    keys, then the measure) and the type of every output column."""
+
+    spark: SparkSession
+    sets: dict[tuple[str, ...], list[tuple]]
+    types: dict[str, DataType]
+
+    def frame(
+        self, keys: Sequence[str], rows: list[tuple], measures: Sequence[str] = (MEASURE,)
+    ) -> DataFrame:
+        """rows as a local frame: the key columns typed as in the rollup,
+        then one measure-typed column per name in measures. Built from an
+        Arrow table, so Spark plans a LocalRelation and its collect runs
+        no job (a Python list would be parallelized and collected by one)."""
+        schema = StructType(
+            [StructField(k, self.types[k]) for k in keys]
+            + [StructField(m, self.types[MEASURE]) for m in measures]
+        )
+        table = pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+        )
+        return self.spark.createDataFrame(table, schema)
+
+
+def _rollup(df: DataFrame, *needed: tuple[str, ...]) -> _Rollup:
+    """The measure summed over every _ROLLUP_SETS entry whose columns df
+    has, as one aggregate collected once. Rows are split by grouping_id,
+    so a NULL key of the data stays apart from a rolled-up one. Kept for
+    a served frame and the views filtered from it; any other frame is
+    aggregated on every call. A `needed` set whose columns df lacks
+    raises AnalysisException before anything runs."""
+    for keys in needed:
+        if not set(keys) <= set(df.columns):
+            df.select(*keys)  # raises AnalysisException naming the missing column
+    cached = _ROLLUPS.get(df)
+    if cached is not None:
+        return cached
+    sets = [s for s in _ROLLUP_SETS if set(s) <= set(df.columns)]
+    keys = [k for k in _ROLLUP_KEYS if any(k in s for s in sets)]
+    rows: dict[tuple[str, ...], list[tuple]] = {s: [] for s in sets}
+    types: dict[str, DataType] = {}
+    if sets:
+        agg = df.groupingSets([list(s) for s in sets], *keys).agg(
+            F.sum(MEASURE).alias(MEASURE), F.grouping_id().alias("_gid")
+        )
+        types = {f.name: f.dataType for f in agg.schema}
+        # grouping_id has bit (len(keys) - 1 - i) set when keys[i] is rolled up.
+        by_gid = {
+            sum(1 << (len(keys) - 1 - i) for i, k in enumerate(keys) if k not in s): s
+            for s in sets
+        }
+        for row in agg.collect():
+            s = by_gid[row["_gid"]]
+            rows[s].append((*(row[k] for k in s), row[MEASURE]))
+    out = _Rollup(df.sparkSession, rows, types)
+    if df in _ROLLUPS:
+        _ROLLUPS[df] = out
+    return out
+
+
+def _order(v) -> tuple:
+    """A value's place in Spark's ascending order: NULL first, NaN above
+    every number."""
+    if v is None:
+        return (0, 0)
+    if isinstance(v, float) and math.isnan(v):
+        return (2, 0)
+    return (1, v)
+
+
+# Widgets A3-A10 (the reference's streamlit_app.py:82-147), each a slice
+# of the view's rollup.
 
 
 def state_bar(df: DataFrame) -> DataFrame:
     """A6 — total measure by state."""
-    return df.groupBy("state").agg(F.sum(MEASURE).alias(MEASURE))
+    r = _rollup(df, ("state",))
+    return r.frame(["state"], r.sets[("state",)])
 
 
 def year_trend(df: DataFrame) -> DataFrame:
     """A7 — year × state trend lines."""
-    return df.groupBy("year", "state").agg(F.sum(MEASURE).alias(MEASURE))
+    r = _rollup(df, ("year", "state"))
+    return r.frame(["year", "state"], r.sets[("year", "state")])
 
 
 def category_top10(df: DataFrame) -> DataFrame:
-    """A8 + O3 — top-10 categories pie input."""
-    agg = df.groupBy("category").agg(F.sum(MEASURE).alias(MEASURE))
-    return top_k(agg, MEASURE, 10, tiebreak=["category"])
+    """A8 + O3 — top-10 categories pie input: measure descending (NULL
+    last), ties by category ascending (NULL first)."""
+    r = _rollup(df, ("category",))
+    by_category = sorted(r.sets[("category",)], key=lambda row: _order(row[0]))
+    top = sorted(by_category, key=lambda row: _order(row[1]), reverse=True)[:10]
+    return r.frame(["category"], top)
 
 
 def category_state_heatmap(df: DataFrame) -> DataFrame:
-    """A9 + R2 — category × state matrix with the fixed state domain."""
-    return pivot_sum(df, "category", "state", STATE_CODES, MEASURE)
+    """A9 + R2 — category × state matrix over the fixed state domain: one
+    row per category, NULL where it has no rows in a state."""
+    r = _rollup(df, ("category",), ("category", "state"))
+    cells = {(c, s): v for c, s, v in r.sets[("category", "state")]}
+    rows = [(c, *(cells.get((c, s)) for s in STATE_CODES)) for c, _ in r.sets[("category",)]]
+    return r.frame(["category"], rows, STATE_CODES)
 
 
 def treemap(df: DataFrame) -> DataFrame:
     """A10 — two-level category / principal_diagnosis rollup."""
-    return df.groupBy("category", "principal_diagnosis").agg(
-        F.sum(MEASURE).alias(MEASURE)
-    )
+    keys = ("category", "principal_diagnosis")
+    r = _rollup(df, keys)
+    return r.frame(keys, r.sets[keys])
 
 
 @dataclass(frozen=True)
@@ -154,44 +264,37 @@ class Insights:
 
 
 def generate_insights(df: DataFrame) -> Insights | None:
-    """The insight generator (/root/reference/streamlit_app.py:78-104):
+    """The insight generator (the reference's streamlit_app.py:78-104):
     top state and top category (W2, ties to the larger key, a NULL key
     competing like any other) and the first→last year pct change (W1),
-    all from ONE aggregate collected once. An empty frame (F10) gives
-    None; a single year or a zero first-year total gives no pct change.
-
-    The frame is summed once by (state, year, category) and coalesced to
-    one partition; a window per key adds that key's total to each row,
-    and one global aggregate takes the argmaxes and the year trend. Every
-    step after the first sum needs only what one partition already has,
-    so on a served one-partition frame this is one Spark job, and on any
-    other frame the first sum is its one shuffle."""
-    keys = ["state", "year", *(["category"] if "category" in df.columns else [])]
-    sums = df.groupBy(*keys).agg(F.sum(MEASURE).alias("total")).coalesce(1)
-    totals = sums.select(
-        *keys, *[F.sum("total").over(Window.partitionBy(k)).alias(f"t_{k}") for k in keys]
-    )
-
-    def argmax(key: str) -> Column:
-        return F.max(F.struct(F.col(f"t_{key}").alias("m"), F.col(key).alias("k"))).alias(key)
-
-    year = F.col("year")
-    first_v, last_v = F.min_by("t_year", year), F.max_by("t_year", year)
-    row = totals.agg(
-        argmax("state"),
-        argmax("category") if "category" in keys else F.lit(None).alias("category"),
-        F.min(year).alias("first_year"),
-        F.max(year).alias("last_year"),
-        F.round(F.try_divide(last_v - first_v, first_v) * 100, 4).alias("pct_change"),
-    ).first()
-    if row["state"] is None:
+    read from the view's rollup with no further Spark job. An empty frame
+    (F10) gives None; a single year or a zero first-year total gives no
+    pct change."""
+    r = _rollup(df, ("state",), ("year",))
+    if not r.sets[("state",)]:
         return None
-    state_total, state = row["state"]
-    category_total, category = row["category"] or (None, None)
-    trend = [row["first_year"], row["last_year"], row["pct_change"]]
-    if row["first_year"] == row["last_year"]:
-        trend = [None] * 3
-    return Insights(state, state_total, category, category_total, *trend)
+
+    def argmax(rows: list[tuple]) -> tuple:
+        return max(rows, key=lambda row: (_order(row[1]), _order(row[0])))
+
+    category = argmax(r.sets[("category",)]) if ("category",) in r.sets else (None, None)
+    years = sorted((y, v) for y, v in r.sets[("year",)] if y is not None)
+    trend = [None] * 3
+    if len(years) > 1:
+        (first, first_v), (last, last_v) = years[0], years[-1]
+        pct = None
+        if first_v and last_v is not None:
+            pct = _round_half_up((last_v - first_v) / first_v * 100, 4)
+        trend = [first, last, pct]
+    return Insights(*argmax(r.sets[("state",)]), *category, *trend)
+
+
+def _round_half_up(x: float, places: int) -> float:
+    """Spark's round on a double: half up on the shortest decimal form of
+    x, so 12.34565 gives 12.3457 where Python's round gives 12.3456."""
+    if not math.isfinite(x):
+        return x
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-places), ROUND_HALF_UP))
 
 
 def _domains_one_pass(
@@ -297,7 +400,12 @@ def interactive_filter(df: DataFrame, selections: dict[str, list]) -> DataFrame:
         values = F.lit(list(sel)).cast(f"array<{types[col]}>")
         p = F.array_contains(values, F.col(col))
         pred = p if pred is None else (pred & p)
-    return df.where(pred) if pred is not None else df
+    if pred is None:
+        return df
+    view = df.where(pred)
+    if df in _ROLLUPS:
+        _ROLLUPS[view] = None
+    return view
 
 
 def filter_domains(df: DataFrame) -> dict[str, list]:
@@ -349,18 +457,19 @@ def profile(df: DataFrame) -> DataFrame:
     total = row["__total"]
     spark = df.sparkSession
     out = []
+    values = row.asDict()
     for name, dtype in df.dtypes:
-        cnt = row[f"{name}__cnt"]
+        cnt = values[f"{name}__cnt"]
         out.append(
             (
                 name,
                 dtype,
                 cnt,
                 total - cnt,
-                row[f"{name}__dist"],
-                row.asDict().get(f"{name}__min"),
-                row.asDict().get(f"{name}__max"),
-                row.asDict().get(f"{name}__mean"),
+                values[f"{name}__dist"],
+                values.get(f"{name}__min"),
+                values.get(f"{name}__max"),
+                values.get(f"{name}__mean"),
             )
         )
     return spark.createDataFrame(
