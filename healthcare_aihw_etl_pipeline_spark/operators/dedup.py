@@ -1,17 +1,24 @@
 """Deduplication operators for training-data pipelines (driver mandate,
 BASELINE.json north_star: exact, MinHash+LSH, SimHash, n-gram Jaccard).
 
-Everything is Catalyst higher-order-function expressions over token/
-shingle arrays — no Python UDFs — so dedup runs at whole-stage-codegen
-speed and scales as ordinary shuffles:
+Signatures and banding are Catalyst higher-order-function expressions
+over token/shingle arrays, except the xxhash64 MinHash forms' permutation
+minima, which run in one Arrow-batched pandas UDF (`_perm_min_udf`). Dedup
+scales as ordinary shuffles:
 
 - exact:    one shuffle on a 16-byte hash key, map-side partial agg.
 - MinHash:  per-row signature (narrow) → explode bands (narrow, ×B) →
-            one shuffle on (band, band_hash) → per-bucket min-id.
+            one shuffle on (band, band_key) → per-bucket min-id.
 - SimHash:  per-row 64-bit signature (narrow) → band on 16-bit chunks →
             same shuffle shape.
 - Jaccard:  exact verification on candidate pairs only (the LSH bucket
             join bounds the pair count; never all-pairs).
+
+Each xxhash64 operator has an md5 "portable" twin whose every step
+replays in DuckDB. A twin pair differs only in its head — signature and
+band-key expressions — and shares the rest: `_rows_per_band` (band-count
+check), `_explode_bands`, `_star_dup_of` (bucket-min join-back) and
+`_verified_dup_of` (candidate pairs, exact-Jaccard verify, linking).
 
 Keep-policy: "star" dedup — a row is a duplicate if it shares any bucket
 with a smaller id. This is the standard single-pass approximation of
@@ -28,7 +35,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from healthcare_aihw_etl_pipeline_spark.operators.gates import collect_at_most
+from healthcare_aihw_etl_pipeline_spark.operators.gates import at_most, collect_at_most
 
 # Mersenne prime 2^31 - 1: modulus for the universal-hash permutations.
 # Chosen so a*h + b stays below 2^62 (a, h < 2^31) — no long overflow even
@@ -173,24 +180,123 @@ def minhash_signature_vectorized(
     return _perm_min_udf(num_hashes, seed)(base)
 
 
-def minhash_bands(sig_col: Column, bands: int, rows_per_band: int) -> Column:
-    """Band the signature: array of (band_idx, band_hash) structs."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.element_at(sig_col, b * rows_per_band + r + 1).cast("string")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                ).alias("band_hash"),
+def _rows_per_band(num_hashes: int, bands: int) -> int:
+    """Signature entries per LSH band; a ragged split is refused."""
+    if num_hashes % bands != 0:
+        raise ValueError(
+            f"num_hashes ({num_hashes}) must be divisible by bands "
+            f"({bands}): a ragged split would silently drop the "
+            "trailing minhash functions and weaken the LSH guarantee"
+        )
+    return num_hashes // bands
+
+
+def _xxhash_band_keys(sig: Column, bands: int, rows_per_band: int) -> list[Column]:
+    """One key per band of a long signature: xxhash64 of the band's
+    comma-joined entries."""
+    return [
+        F.xxhash64(
+            F.concat_ws(
+                ",",
+                *[
+                    F.element_at(sig, b * rows_per_band + r + 1).cast("string")
+                    for r in range(rows_per_band)
+                ],
             )
-            for b in range(bands)
-        ]
+        )
+        for b in range(bands)
+    ]
+
+
+def _md5_minwise_signature(shingles: Column, num_hashes: int) -> Column:
+    """num_hashes independent md5 minwise functions over a shingle
+    array: sig_i = lexicographic min over shingles of
+    md5(i || ':' || shingle) — the textbook minwise family, identical in
+    any engine with md5. The array is let-bound, so it is built once
+    per row, not once per function."""
+    from healthcare_aihw_etl_pipeline_spark.functions.scalar import bind
+
+    def _minwise(prefix: Column):
+        # MUST be a one-parameter lambda: F.transform binds a second
+        # parameter to the ELEMENT INDEX, so a `lambda s, p=prefix`
+        # default would be silently overwritten by the index column.
+        return lambda s: F.md5(F.concat(prefix, s))
+
+    return bind(
+        shingles,
+        lambda sh: F.array(
+            *[
+                F.array_min(F.transform(sh, _minwise(F.lit(f"{i}:"))))
+                for i in range(num_hashes)
+            ]
+        ),
+    )
+
+
+def _md5_band_keys(sig: Column, bands: int, rows_per_band: int) -> list[Column]:
+    """One key per band of a hex-string signature: md5 of the band's
+    comma-joined slice (DuckDB replays it as ``md5(array_to_string(
+    sig[lo : hi], ','))``)."""
+    return [
+        F.md5(F.array_join(F.slice(sig, b * rows_per_band + 1, rows_per_band), ","))
+        for b in range(bands)
+    ]
+
+
+def _bit_band_keys(sig: str, width: int, n: int) -> list[Column]:
+    """``n`` consecutive ``width``-bit chunks of a long signature column,
+    low bits first: the SimHash bands."""
+    mask = F.lit((1 << width) - 1).cast("long")
+    return [
+        F.shiftrightunsigned(F.col(sig), width * b).bitwiseAND(mask)
+        for b in range(n)
+    ]
+
+
+def _explode_bands(df: DataFrame, keep: list[str], keys: list[Column]) -> DataFrame:
+    """One row per (row of ``df``, band): the ``keep`` columns plus
+    ``band`` (the band index) and ``band_key`` (that band's key)."""
+    return df.select(
+        *keep,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(b).alias("band"), k.alias("band_key"))
+                    for b, k in enumerate(keys)
+                ]
+            )
+        ).alias("bb"),
+    ).select(*keep, "bb.band", "bb.band_key")
+
+
+def _star_dup_of(banded: DataFrame, id_col: str, *carry: str) -> DataFrame:
+    """Star keep-policy over a banded relation: dup_of = the smallest id
+    sharing any (band, band_key) bucket. Returns (id_col, *carry,
+    dup_of), each carried column taken from any of the row's bands.
+
+    Per-bucket min via groupBy + join-back, NOT a window: a hot bucket
+    (thousands of identical boilerplate docs — the common case in web
+    data) would land whole on ONE window task with no partial
+    aggregation. groupBy(min) combines map-side, and the join back is an
+    equi join AQE can skew-split. `banded` feeds both branches, so
+    materialize it once (integer or hash columns only — the cheapest
+    point; re-deriving it would run the signature twice).
+    localCheckpoint rather than persist: checkpoint blocks are
+    reference-tracked and freed when the result goes out of scope, so
+    repeated calls in a long-lived session don't accumulate cached
+    blocks (persist entries live in the CacheManager until an explicit
+    unpersist, which this lazy API can't issue)."""
+    banded = banded.localCheckpoint(eager=True)
+    bucket_mins = banded.groupBy("band", "band_key").agg(
+        F.min(id_col).alias("bucket_min")
+    )
+    return (
+        banded.join(bucket_mins, ["band", "band_key"])
+        .groupBy(id_col)
+        .agg(
+            *[F.first(c).alias(c) for c in carry],
+            F.min("bucket_min").alias("dup_of"),
+        )
     )
 
 
@@ -209,50 +315,20 @@ def minhash_dedup(
     Returns (id_col, dup_of): one row per input, where dup_of is the
     smallest id sharing any LSH band bucket (dup_of = id for uniques /
     cluster representatives). Shuffle cost: bands × |df| rows of
-    (band, band_hash, id) — integers only, no text moves.
+    (band, band_key, id) — integers only, no text moves.
     """
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands "
-            f"({bands}): a ragged split would silently drop the "
-            "trailing minhash functions and weaken the LSH guarantee"
-        )
-    rows_per_band = num_hashes // bands
+    rows_per_band = _rows_per_band(num_hashes, bands)
     # token_shingle_hashes: integer rolling-window shingles — no string
     # construction, xxhash64 stays JVM-side. The permutation minima run in
     # the Arrow-batched twin (bit-identical to the expression fold).
     shingles = token_shingle_hashes(F.col(text_col), shingle_k)
     sig = minhash_signature_vectorized(shingles, num_hashes, seed)
-    # Materialize the signature as a named column FIRST: minhash_bands
-    # references it 32× via element_at, and handing it the raw expression
-    # would re-embed (and re-evaluate) the whole computation per reference.
+    # Materialize the signature as a named column FIRST: the band keys
+    # reference it 32× via element_at, and handing them the raw
+    # expression would re-embed (and re-evaluate) it per reference.
     with_sig = df.select(F.col(id_col), sig.alias("_sig"))
-    banded = with_sig.select(
-        F.col(id_col),
-        F.explode(minhash_bands(F.col("_sig"), bands, rows_per_band)).alias("bb"),
-    ).select(id_col, "bb.band", "bb.band_hash")
-
-    # Per-bucket min via groupBy + join-back, NOT a window: a hot bucket
-    # (thousands of identical boilerplate docs — the common case in web
-    # data) would land whole on ONE window task with no partial
-    # aggregation. groupBy(min) combines map-side, and the join back is an
-    # equi join AQE can skew-split. `banded` feeds both branches, so
-    # materialize it once (3 integer columns — the cheapest point;
-    # re-deriving it would run the signature twice). localCheckpoint
-    # rather than persist: checkpoint blocks are reference-tracked and
-    # freed when the result goes out of scope, so repeated calls in a
-    # long-lived session don't accumulate cached blocks (persist entries
-    # live in the CacheManager until an explicit unpersist, which this
-    # lazy API can't issue).
-    banded = banded.localCheckpoint(eager=True)
-    bucket_mins = banded.groupBy("band", "band_hash").agg(
-        F.min(id_col).alias("bucket_min")
-    )
-    return (
-        banded.join(bucket_mins, ["band", "band_hash"])
-        .groupBy(id_col)
-        .agg(F.min("bucket_min").alias("dup_of"))
-    )
+    keys = _xxhash_band_keys(F.col("_sig"), bands, rows_per_band)
+    return _star_dup_of(_explode_bands(with_sig, [id_col], keys), id_col)
 
 
 def minhash_dedup_portable(
@@ -270,134 +346,120 @@ def minhash_dedup_portable(
 
     Instead of xxhash64 + affine permutations (minhash_dedup — the
     faster JVM path), each of the ``num_hashes`` minwise functions is an
-    INDEPENDENT md5: sig_i(doc) = min over shingles of
-    md5(i || ':' || shingle), a lexicographic min of hex strings — the
-    textbook minwise family, identical in any engine with md5. Bands
-    hash the concatenated signature slice with md5 again. ~2x the hash
-    cost of the xxhash64 path for full cross-engine verifiability; the
-    shuffle shape is IDENTICAL (explode bands -> groupBy bucket min ->
-    join back, map-side combined, AQE-skew-splittable — never a window).
+    INDEPENDENT md5 (:func:`_md5_minwise_signature`). Bands hash the
+    concatenated signature slice with md5 again. ~2x the hash cost of
+    the xxhash64 path for full cross-engine verifiability; the banding
+    and bucket-min code is the fast path's own (:func:`_explode_bands`,
+    :func:`_star_dup_of`), so the shuffle shape is the same.
 
     Returns (id_col, dup_of) like :func:`minhash_dedup`.
     """
-    from healthcare_aihw_etl_pipeline_spark.functions.scalar import bind
-
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands "
-            f"({bands}): a ragged split would silently drop the "
-            "trailing minhash functions and weaken the LSH guarantee"
-        )
-    rows_per_band = num_hashes // bands
+    rows_per_band = _rows_per_band(num_hashes, bands)
     shingles = word_shingles(F.col(text_col), shingle_k)
-
-    def _minwise(prefix: Column):
-        # MUST be a one-parameter lambda: F.transform binds a second
-        # parameter to the ELEMENT INDEX, so a `lambda s, p=prefix`
-        # default would be silently overwritten by the index column.
-        return lambda s: F.md5(F.concat(prefix, s))
-
-    def signature(sh: Column) -> Column:
-        return F.array(
-            *[
-                F.array_min(F.transform(sh, _minwise(F.lit(f"{i}:"))))
-                for i in range(num_hashes)
-            ]
-        )
-
     with_sig = df.select(
-        F.col(id_col), bind(shingles, signature).alias("_sig")
+        F.col(id_col), _md5_minwise_signature(shingles, num_hashes).alias("_sig")
     )
-    banded = with_sig.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(
-                            F.array_join(
-                                F.slice(
-                                    F.col("_sig"),
-                                    b * rows_per_band + 1,
-                                    rows_per_band,
-                                ),
-                                ",",
-                            )
-                        ).alias("band_hash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.band_hash")
-    banded = banded.localCheckpoint(eager=True)
-    bucket_mins = banded.groupBy("band", "band_hash").agg(
-        F.min(id_col).alias("bucket_min")
-    )
-    return (
-        banded.join(bucket_mins, ["band", "band_hash"])
-        .groupBy(id_col)
-        .agg(F.min("bucket_min").alias("dup_of"))
-    )
+    keys = _md5_band_keys(F.col("_sig"), bands, rows_per_band)
+    return _star_dup_of(_explode_bands(with_sig, [id_col], keys), id_col)
 
 
-def _band_candidates(rep_bands: DataFrame) -> DataFrame:
-    """Distinct in-bucket representative pairs (ia < ib) from the band
-    relation — the quadratic-in-bucket work of the verified MinHash
-    forms, run ONCE and checkpointed: both the candidate-id set (for
-    the gram semi-join) and the verify stage derive from this single
-    relation, instead of each side re-running the band self-join."""
-    other = rep_bands.select(
-        "band", "band_hash", F.col("rep").alias("rep2")
-    )
-    return (
-        rep_bands.join(other, ["band", "band_hash"])
-        .where(F.col("rep") < F.col("rep2"))
-        .select(F.col("rep").alias("ia"), F.col("rep2").alias("ib"))
-        .distinct()
-        # feeds the id-set derivation AND the intersection join
-        .localCheckpoint(eager=True)
-    )
+# Semi-join the corpus down to its exact-hash representatives before the
+# md5 signature pass only while the broadcast rep-id set stays this small.
+_REP_SEMIJOIN_MAX_REPS = 4_000_000
 
 
-def _candidate_ids(cand: DataFrame, id_col: str) -> DataFrame:
-    """The distinct doc ids appearing in any candidate pair — derived
-    from the already-checkpointed pair relation (no second band
-    self-join)."""
-    return (
-        cand.select(F.col("ia").alias(id_col))
-        .unionByName(cand.select(F.col("ib").alias(id_col)))
-        .distinct()
-    )
-
-
-def _verify_and_link(
+def _rep_sig_source(
+    src: DataFrame,
     ids: DataFrame,
     reps: DataFrame,
-    cand: DataFrame,
-    cand_grams: DataFrame,
+    id_col: str,
+) -> DataFrame:
+    """The documents whose (expensive) LSH signature is actually
+    needed: the exact-hash group REPRESENTATIVES. When at least half
+    the corpus is exact duplicates and the rep set is broadcastable,
+    filter `src` down by a broadcast semi-join BEFORE the signature
+    pass — on the 10x/100x-replicated bench layouts (and real web
+    corpora, which run 30-60% exact dups) this skips the signature work
+    for every member, the dominant cost (measured 37.5 s -> ~5 s at the
+    5M-doc layout for the portable form, whose DuckDB oracle collapses
+    first for the same reason). Otherwise signatures compute for all
+    docs (row-local, zero shuffle) and the non-rep rows simply drop in
+    the rep join — the right trade when most docs ARE reps, where a
+    semi-join would shuffle the text corpus to save nothing. Both
+    paths produce identical output (a member's signature equals its
+    rep's)."""
+    n_docs = ids.count()
+    n_reps = reps.count()
+    if at_most(n_reps * 2, n_docs) and at_most(n_reps, _REP_SEMIJOIN_MAX_REPS):
+        return src.join(
+            F.broadcast(reps.select(F.col("rep").alias(id_col))),
+            id_col,
+            "left_semi",
+        )
+    return src
+
+
+def _verified_dup_of(
+    df: DataFrame,
+    ids: DataFrame,
+    reps: DataFrame,
+    rep_sig: DataFrame,
+    keys: list[Column],
+    grams: Column,
     id_col: str,
     *,
     threshold_num: int,
     threshold_den: int,
 ) -> DataFrame:
-    """Shared candidate→VERIFY→link core of the verified MinHash forms.
+    """Shared band→pair→VERIFY→link tail of the verified MinHash forms.
 
-    ids        : (id_col, _hx)           — every doc with its exact hash
-    reps       : (_hx, rep)              — exact-hash group representative
-    cand       : (ia, ib)                — distinct in-bucket rep pairs
-                 (ia < ib), from :func:`_band_candidates`
-    cand_grams : (id_col, gram)          — DISTINCT grams, at least for
-                 every rep that appears in a candidate pair
+    ids     : (id_col, _hx, ...)  — every doc with its exact hash,
+              checkpointed
+    reps    : (_hx, rep, ...)     — exact-hash group representative
+    rep_sig : (rep, _sig, ...)    — each representative's signature;
+              ``keys`` are its band keys over ``_sig``
+    grams   : the gram-array expression over ``df``'s text column
 
-    Each candidate pair is VERIFIED by exact set Jaccard over the gram
-    relation (inter via a candidate-bounded equi join, union by
-    inclusion-exclusion, the threshold as an exact integer
-    cross-multiplication — no floats, so the decision replays
-    bit-for-bit in any engine). dup_of(rep) = the smallest VERIFIED
-    partner (self when none); members inherit their rep's dup_of.
+    1. BAND the representatives (checkpointed: the band relation feeds
+       both sides of the pairing self-join);
+    2. pair DISTINCT in-bucket representatives (ia < ib, deduped across
+       bands — one verify per unordered pair), checkpointed once: both
+       the candidate-id set and the verify read it, so the quadratic
+       in-bucket pairing runs once;
+    3. re-derive grams only for candidate ids, by semi-joining the
+       corpus against the banding-bounded candidate set (AQE broadcasts
+       it when small) — never a corpus-wide gram materialization;
+    4. VERIFY each pair by exact set Jaccard over the gram relation
+       (inter via a candidate-bounded equi join, union by
+       inclusion-exclusion, the threshold as an exact integer
+       cross-multiplication — no floats, so the decision replays
+       bit-for-bit in any engine);
+    5. dup_of(rep) = the smallest VERIFIED partner (self when none);
+       members inherit their rep's dup_of.
     Returns (id_col, dup_of)."""
+    from healthcare_aihw_etl_pipeline_spark.operators.layout import (
+        ensure_min_splits,
+    )
+
+    rep_bands = _explode_bands(rep_sig, ["rep"], keys).localCheckpoint(eager=True)
+    other = rep_bands.select("band", "band_key", F.col("rep").alias("rep2"))
+    cand = (
+        rep_bands.join(other, ["band", "band_key"])
+        .where(F.col("rep") < F.col("rep2"))
+        .select(F.col("rep").alias("ia"), F.col("rep2").alias("ib"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    cand_ids = (
+        cand.select(F.col("ia").alias(id_col))
+        .unionByName(cand.select(F.col("ib").alias(id_col)))
+        .distinct()
+    )
+    cand_grams = (
+        ensure_min_splits(df)
+        .join(cand_ids, id_col, "left_semi")
+        .select(F.col(id_col), F.explode(grams).alias("gram"))
+    )
     ga = cand_grams.select(F.col(id_col).alias("ia"), "gram")
     gb = cand_grams.select(F.col(id_col).alias("ib"), "gram")
     sizes = cand_grams.groupBy(id_col).agg(
@@ -416,49 +478,19 @@ def _verify_and_link(
         .join(zb, "ib")
         .where(
             F.col("ni") * F.lit(threshold_den)
-            >= F.lit(threshold_num)
-            * (F.col("na") + F.col("nb") - F.col("ni"))
+            >= F.lit(threshold_num) * (F.col("na") + F.col("nb") - F.col("ni"))
         )
         .select("ia", "ib")
     )
     linked = verified.groupBy(F.col("ib").alias("rep")).agg(
         F.min("ia").alias("dup_min")
     )
-    dup_rep = reps.join(linked, "rep", "left").select(
-        "_hx", F.coalesce(F.col("dup_min"), F.col("rep")).alias("dup_of")
+    dup_rep = (
+        reps.select("_hx", "rep")
+        .join(linked, "rep", "left")
+        .select("_hx", F.coalesce(F.col("dup_min"), F.col("rep")).alias("dup_of"))
     )
-    return ids.join(dup_rep, "_hx").select(id_col, "dup_of")
-
-
-def _rep_sig_source(
-    src: DataFrame,
-    ids: DataFrame,
-    reps: DataFrame,
-    id_col: str,
-) -> DataFrame:
-    """The documents whose (expensive) LSH signature is actually
-    needed: the exact-hash group REPRESENTATIVES. When the corpus is
-    duplicate-heavy and the rep set is broadcastable, filter `src`
-    down by a broadcast semi-join BEFORE the signature pass — on the
-    10x/100x-replicated bench layouts (and real web corpora, which
-    run 30-60% exact dups) this skips the signature work for every
-    member, the dominant cost (measured 37.5 s -> ~5 s at the 5M-doc
-    layout for the portable form, whose DuckDB oracle collapses first
-    for the same reason). Otherwise signatures compute for all docs
-    (row-local, zero shuffle) and the non-rep rows simply drop in the
-    rep join — the right trade when most docs ARE reps, where a
-    semi-join would shuffle the text corpus to save nothing. Both
-    paths produce identical output (a member's signature equals its
-    rep's)."""
-    n_docs = ids.count()
-    n_reps = reps.count()
-    if n_reps * 2 <= n_docs and n_reps <= 4_000_000:
-        return src.join(
-            F.broadcast(reps.select(F.col("rep").alias(id_col))),
-            id_col,
-            "left_semi",
-        )
-    return src
+    return ids.select(id_col, "_hx").join(dup_rep, "_hx").select(id_col, "dup_of")
 
 
 def minhash_dedup_verified(
@@ -477,55 +509,34 @@ def minhash_dedup_verified(
     discipline (the wide-SimHash lesson, simhash_wide_dedup): banding
     proposes, exact n-gram Jaccard disposes.
 
-    PLANTED_TRUTH_r14 measured the unverified banding's pair precision
-    collapsing 0.96 → 0.12 → 0.0014 as unique-token noise grows 1k →
-    1M → 10M docs (recall 1.0): "shared an LSH bucket" is a superset
-    of "actually similar", and the superset is almost all noise at web
-    scale. Here dup_of links only pairs whose exact shingle-set
-    Jaccard >= threshold_num/threshold_den:
+    The `pairs` rung of `scripts/planted_truth.py` measured the
+    unverified banding's pair precision on its planted Jaccard corpus
+    falling 0.96 → 0.12 → 0.0014 as unique-token noise grows 1k → 1M →
+    10M docs (recall 1.0), against 1.0 at every scale for this form:
+    "shared an LSH bucket" is a superset of "actually similar", and the
+    superset is almost all noise at web scale. Here dup_of
+    links only pairs whose exact shingle-set Jaccard >=
+    threshold_num/threshold_den.
 
-    1. COLLAPSE byte-identical docs to their min-id representative
-       (one groupBy on xxhash64(text)) — the hub case costs one
-       aggregate, never a pairwise blowup, and exact dups skip the
-       verify entirely (Jaccard 1.0 by construction);
-    2. BAND the representatives' signatures (the minhash_dedup
-       machinery: integer rolling shingles, Arrow-batched permutation
-       minima, xxhash64 band hashes);
-    3. pair DISTINCT in-bucket representatives (ia < ib, deduped
-       across bands — one verify per unordered pair);
-    4. VERIFY by exact Jaccard over the int64 gram sets, computed
-       relationally (gram-equality equi join, candidate-bounded — the
-       jaccard_verify contract: only candidate pairs pay the set
-       math) with the threshold as an exact integer
-       cross-multiplication;
-    5. dup_of = smallest verified partner; members inherit their
-       representative's dup_of.
-
-    The gram relation is re-derived from the (small) candidate id set
-    via a semi-join rather than materialized corpus-wide — at 100 TB
-    the candidate set is banding-bounded while the full gram stream is
-    token-stream-sized. Returns (id_col, dup_of) like
-    :func:`minhash_dedup`."""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands "
-            f"({bands}): a ragged split would silently drop the "
-            "trailing minhash functions and weaken the LSH guarantee"
-        )
+    This head COLLAPSES byte-identical docs to their min-id
+    representative (one groupBy on xxhash64(text)) — the hub case costs
+    one aggregate, never a pairwise blowup, and exact dups skip the
+    verify entirely (Jaccard 1.0 by construction). ONE corpus pass
+    computes the exact hash and the signature together (integer
+    rolling shingles, Arrow-batched permutation minima): collapsing
+    first (the portable form's :func:`_rep_sig_source`) does NOT pay
+    here — the extra scan + rep join measured SLOWER than the wasted
+    member signatures at the 10x-replicated layout. Banding, pairing,
+    verify and linking are :func:`_verified_dup_of`, over the int64
+    gram sets. Returns (id_col, dup_of) like :func:`minhash_dedup`."""
     from healthcare_aihw_etl_pipeline_spark.operators.layout import (
         ensure_min_splits,
     )
 
-    rows_per_band = num_hashes // bands
+    rows_per_band = _rows_per_band(num_hashes, bands)
     src = ensure_min_splits(df).select(id_col, text_col)
     shingles = token_shingle_hashes(F.col(text_col), shingle_k)
     sig = minhash_signature_vectorized(shingles, num_hashes, seed)
-    # ONE corpus pass computes exact-hash + signature together: the
-    # xxhash64/Arrow signature is cheap enough that collapsing first
-    # (the portable form's _rep_sig_source path, right there where
-    # every minwise function is an md5) does NOT pay — the extra scan
-    # + rep join measured SLOWER than the wasted member signatures at
-    # the 10x-replicated layout.
     ids = src.select(
         F.col(id_col),
         F.xxhash64(F.col(text_col)).alias("_hx"),
@@ -537,62 +548,16 @@ def minhash_dedup_verified(
         # choice deterministic anyway
         F.min_by("_sig", F.col(id_col)).alias("_sig"),
     )
-    rep_bands = (
-        reps.select(
-            "rep",
-            F.explode(
-                minhash_bands(F.col("_sig"), bands, rows_per_band)
-            ).alias("bb"),
-        )
-        .select("rep", "bb.band", "bb.band_hash")
-        # the band groupBy feeds both sides of the pairing self-join —
-        # materialize so it runs once, not per join side
-        .localCheckpoint(eager=True)
-    )
-    # ONE band self-join builds the checkpointed (ia < ib) pair
-    # relation; the candidate-id set for the gram semi-join derives
-    # from it (the quadratic in-bucket pairing work runs once, not
-    # twice — the r15 ADVICE fix)
-    cand = _band_candidates(rep_bands)
-    cand_ids = _candidate_ids(cand, id_col)
-    # grams only for candidate ids: semi-join the corpus against the
-    # banding-bounded candidate set (AQE broadcasts it when small)
-    cand_grams = (
-        ensure_min_splits(df)
-        .join(cand_ids, id_col, "left_semi")
-        .select(
-            F.col(id_col),
-            F.explode(
-                token_shingle_hashes(F.col(text_col), shingle_k)
-            ).alias("gram"),
-        )
-    )
-    return _verify_and_link(
-        ids.select(id_col, "_hx"),
-        reps.select("_hx", "rep"),
-        cand,
-        cand_grams,
+    return _verified_dup_of(
+        df,
+        ids,
+        reps,
+        reps,
+        _xxhash_band_keys(F.col("_sig"), bands, rows_per_band),
+        shingles,
         id_col,
         threshold_num=threshold_num,
         threshold_den=threshold_den,
-    )
-
-
-def _md5_minwise_signature(sh: Column, num_hashes: int) -> Column:
-    """num_hashes independent md5 minwise functions over a shingle
-    array (the minhash_dedup_portable family): sig_i = lexicographic
-    min over shingles of md5(i || ':' || shingle)."""
-
-    def _minwise(prefix: Column):
-        # one-parameter lambda: F.transform would bind a second
-        # parameter to the element index (see minhash_dedup_portable)
-        return lambda s: F.md5(F.concat(prefix, s))
-
-    return F.array(
-        *[
-            F.array_min(F.transform(sh, _minwise(F.lit(f"{i}:"))))
-            for i in range(num_hashes)
-        ]
     )
 
 
@@ -613,20 +578,15 @@ def minhash_dedup_verified_portable(
     candidate pairing, the exact-Jaccard verify (integer
     cross-multiplication) and the member inheritance ALL replay
     bit-for-bit in DuckDB — the driver hash-checks the verified
-    operator itself. Same shuffle shape as the fast path; ~2x its hash
-    cost (the portable-sketch trade). Returns (id_col, dup_of)."""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands "
-            f"({bands}): a ragged split would silently drop the "
-            "trailing minhash functions and weaken the LSH guarantee"
-        )
-    from healthcare_aihw_etl_pipeline_spark.functions.scalar import bind
+    operator itself. The head collapses first and signs only what
+    :func:`_rep_sig_source` keeps; the tail is the fast path's own
+    :func:`_verified_dup_of`. ~2x its hash cost (the portable-sketch
+    trade). Returns (id_col, dup_of)."""
     from healthcare_aihw_etl_pipeline_spark.operators.layout import (
         ensure_min_splits,
     )
 
-    rows_per_band = num_hashes // bands
+    rows_per_band = _rows_per_band(num_hashes, bands)
     src = ensure_min_splits(df).select(id_col, text_col)
     shingles = word_shingles(F.col(text_col), shingle_k)
     ids = src.select(
@@ -638,55 +598,15 @@ def minhash_dedup_verified_portable(
     # collapses first for the same reason).
     sigs = _rep_sig_source(src, ids, reps, id_col).select(
         F.col(id_col).alias("rep"),
-        bind(
-            shingles, lambda sh: _md5_minwise_signature(sh, num_hashes)
-        ).alias("_sig"),
+        _md5_minwise_signature(shingles, num_hashes).alias("_sig"),
     )
-    rep_sig = reps.join(sigs, "rep")
-    rep_bands = (
-        rep_sig.select(
-            "rep",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.md5(
-                                F.array_join(
-                                    F.slice(
-                                        F.col("_sig"),
-                                        b * rows_per_band + 1,
-                                        rows_per_band,
-                                    ),
-                                    ",",
-                                )
-                            ).alias("band_hash"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bb"),
-        )
-        .select("rep", "bb.band", "bb.band_hash")
-        .localCheckpoint(eager=True)
-    )
-    cand = _band_candidates(rep_bands)
-    cand_ids = _candidate_ids(cand, id_col)
-    cand_grams = (
-        ensure_min_splits(df)
-        .join(cand_ids, id_col, "left_semi")
-        .select(
-            F.col(id_col),
-            F.explode(word_shingles(F.col(text_col), shingle_k)).alias(
-                "gram"
-            ),
-        )
-    )
-    return _verify_and_link(
-        ids.select(id_col, "_hx"),
-        reps.select("_hx", "rep"),
-        cand,
-        cand_grams,
+    return _verified_dup_of(
+        df,
+        ids,
+        reps,
+        reps.join(sigs, "rep"),
+        _md5_band_keys(F.col("_sig"), bands, rows_per_band),
+        shingles,
         id_col,
         threshold_num=threshold_num,
         threshold_den=threshold_den,
@@ -713,10 +633,11 @@ def simhash_wide_portable(text_col: Column | str) -> Column:
     (`h0` = bits 0..59 from md5 hex chars 1-15 per token, `h1` = bits
     60..119 from hex chars 16-30 — one md5 per token feeds both).
 
-    Motivated by the PLANTED_TRUTH_r14 measurement: the 60-bit
-    signature's 15-bit bands saturate past ~1M docs (every band bucket
-    holds ~n/32768 docs, so band-collision false pairs grow
-    quadratically and pair precision collapses to ~0 at 10M docs).
+    Why 120 bits: the 60-bit signature's 15-bit bands saturate past ~1M
+    docs (every band bucket holds ~n/32768 docs, so band-collision
+    false pairs grow quadratically; the `pairs` rung of
+    `scripts/planted_truth.py` measured its pair precision at ~0
+    against 10M noise docs).
     120 bits buy 30-bit bands (4.3e9 bucket space) AND enough
     signature width for an exact Hamming verify step — see
     :func:`simhash_wide_dedup`. Same integer-only discipline as
@@ -814,38 +735,14 @@ def simhash_dedup(
 ) -> DataFrame:
     """SimHash near-dup via 16-bit banding (4 bands of the 64-bit hash):
     two docs within Hamming distance 3 share at least one intact band
-    (pigeonhole). Returns (id_col, simhash, dup_of)."""
-    sig = simhash64(text_col)
-    with_sig = df.select(F.col(id_col), sig.alias("simhash"))
-    bands = with_sig.select(
-        id_col,
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned(F.col("simhash"), 16 * b)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("band_val"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "simhash", "bb.band", "bb.band_val")
-    # groupBy + join-back instead of a window, for the same hot-bucket
-    # reason as minhash_dedup: map-side combine + AQE-skew-splittable
-    # join. localCheckpoint for GC-scoped block cleanup (see minhash_dedup).
-    bands = bands.localCheckpoint(eager=True)
-    bucket_mins = bands.groupBy("band", "band_val").agg(
-        F.min(id_col).alias("bucket_min")
+    (pigeonhole). Bucket mins use the groupBy/join-back shape of
+    :func:`_star_dup_of` (map-side combine, AQE-skew-splittable join).
+    Returns (id_col, simhash, dup_of)."""
+    with_sig = df.select(F.col(id_col), simhash64(text_col).alias("simhash"))
+    banded = _explode_bands(
+        with_sig, [id_col, "simhash"], _bit_band_keys("simhash", 16, 4)
     )
-    return (
-        bands.join(bucket_mins, ["band", "band_val"])
-        .groupBy(id_col)
-        .agg(F.first("simhash").alias("simhash"), F.min("bucket_min").alias("dup_of"))
-    )
+    return _star_dup_of(banded, id_col, "simhash")
 
 
 def simhash_dedup_portable(
@@ -855,42 +752,16 @@ def simhash_dedup_portable(
 ) -> DataFrame:
     """SimHash near-dup on the PORTABLE 60-bit signature
     (:func:`simhash_portable`): 4 bands of 15 bits — two docs within
-    Hamming distance 3 share an intact band (pigeonhole) — with the
-    same groupBy/join-back bucket shape as :func:`simhash_dedup`.
+    Hamming distance 3 share an intact band (pigeonhole) — through the
+    same banding and bucket-min code as :func:`simhash_dedup`.
     Every step is integer arithmetic on md5-derived values, so the
     full pipeline replays bit-for-bit in DuckDB (the registered query
     carries the oracle). Returns (id_col, simhash, dup_of)."""
-    sig = simhash_portable(text_col)
-    with_sig = df.select(F.col(id_col), sig.alias("simhash"))
-    bands = with_sig.select(
-        id_col,
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned(F.col("simhash"), 15 * b)
-                        .bitwiseAND(F.lit(0x7FFF))
-                        .alias("band_val"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "simhash", "bb.band", "bb.band_val")
-    bands = bands.localCheckpoint(eager=True)
-    bucket_mins = bands.groupBy("band", "band_val").agg(
-        F.min(id_col).alias("bucket_min")
+    with_sig = df.select(F.col(id_col), simhash_portable(text_col).alias("simhash"))
+    banded = _explode_bands(
+        with_sig, [id_col, "simhash"], _bit_band_keys("simhash", 15, 4)
     )
-    return (
-        bands.join(bucket_mins, ["band", "band_val"])
-        .groupBy(id_col)
-        .agg(
-            F.first("simhash").alias("simhash"),
-            F.min("bucket_min").alias("dup_of"),
-        )
-    )
+    return _star_dup_of(banded, id_col, "simhash")
 
 
 def simhash_wide_dedup(
@@ -910,8 +781,8 @@ def simhash_wide_dedup(
        one aggregate, never a pairwise blowup;
     2. BAND the distinct signatures: 4 bands of 30 bits (2^30 bucket
        space per band, so band collisions against noise stop growing
-       quadratically with corpus size — the 15-bit saturation
-       PLANTED_TRUTH_r14 measured at 1M+ docs);
+       quadratically with corpus size — 15-bit bands saturate past
+       ~1M docs, see :func:`simhash_wide_portable`);
     3. VERIFY in-bucket representative pairs by exact Hamming distance
        over the full 120 bits (two XOR + bit_count integer exprs —
        replays in DuckDB); each representative's dup_of is the
@@ -923,10 +794,10 @@ def simhash_wide_dedup(
     superset that over-clusters (the 60-bit form measured pair
     precision ~0 against 1M+ noise docs; this form holds 1.0). Recall:
     Hamming <= 3 is GUARANTEED by the 4-band pigeonhole; 4..8 is
-    probabilistic banding recall, measured on the planted
-    near-identical corpus (PLANTED_TRUTH_r14). In-bucket pairing is
-    quadratic only in DISTINCT signatures per 30-bit bucket (tiny by
-    construction; identical docs collapsed in step 1). Returns
+    probabilistic banding recall, measured by the `pairs` rung of
+    `scripts/planted_truth.py` on its near-identical corpus. In-bucket
+    pairing is quadratic only in DISTINCT signatures per 30-bit bucket
+    (tiny by construction; identical docs collapsed in step 1). Returns
     (id_col, h0, h1, dup_of)."""
     from healthcare_aihw_etl_pipeline_spark.operators.layout import (
         ensure_min_splits,
@@ -947,31 +818,14 @@ def simhash_wide_dedup(
     )
     with_sig = with_sig.localCheckpoint(eager=True)
     reps = with_sig.groupBy("h0", "h1").agg(F.min(id_col).alias("rep"))
-    mask30 = F.lit((1 << 30) - 1).cast("long")
-    bands = reps.select(
-        "rep",
-        "h0",
-        "h1",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned(
-                            F.col("h0" if b < 2 else "h1"),
-                            30 * (b % 2),
-                        )
-                        .bitwiseAND(mask30)
-                        .alias("band_val"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bb"),
-    ).select("rep", "h0", "h1", "bb.band", "bb.band_val")
+    bands = _explode_bands(
+        reps,
+        ["rep", "h0", "h1"],
+        _bit_band_keys("h0", 30, 2) + _bit_band_keys("h1", 30, 2),
+    )
     other = bands.select(
         "band",
-        "band_val",
+        "band_key",
         F.col("rep").alias("rep2"),
         F.col("h0").alias("oh0"),
         F.col("h1").alias("oh1"),
@@ -980,7 +834,7 @@ def simhash_wide_dedup(
         F.col("h0").bitwiseXOR(F.col("oh0"))
     ) + F.bit_count(F.col("h1").bitwiseXOR(F.col("oh1")))
     dup_rep = (
-        bands.join(other, ["band", "band_val"])
+        bands.join(other, ["band", "band_key"])
         .where(hamming <= F.lit(max_hamming))
         .groupBy("rep")
         .agg(F.min("rep2").alias("dup_of"))
@@ -1023,8 +877,9 @@ def jaccard_verify(
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Exact dedup keep-first: returns (id_col, dup_of) via md5 grouping —
-    the hash-groupBy census behind dedup_exact_stats (plans.llm_queries)."""
+    """Exact dedup keep-first: returns (id_col, dup_of) via md5 grouping.
+    No registered query calls it; its only coverage is
+    `tests/test_llm_ops.py::test_exact_dedup_catches_identical`."""
     h = F.md5(F.col(text_col))
     keepers = df.groupBy(h.alias("h")).agg(F.min(id_col).alias("dup_of"))
     return (

@@ -362,6 +362,24 @@ def embedding_near_dup_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top_k(pairs, "cos", 20, tiebreak=["id_a", "id_b"])
 
 
+def top_dup_clusters(dup: DataFrame) -> DataFrame:
+    """The 20 largest clusters of a (doc_id, dup_of) dedup result as
+    (cluster_rep, n_members, n_duplicates), by size descending then
+    cluster_rep — the rollup every top-20 near-dup cluster query and
+    its DuckDB oracle share."""
+    return (
+        dup.groupBy(F.col("dup_of").alias("cluster_rep"))
+        .agg(
+            F.count(F.lit(1)).alias("n_members"),
+            F.sum(
+                (F.col("doc_id") != F.col("dup_of")).cast("long")
+            ).alias("n_duplicates"),
+        )
+        .orderBy(F.col("n_members").desc(), "cluster_rep")
+        .limit(20)
+    )
+
+
 @register(
     "minhash_dup_clusters",
     oracle=None,  # hash-function-specific: property-tested instead
@@ -451,17 +469,7 @@ def minhash_dup_clusters_portable(spark: SparkSession, sf_dir: str) -> DataFrame
 
     docs = load_table(spark, sf_dir, "documents")
     dup = minhash_dedup_portable(docs, "text", "doc_id")
-    return (
-        dup.groupBy(F.col("dup_of").alias("cluster_rep"))
-        .agg(
-            F.count(F.lit(1)).alias("n_members"),
-            F.sum(
-                (F.col("doc_id") != F.col("dup_of")).cast("long")
-            ).alias("n_duplicates"),
-        )
-        .orderBy(F.col("n_members").desc(), "cluster_rep")
-        .limit(20)
-    )
+    return top_dup_clusters(dup)
 
 
 @register(
@@ -537,17 +545,7 @@ def simhash_dup_clusters_portable(spark: SparkSession, sf_dir: str) -> DataFrame
 
     docs = load_table(spark, sf_dir, "documents")
     dup = simhash_dedup_portable(docs, "text", "doc_id")
-    return (
-        dup.groupBy(F.col("dup_of").alias("cluster_rep"))
-        .agg(
-            F.count(F.lit(1)).alias("n_members"),
-            F.sum(
-                (F.col("doc_id") != F.col("dup_of")).cast("long")
-            ).alias("n_duplicates"),
-        )
-        .orderBy(F.col("n_members").desc(), "cluster_rep")
-        .limit(20)
-    )
+    return top_dup_clusters(dup)
 
 
 @register(

@@ -411,21 +411,25 @@ _WIN_W = 4
     "100 TB) to shave a constant factor on a scan-local pass.",
 )
 def winnow_shared_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return winnow_top_fingerprints(
+        load_table(spark, sf_dir, "documents"),
+        lambda gram: F.conv(F.substring(F.md5(gram), 1, 8), 16, 10).cast("long"),
+    )
+
+
+def winnow_top_fingerprints(docs: DataFrame, gram_hash) -> DataFrame:
+    """Winnowing body shared by the md5 and xxhash64 fingerprint
+    queries: the 20 fingerprints shared by the most documents, where
+    ``gram_hash`` maps a space-joined token k-gram to a long."""
     from healthcare_aihw_etl_pipeline_spark.functions.scalar import bind
     from healthcare_aihw_etl_pipeline_spark.operators.search import tokens
 
-    docs = load_table(spark, sf_dir, "documents")
-
     def _kgram_hashes(t):
         def _h(i):
-            gram = F.concat_ws(
-                " ",
-                F.element_at(t, i + F.lit(1)),
-                F.element_at(t, i + F.lit(2)),
-                F.element_at(t, i + F.lit(3)),
-            )
-            return F.conv(F.substring(F.md5(gram), 1, 8), 16, 10).cast(
-                "long"
+            return gram_hash(
+                F.concat_ws(
+                    " ", *[F.element_at(t, i + F.lit(j + 1)) for j in range(_WIN_K)]
+                )
             )
 
         return F.transform(
@@ -450,7 +454,7 @@ def winnow_shared_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Round-robin the docs across the full core count before the heavy
     # row-local pass: small-SF document files scan as 1-2 splits, which
-    # would serialize the md5 k-gram work on 2 of 32 cores (the
+    # would serialize the k-gram hashing on 2 of 32 cores (the
     # inverted-index lesson — same fix). ~100-byte rows, so the one-off
     # exchange is noise next to the hashing it parallelizes; on a real
     # cluster the scan already arrives well-split and this is a no-op

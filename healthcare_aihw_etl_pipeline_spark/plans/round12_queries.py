@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from healthcare_aihw_etl_pipeline_spark.operators.gates import at_most, collect_at_most
 from healthcare_aihw_etl_pipeline_spark.operators.privacy import sql_band_of
 from healthcare_aihw_etl_pipeline_spark.plans.registry import register
+from healthcare_aihw_etl_pipeline_spark.plans.round11b_queries import winnow_top_fingerprints
 from healthcare_aihw_etl_pipeline_spark.sources.catalog import load_table
 
 
@@ -610,10 +611,6 @@ def _bpe_train(spark: SparkSession, sf_dir: str) -> list[tuple]:
 # ---------------------------------------------------------------------------
 # Winnowing xxhash64 fast path (production twin of the md5 portable form)
 
-_WIN_K = 3  # token k-gram size — must match winnow_shared_fingerprints
-_WIN_W = 4  # winnowing window in k-grams
-
-
 @register(
     "winnow_shared_fingerprints_fast",
     # No oracle: DuckDB has no xxhash64. The md5 twin
@@ -641,74 +638,8 @@ _WIN_W = 4  # winnowing window in k-grams
 def winnow_shared_fingerprints_fast(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from healthcare_aihw_etl_pipeline_spark.functions.scalar import bind
-    from healthcare_aihw_etl_pipeline_spark.operators.search import tokens
-
-    docs = load_table(spark, sf_dir, "documents")
-
-    def _kgram_hashes(t):
-        def _h(i):
-            return F.xxhash64(
-                F.concat_ws(
-                    " ",
-                    F.element_at(t, i + F.lit(1)),
-                    F.element_at(t, i + F.lit(2)),
-                    F.element_at(t, i + F.lit(3)),
-                )
-            )
-
-        return F.transform(
-            F.sequence(F.lit(0), F.size(t) - F.lit(_WIN_K)), _h
-        )
-
-    def _window_minima(h):
-        # least(element_at x w): zero per-window allocation (the
-        # measured 12.3 s -> 5.1 s rework from the md5 twin).
-        return F.transform(
-            F.sequence(F.lit(0), F.size(h) - F.lit(_WIN_W)),
-            lambda s: F.least(
-                *[
-                    F.element_at(h, s + F.lit(j + 1))
-                    for j in range(_WIN_W)
-                ]
-            ),
-        )
-
-    nparts = max(
-        docs.sparkSession.sparkContext.defaultParallelism,
-        docs.rdd.getNumPartitions(),
-    )
-    fp = (
-        docs.repartition(nparts)
-        .where(F.trim(F.col("text")) != "")
-        .where(F.size(tokens("text")) >= _WIN_K + _WIN_W - 1)
-        .select(
-            "doc_id",
-            F.explode(
-                bind(bind(tokens("text"), _kgram_hashes), _window_minima)
-            ).alias("f"),
-        )
-    )
-    perdoc = fp.groupBy("doc_id", "f").agg(F.count(F.lit(1)).alias("c"))
-    return (
-        perdoc.groupBy("f")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("c").alias("n_occurrences"),
-            F.min("doc_id").alias("first_doc"),
-        )
-        .select(
-            F.col("f").alias("fingerprint"),
-            "n_docs",
-            "n_occurrences",
-            "first_doc",
-        )
-        .orderBy(
-            F.col("n_docs").desc(),
-            F.col("n_occurrences").desc(),
-            F.col("fingerprint").asc(),
-        )
-        .limit(20)
+    return winnow_top_fingerprints(
+        load_table(spark, sf_dir, "documents"), F.xxhash64
     )
 
 

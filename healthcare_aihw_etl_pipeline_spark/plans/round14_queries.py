@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from healthcare_aihw_etl_pipeline_spark.operators.gates import at_most
+from healthcare_aihw_etl_pipeline_spark.plans.llm_queries import top_dup_clusters
 from healthcare_aihw_etl_pipeline_spark.plans.registry import register
 from healthcare_aihw_etl_pipeline_spark.plans.round13_queries import (
     _KNN_K,
@@ -491,11 +492,12 @@ def asof_purchase_lag_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     "DISTINCT signatures (Hamming<=3 pigeonhole preserved, 2^30 "
     "bucket space per band), in-bucket representative pairs VERIFIED "
     "by exact Hamming distance (<=8) over the full signature before "
-    "clustering. This is the scale answer the PLANTED_TRUTH_r14 "
-    "measurement demanded: the 60-bit form's 15-bit bands saturate "
-    "past ~1M docs (pair precision ~0 against 10M noise docs), while "
-    "wide bands + the candidate->verify discipline (the same shape as "
-    "the composed semantic-dedup pipeline's cosine stage) hold "
+    "clustering. This is the scale answer to the 60-bit form's "
+    "15-bit bands, which saturate past ~1M docs (pair precision ~0 "
+    "against 10M noise docs in the pairs rung of "
+    "scripts/planted_truth.py), while wide bands + the "
+    "candidate->verify discipline (the same shape as the composed "
+    "semantic-dedup pipeline's cosine stage) hold "
     "precision 1.0 at the same scale; recall is guaranteed for "
     "Hamming<=3 and measured on the planted near-identical corpus "
     "above that. The verify is two XOR+bit_count integer expressions "
@@ -510,14 +512,4 @@ def simhash_wide_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     dup = simhash_wide_dedup(docs, "text", "doc_id")
-    return (
-        dup.groupBy(F.col("dup_of").alias("cluster_rep"))
-        .agg(
-            F.count(F.lit(1)).alias("n_members"),
-            F.sum(
-                (F.col("doc_id") != F.col("dup_of")).cast("long")
-            ).alias("n_duplicates"),
-        )
-        .orderBy(F.col("n_members").desc(), "cluster_rep")
-        .limit(20)
-    )
+    return top_dup_clusters(dup)

@@ -14,15 +14,16 @@
   materializes once at ingest and every audit reads ~1.5k rows.
 
 - minhash_verified_dup_clusters(+_portable): the candidate->VERIFY
-  discipline (proved by the wide-SimHash round: precision 1.0 at 10M
-  docs) applied to MinHash dedup. PLANTED_TRUTH_r14 measured the
-  unverified banding's pair precision collapsing 0.96 -> 0.12 ->
-  0.0014 as noise grows 1k -> 1M -> 10M docs (recall 1.0): banding
-  candidates are a superset of true near-dups, and at web scale the
-  superset is almost all noise. Here candidates from LSH banding are
-  VERIFIED by exact n-gram Jaccard (set intersection over the SAME
-  shingle relation that fed the signatures) before clustering, so
-  dup_of links only pairs actually >= the Jaccard threshold.
+  discipline (wide SimHash holds pair precision 1.0 at 10M docs)
+  applied to MinHash dedup. The `pairs` rung of
+  scripts/planted_truth.py measures the unverified banding's pair
+  precision collapsing 0.96 -> 0.12 -> 0.0014 as noise grows 1k -> 1M
+  -> 10M docs (recall 1.0): banding candidates are a superset of true
+  near-dups, and at web scale the superset is almost all noise. Here
+  candidates from LSH banding are VERIFIED by exact n-gram Jaccard
+  (set intersection over the SAME shingle relation that fed the
+  signatures) before clustering, so dup_of links only pairs actually
+  >= the Jaccard threshold.
 
 Reference lineage: the reference app re-derives its analytic frames
 from the cleaned table on every render (/root/reference/main.py:158,
@@ -38,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from healthcare_aihw_etl_pipeline_spark.plans.llm_queries import top_dup_clusters
 from healthcare_aihw_etl_pipeline_spark.plans.registry import (
     REGISTRY as _REG,
 )
@@ -170,14 +172,14 @@ _MV_NUM, _MV_DEN = 7, 10
     oracle=None,  # xxhash64 family: planted-rung + property-tested
     doc="VERIFIED MinHash+LSH near-dup clusters (32 hashes, 8 bands, "
     "5-token shingles, exact-Jaccard verify at 0.7): the candidate→"
-    "VERIFY discipline applied to the MinHash family after "
-    "PLANTED_TRUTH_r14 measured the unverified banding's pair "
-    "precision collapsing to 0.0014 against 10M noise docs (recall "
-    "1.0). Byte-identical docs collapse to min-id reps first (the hub "
-    "aggregate), candidate rep pairs come from shared LSH buckets, "
-    "and dup_of links ONLY pairs whose exact int64-gram Jaccard "
-    "clears the threshold — measured precision 1.0 on the planted "
-    "corpus at every noise scale (PLANTED_TRUTH_r15) with recall "
+    "VERIFY discipline applied to the MinHash family, whose "
+    "unverified banding's pair precision collapses to 0.0014 against "
+    "10M noise docs (recall 1.0; the pairs rung of "
+    "scripts/planted_truth.py). Byte-identical docs collapse to "
+    "min-id reps first (the hub aggregate), candidate rep pairs come "
+    "from shared LSH buckets, and dup_of links ONLY pairs whose exact "
+    "int64-gram Jaccard clears the threshold — measured precision 1.0 "
+    "on the planted corpus at 1k, 1M and 10M noise docs with recall "
     "equal to the unverified form's. Top-20 clusters under a total "
     "order. Scale shape: one row-local signature scan + slim "
     "checkpoint, bucket pairing quadratic only in DISTINCT in-bucket "
@@ -201,17 +203,7 @@ def minhash_verified_dup_clusters(
         threshold_num=_MV_NUM,
         threshold_den=_MV_DEN,
     )
-    return (
-        dup.groupBy(F.col("dup_of").alias("cluster_rep"))
-        .agg(
-            F.count(F.lit(1)).alias("n_members"),
-            F.sum(
-                (F.col("doc_id") != F.col("dup_of")).cast("long")
-            ).alias("n_duplicates"),
-        )
-        .orderBy(F.col("n_members").desc(), "cluster_rep")
-        .limit(20)
-    )
+    return top_dup_clusters(dup)
 
 
 @register(
@@ -315,14 +307,4 @@ def minhash_verified_dup_clusters_portable(
         threshold_num=_MV_NUM,
         threshold_den=_MV_DEN,
     )
-    return (
-        dup.groupBy(F.col("dup_of").alias("cluster_rep"))
-        .agg(
-            F.count(F.lit(1)).alias("n_members"),
-            F.sum(
-                (F.col("doc_id") != F.col("dup_of")).cast("long")
-            ).alias("n_duplicates"),
-        )
-        .orderBy(F.col("n_members").desc(), "cluster_rep")
-        .limit(20)
-    )
+    return top_dup_clusters(dup)

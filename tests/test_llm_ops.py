@@ -705,14 +705,86 @@ def test_minhash_ragged_banding_rejected(spark, planted):
     from healthcare_aihw_etl_pipeline_spark.operators.dedup import (
         minhash_dedup,
         minhash_dedup_portable,
+        minhash_dedup_verified,
+        minhash_dedup_verified_portable,
     )
 
-    with pytest.raises(ValueError, match="divisible"):
-        minhash_dedup_portable(
-            planted, "text", "doc_id", num_hashes=10, bands=4
-        )
-    with pytest.raises(ValueError, match="divisible"):
-        minhash_dedup(planted, "text", "doc_id", num_hashes=30, bands=8)
+    for op, num_hashes, bands in (
+        (minhash_dedup_portable, 10, 4),
+        (minhash_dedup, 30, 8),
+        (minhash_dedup_verified_portable, 10, 4),
+        (minhash_dedup_verified, 30, 8),
+    ):
+        with pytest.raises(ValueError, match="divisible"):
+            op(planted, "text", "doc_id", num_hashes=num_hashes, bands=bands)
+
+
+def _plan_shape(df) -> tuple[int, int, int, int]:
+    """(shuffle Exchange, BroadcastExchange, SortMergeJoin,
+    BroadcastHashJoin) node counts of the planned physical plan."""
+    import re
+    from collections import Counter
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    nodes = Counter(
+        re.match(r"[\s+\-:|]*(?:\*\(\d+\) )?(\w+)", line).group(1)
+        for line in plan.splitlines()
+        if line.strip()
+    )
+    return tuple(
+        nodes[k]
+        for k in ("Exchange", "BroadcastExchange", "SortMergeJoin", "BroadcastHashJoin")
+    )
+
+
+@pytest.mark.parametrize(
+    "fast,portable,shape",
+    [
+        ("minhash_dedup", "minhash_dedup_portable", (2, 1, 0, 1)),
+        ("simhash_dedup", "simhash_dedup_portable", (2, 1, 0, 1)),
+        ("minhash_dedup_verified", "minhash_dedup_verified_portable", (18, 5, 5, 5)),
+    ],
+)
+def test_dedup_twins_plan_same_shape(spark, sf_dir, fast, portable, shape):
+    """Each xxhash64 operator and its md5 twin share their banding,
+    bucket-min and verify code, so over the same documents they plan
+    the same exchanges and joins."""
+    from healthcare_aihw_etl_pipeline_spark.operators import dedup
+    from healthcare_aihw_etl_pipeline_spark.sources.catalog import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    assert _plan_shape(getattr(dedup, fast)(docs, "text", "doc_id")) == shape
+    assert _plan_shape(getattr(dedup, portable)(docs, "text", "doc_id")) == shape
+
+
+def test_rep_sig_source_gate_sides_agree(spark, monkeypatch):
+    """The portable verified dedup signs only the exact-hash reps
+    (broadcast semi-join) when at least half the docs are exact
+    duplicates; forcing the all-docs side by a zero ceiling gives the
+    same (doc_id, dup_of) rows."""
+    from healthcare_aihw_etl_pipeline_spark.operators import dedup
+
+    texts = [BASE, BASE, NEAR, FAR]
+    docs = spark.createDataFrame(
+        [(i, texts[i % 4]) for i in range(12)], ["doc_id", "text"]
+    )
+    taken = []
+
+    def spy(*args):
+        src = real(*args)
+        taken.append(src._jdf.queryExecution().optimizedPlan().toString())
+        return src
+
+    real = dedup._rep_sig_source
+    monkeypatch.setattr(dedup, "_rep_sig_source", spy)
+    semi = sorted(dedup.minhash_dedup_verified_portable(docs, "text", "doc_id").collect())
+    monkeypatch.setattr(dedup, "_REP_SEMIJOIN_MAX_REPS", 0)
+    all_docs = sorted(dedup.minhash_dedup_verified_portable(docs, "text", "doc_id").collect())
+    assert "LeftSemi" in taken[0]
+    assert "LeftSemi" not in taken[1]
+    assert semi == all_docs
+    dup = {r.doc_id: r.dup_of for r in semi}
+    assert dup[5] == 0 and dup[7] == 3  # BASE and FAR copies
 
 
 def test_simhash_portable_catches_near_dup_and_replays(spark, planted, duck, sf_dir):

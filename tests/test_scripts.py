@@ -152,16 +152,27 @@ def _is_table_rows(node: ast.AST) -> bool:
     )
 
 
+def _is_size_read(node: ast.AST) -> bool:
+    """A ``table_rows(...)`` footer read or a DataFrame ``.count()``."""
+    return _is_table_rows(node) or (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "count"
+        and not node.args
+    )
+
+
 def _hand_rolled_gates(tree: ast.AST):
     """Lines holding a size gate written out by hand: a ``.limit(<expr>
-    + 1)`` probe, or an order comparison of a ``table_rows(...)``
-    result (called inline or bound to a name in the same function)."""
+    + 1)`` probe, or an order comparison involving a ``table_rows(...)``
+    or ``.count()`` result (called inline or bound to a name in the
+    same function)."""
     scopes = [tree, *(n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef))]
     for scope in scopes:
-        footer = {
+        sizes = {
             t.id
             for n in ast.walk(scope)
-            if isinstance(n, ast.Assign) and _is_table_rows(n.value)
+            if isinstance(n, ast.Assign) and _is_size_read(n.value)
             for t in n.targets
             if isinstance(t, ast.Name)
         }
@@ -179,10 +190,10 @@ def _hand_rolled_gates(tree: ast.AST):
             elif isinstance(n, ast.Compare) and any(
                 isinstance(op, (ast.Lt, ast.LtE, ast.Gt, ast.GtE)) for op in n.ops
             ):
-                operands = [n.left, *n.comparators]
                 if any(
-                    _is_table_rows(o) or (isinstance(o, ast.Name) and o.id in footer)
-                    for o in operands
+                    _is_size_read(x) or (isinstance(x, ast.Name) and x.id in sizes)
+                    for o in [n.left, *n.comparators]
+                    for x in ast.walk(o)
                 ):
                     yield n.lineno
 
@@ -192,7 +203,7 @@ def test_size_gates_go_through_gates_module():
     ``operators/gates.py`` (``at_most`` / ``collect_at_most``), so the
     ceilings stay listable from one place: no other package module
     writes its own ``limit(C + 1)`` probe or compares a footer row
-    count with a ceiling."""
+    count or a ``.count()`` result with a ceiling."""
     gates = PACKAGE / "operators" / "gates.py"
     hits = sorted(
         f"{path.relative_to(ROOT)}:{line}"
